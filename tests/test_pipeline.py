@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import urllib.parse
+from datetime import datetime, timezone
 
 import pytest
 
@@ -174,3 +175,125 @@ def test_two_phase_etl(spark, tmp_path):
     assert stats.events == 12
     y = sinks.read_partitioned_table(spark, yearly).collect()
     assert len(y) == 1 and y[0].tsunami_yearly_count == 4  # i % 3 == 0 of 12
+
+
+def test_run_etl_window_of_only_invalid_features(spark, tmp_path):
+    """A year whose only non-empty month serves id-less features: the
+    page is fetched and counted, nothing lands, and silver is skipped
+    instead of reading a bronze table that was never created."""
+    import os
+
+    feats = [_feature(i) for i in range(3)]
+    for f in feats:
+        del f["id"]
+    api = FakeApi({"2021-03-01": feats})
+    bronze = str(tmp_path / "bronze")
+    stats = pipeline.run_etl(
+        spark, 2021, 2021, bronze, str(tmp_path / "yearly"),
+        str(tmp_path / "monthly"), api_url="http://x", limit=100, http_get=api,
+    )
+    assert stats.events == 3
+    assert stats.window_metrics == []
+    assert not os.path.exists(bronze)
+
+
+JAN_2020_MS = 1577836800000  # 2020-01-01T00:00:00Z
+DAY_MS = 86_400_000
+
+
+class TimeRangeApi:
+    """Serves the features whose time lies in [starttime, endtime), so
+    a month and its week windows see consistent slices; ``fail`` picks
+    the (starttime, endtime, offset) requests that answer 503."""
+
+    def __init__(self, features, fail=lambda start, end, offset: False):
+        self.features = features
+        self.fail = fail
+
+    def __call__(self, url):
+        q = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
+        start, end = q["starttime"][0], q["endtime"][0]
+        offset, limit = int(q["offset"][0]), int(q["limit"][0])
+        if self.fail(start, end, offset):
+            return 503, ""
+
+        def ms(day):
+            return datetime.fromisoformat(day).replace(tzinfo=timezone.utc).timestamp() * 1000
+
+        lo, hi = ms(start), ms(end)
+        hits = [f for f in self.features if lo <= f["properties"]["time"] < hi]
+        return 200, _page(hits[offset - 1 : offset - 1 + limit])
+
+
+def _january_features(n: int):
+    # one event per day of January 2020, at noon: every week window of
+    # the month holds fewer than 10 of them
+    return [_feature(i, ts_ms=JAN_2020_MS + (i % 31) * DAY_MS + DAY_MS // 2) for i in range(n)]
+
+
+def test_window_is_atomic_on_mid_window_failure(spark, tmp_path):
+    """The month's second page answers 503: nothing reaches bronze and
+    ``stats`` is untouched; the week fallback then lands every event
+    exactly once."""
+    import os
+
+    feats = _january_features(25)
+    month = ("2020-01-01", "2020-02-01")
+    api = TimeRangeApi(feats, fail=lambda s, e, o: (s, e) == month and o > 1)
+    bronze = str(tmp_path / "bronze")
+    stats = pipeline.IngestStats()
+    with pytest.raises(FetchError):
+        pipeline.ingest_window_paged(
+            spark, "http://x", *month, bronze, limit=10, http_get=api, stats=stats,
+        )
+    assert not os.path.exists(bronze)
+    assert stats == pipeline.IngestStats()
+
+    stats = pipeline.ingest_range(
+        spark, 2020, 2020, bronze, api_url="http://x", limit=10, http_get=api
+    )
+    assert stats.failed_windows == []
+    assert stats.events == 25
+    landed = sinks.read_partitioned_table(spark, bronze)
+    assert landed.count() == 25
+    assert landed.select("id").distinct().count() == 25
+
+
+def _window_jobs(spark, tmp_path, name, n_events):
+    """Spark jobs one ``ingest_window_paged`` call launches (limit 10),
+    asserting between every page fetch that no staging sibling of the
+    bronze path exists."""
+    bronze = tmp_path / name
+    inner = TimeRangeApi(_january_features(n_events))
+
+    def no_staging():
+        assert not [p.name for p in tmp_path.iterdir() if "__staging_" in p.name]
+
+    def api(url):
+        no_staging()
+        return inner(url)
+
+    sc = spark.sparkContext
+    group = f"budget_{name}"
+    sc.setJobGroup(group, group)
+    try:
+        pipeline.ingest_window_paged(
+            spark, "http://x", "2020-01-01", "2020-02-01", str(bronze),
+            limit=10, http_get=api,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    no_staging()
+    assert sinks.read_partitioned_table(spark, str(bronze)).count() == n_events
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_window_job_budget_independent_of_page_count(spark, tmp_path):
+    """One write per window: a 3-page window launches exactly as many
+    Spark jobs as a 1-page window."""
+    one_page = _window_jobs(spark, tmp_path, "one_page", 5)
+    three_pages = _window_jobs(spark, tmp_path, "three_pages", 25)
+    assert one_page > 0
+    assert three_pages == one_page

@@ -7,7 +7,8 @@ Mirrors /root/reference/usgs-earthquake-data-ingestion-prod.py:295-455
 status classification 439-445, two-phase main 568-575) as plain
 driver-side Python — orchestration never belongs inside the engine.
 The fetch transport is injectable end-to-end so tests drive the whole
-pipeline from local fixtures.
+pipeline from local fixtures. Each window is atomic: all of its pages
+are fetched first, then the window lands in bronze with one write.
 
 Fixed vs the reference: its ``if ETLIngestion:`` truthiness bug
 (silver unconditionally ran on the function object, :568-575) — here
@@ -16,6 +17,7 @@ the silver phase runs only after ingest actually completes.
 
 from __future__ import annotations
 
+import json
 import logging
 from dataclasses import dataclass, field
 from datetime import date, timedelta
@@ -99,13 +101,15 @@ def ingest_window_paged(
     an empty page or a short page (reference
     usgs-earthquake-data-ingestion-prod.py:392-437).
 
-    The window is ATOMIC with respect to bronze: pages land in a
-    per-window staging directory (O(1 page) driver memory — never the
-    whole window in RAM), and only a fully fetched window is moved
-    into bronze; a mid-window failure leaves bronze and ``stats``
-    untouched, so the week-granularity retry (C2) can re-fetch the
-    month without duplicating the pages the failed attempt already
-    saw.
+    The window is ATOMIC with respect to bronze: every page is fetched
+    on the driver first, and only then is the whole window flattened
+    and landed with ONE write. A mid-window fetch failure therefore
+    leaves bronze and ``stats`` untouched, so the week-granularity
+    retry (C2) can re-fetch the month without duplicating the pages
+    the failed attempt already saw; a failed write is covered by the
+    sink's commit protocol. The price is driver memory: the driver
+    holds one window's page bodies (at most pages x ``limit``
+    features) until the landing, rather than one page.
 
     ``idempotent=True`` lands the window with a partition-level upsert
     instead of an append: re-running the same window replaces its
@@ -113,55 +117,38 @@ def ingest_window_paged(
     for the reference's append-forever semantics (and its per-chunk
     S3 overwrite bug, SURVEY §3.1 step 8).
     """
-    import json
-
     stats = stats if stats is not None else IngestStats()
-    staging = f"{bronze_path.rstrip('/')}__staging_{start_time}"
     offset = 1  # FDSN offsets are 1-based
-    pages = 0
+    docs: list[str] = []
     total = 0
-    try:
-        while True:
-            doc = fetch_earthquake_data_limit_offset(
-                api_url, start_time, end_time, limit, offset, http_get
+    while True:
+        doc = fetch_earthquake_data_limit_offset(
+            api_url, start_time, end_time, limit, offset, http_get
+        )
+        features = doc.get("features") or []
+        if not features:  # F4: empty page ends pagination
+            break
+        docs.append(json.dumps(doc))
+        total += len(features)
+        if len(features) < limit:  # short page: final one
+            break
+        offset += limit
+    if docs:
+        events = events_from_geojson_strings(spark, docs)
+        # quality counters ride the landing job — no second scan
+        obs = Observation(f"window_{start_time}")
+        kwargs = dict(observation=obs, metrics=quality_metrics())
+        if idempotent:
+            written = upsert_partitions(events, bronze_path, **kwargs)
+        else:
+            written = save_partitioned_table(
+                events, bronze_path, mode="append", **kwargs
             )
-            features = doc.get("features") or []
-            if not features:  # F4: empty page ends pagination
-                break
-            events = events_from_geojson_strings(spark, [json.dumps(doc)])
-            save_partitioned_table(events, staging, mode="append")
-            pages += 1
-            total += len(features)
-            if len(features) < limit:  # short page: final one
-                break
-            offset += limit
-        if pages:
-            window_events = read_partitioned_table(spark, staging)
-            # quality counters ride the landing job — no second scan
-            obs = Observation(f"window_{start_time}")
-            kwargs = dict(observation=obs, metrics=quality_metrics())
-            if idempotent:
-                written = upsert_partitions(window_events, bronze_path, **kwargs)
-            else:
-                written = save_partitioned_table(
-                    window_events, bronze_path, mode="append", **kwargs
-                )
-            if written:
-                stats.window_metrics.append(obs.get)
-        stats.pages += pages
-        stats.events += total
-        return total
-    finally:
-        _delete_path(spark, staging)
-
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    """Recursive delete via the Hadoop FS API (local/hdfs/s3a alike);
-    silently succeeds when the path doesn't exist."""
-    jvm = spark.sparkContext._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(hadoop_path, True)
+        if written:
+            stats.window_metrics.append(obs.get)
+    stats.pages += len(docs)
+    stats.events += total
+    return total
 
 
 def ingest_range(
@@ -215,12 +202,14 @@ def run_etl(
     http_get: HttpGet | None = None,
 ) -> IngestStats:
     """C5: two-phase main — ingest, then silver (which actually runs
-    after ingest, unlike the reference's truthiness-bugged guard)."""
+    after ingest, unlike the reference's truthiness-bugged guard).
+    Silver runs only once a window has landed: fetched pages whose
+    features are all invalid never create the bronze table."""
     stats = ingest_range(
         spark, start_year, end_year, bronze_path,
         api_url=api_url, limit=limit, http_get=http_get,
     )
-    if stats.pages > 0:
+    if stats.window_metrics:
         events = read_partitioned_table(spark, bronze_path)
         build_silver_layer(events, yearly_path, monthly_path)
     return stats
