@@ -2,9 +2,13 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
-Each query is forced with a cheap count() action (results are small
-aggregates / top-k; s6_projection is count-forced to avoid collecting
-600k rows through the driver).
+Each query is forced with ``df.write.format("noop")``, a built-in
+sink that computes every column of the full result and collects
+nothing. A ``count()`` would let Catalyst prune every column the count
+does not need (q1's decimal sums, text_token_stats' tokenizing), so
+count-forced medians time a different, smaller plan; the line carries
+``"force": "noop"`` and ``--gate`` refuses a prior forced any other
+way.
 
 Noise protocol: every headliner gets FIVE timed runs after a
 warm-up pass; the headline number per query is the MEDIAN (robust
@@ -75,6 +79,11 @@ def _spread(s: list[float]) -> float:
     return round(max(core) - min(core), 4)
 
 
+def _force(df) -> None:
+    """Compute the full result and keep none of it (module docstring)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def run_bench(
     sf_dir: str, only: set[str] | None = None, runs: int | None = None
 ) -> dict:
@@ -93,7 +102,7 @@ def run_bench(
     # so steady-state execution is what gets timed
     spark.range(1000).count()
     for entry in headline:
-        entry.spark_fn(spark, sf_dir).count()
+        _force(entry.spark_fn(spark, sf_dir))
 
     base_runs = RUNS if runs is None else runs
     samples: dict[str, list[float]] = {e.name: [] for e in headline}
@@ -104,7 +113,7 @@ def run_bench(
                 continue
             df = entry.spark_fn(spark, sf_dir)
             t0 = time.perf_counter()
-            df.count()
+            _force(df)
             samples[entry.name].append(time.perf_counter() - t0)
 
     timings = {q: round(statistics.median(s), 4) for q, s in samples.items()}
@@ -125,6 +134,7 @@ def run_bench(
         "spread": spread,
         "runs": base_runs,
         "aggregation": "median",
+        "force": "noop",
         "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
         # Box-load evidence (round-10 verdict item 5): recordings on a
         # shared box run up to 1.2x an exclusive run of identical code;
@@ -246,7 +256,9 @@ def resolve_prior(raw: dict, gate_path: str) -> dict:
     per-query timings — e.g. a recording whose line overflowed the
     driver's 2000-char tail (BENCH_r09's parsed: null) — because
     gating against it would pass vacuously with 0 shared headliners,
-    exactly the failure mode --gate exists to prevent."""
+    exactly the failure mode --gate exists to prevent. Also refuse a
+    prior not forced with the noop sink: a count()-forced median timed
+    a pruned plan, so comparing against it says nothing."""
     parsed = raw.get("parsed")
     prior = parsed if isinstance(parsed, dict) else raw
     if not isinstance(prior.get("queries"), dict):
@@ -254,6 +266,14 @@ def resolve_prior(raw: dict, gate_path: str) -> dict:
             f"GATE ERROR: {gate_path} carries no per-query timings "
             "(parsed: null?); gate against the newest recording "
             "that has them",
+            file=sys.stderr,
+        )
+        raise SystemExit(2)
+    if prior.get("force") != "noop":
+        print(
+            f"GATE ERROR: {gate_path} was not forced with the noop sink "
+            f"(force: {prior.get('force')!r}); its medians time count()-"
+            "pruned plans — record a noop-forced prior first",
             file=sys.stderr,
         )
         raise SystemExit(2)

@@ -4,9 +4,10 @@ real-regression convention). Pure functions — no Spark session."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import _spread, gate  # noqa: E402
 
@@ -100,7 +101,7 @@ def test_resolve_prior_unwraps_and_refuses_null_parsed():
 
     from bench import resolve_prior
 
-    line = {"queries": {"q": 1.0}, "spread": {"q": 0.1}}
+    line = {"queries": {"q": 1.0}, "spread": {"q": 0.1}, "force": "noop"}
     # driver-recorded wrapper
     assert resolve_prior({"parsed": line, "tail": "..."}, "f")["queries"] == {
         "q": 1.0
@@ -112,6 +113,25 @@ def test_resolve_prior_unwraps_and_refuses_null_parsed():
     with pytest.raises(SystemExit) as exc:
         resolve_prior({"parsed": None, "tail": "trunc"}, "f")
     assert exc.value.code == 2
+
+
+def test_resolve_prior_refuses_prior_not_noop_forced():
+    """A count()-forced prior (every BENCH_r01-r14 recording) timed
+    Catalyst-pruned plans: gating a noop-forced run against it would
+    compare different work, so --gate refuses it outright."""
+    import pytest
+
+    from bench import resolve_prior
+
+    timings = {"queries": {"q": 1.0}, "spread": {"q": 0.1}}
+    for prior in (
+        timings,                                   # no force field
+        {**timings, "force": "count"},             # forced another way
+        {"parsed": timings, "tail": "..."},        # driver-recorded
+    ):
+        with pytest.raises(SystemExit) as exc:
+            resolve_prior(prior, "f")
+        assert exc.value.code == 2
 
 
 def test_bench_line_fits_driver_tail():
@@ -132,6 +152,7 @@ def test_bench_line_fits_driver_tail():
         "spread": {n: 0.123 for n in names},
         "runs": 5,
         "aggregation": "median",
+        "force": "noop",
         "sf": 0.1,
         "load": [32.12, 32.12],
     }

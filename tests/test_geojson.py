@@ -133,3 +133,23 @@ def test_multiple_documents_concat(spark):
         spark, [_doc([FULL_FEATURE]), _doc([NO_DEPTH_FEATURE]), _doc([])]
     )
     assert df.count() == 2
+
+
+def test_driver_pages_reach_the_jvm_as_arrow(spark):
+    """The page bodies are handed over as an Arrow table, decoded
+    JVM-side: the leaf is a LocalTableScan, not a scan of pickled
+    Python rows (ExistingRDD), so no Python worker feeds the landing."""
+    df = events_from_geojson_strings(spark, [_doc([FULL_FEATURE, NO_DEPTH_FEATURE])])
+    assert df.count() == 2
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_no_documents_yields_empty_canonical_frame(spark):
+    df = events_from_geojson_strings(spark, [])
+    assert df.columns == EVENT_COLUMNS
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in USGS_EVENTS_SCHEMA.fields
+    ]
+    assert df.count() == 0

@@ -897,3 +897,26 @@ def test_two_phase_components_equals_label_propagation(spark, sf_dir):
         for r in D.two_phase_components(multi).collect()
     }
     assert got == {5: 5, 9: 5, 7: 5, 20: 20, 30: 20, 21: 20}
+
+
+def test_clusters_refine_gate_fails_on_unlabeled_endpoint(spark):
+    """dedup_resolve_clusters_lsh's refinement boolean has teeth on
+    both failure shapes: an edge across two exact clusters, and an
+    edge whose endpoint has no exact label at all (an inner join would
+    drop that edge and pass)."""
+    from usgs_earthquake_data_pipeline_spark.plans.llm_ops import (
+        _clusters_refine_exact_ok,
+    )
+
+    exact = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 3), (4, 3)], "id long, canonical_id long"
+    )
+
+    def ok(edges):
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        return _clusters_refine_exact_ok(df, exact).first()[0]
+
+    assert ok([(1, 2), (3, 4)]) is True
+    assert ok([(1, 2), (2, 3)]) is False  # merges two exact clusters
+    assert ok([(1, 2), (3, 9)]) is False  # 9 has no exact label
+    assert ok([(9, 1)]) is False

@@ -11,16 +11,21 @@ Every multiply-consumed frame in the operators/entries is pinned via
   dir and truncates lineage like ``local``;
 - results are identical across modes (the knob changes fault
   tolerance, never values);
-- an unknown mode fails loudly, never silently degrades.
+- an unknown mode fails loudly, never silently degrades;
+- a requested checkpoint dir the context cannot adopt is logged.
 """
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
+from usgs_earthquake_data_pipeline_spark import materialize as materialize_module
 from usgs_earthquake_data_pipeline_spark.materialize import (
     CONF_KEY,
+    DIR_CONF_KEY,
     materialize,
     materialize_mode,
 )
@@ -104,3 +109,32 @@ def test_unknown_mode_fails_loudly(mode_conf):
     spark.conf.set(CONF_KEY, "everywhere")
     with pytest.raises(ValueError, match="everywhere"):
         materialize(_df(spark))
+
+
+def test_reliable_warns_when_requested_dir_is_not_the_contexts(
+    mode_conf, tmp_path, caplog
+):
+    """The checkpoint dir is once per SparkContext: a different
+    requested dir cannot take effect, and that must be logged with
+    both dirs rather than ignored silently."""
+    spark = mode_conf
+    spark.conf.set(CONF_KEY, "reliable")
+    try:
+        spark.conf.set(DIR_CONF_KEY, str(tmp_path / "first"))
+        materialize(_df(spark), eager=True)  # pins the context's dir
+        current = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+        other = str(tmp_path / "elsewhere")
+        spark.conf.set(DIR_CONF_KEY, other)
+        with caplog.at_level(logging.WARNING, logger=materialize_module.__name__):
+            assert materialize(_df(spark), eager=True).count() == 100
+        warned = [r.getMessage() for r in caplog.records]
+        assert any(other in m and current in m for m in warned), warned
+
+        # requesting the dir the context already uses is silent
+        caplog.clear()
+        spark.conf.set(DIR_CONF_KEY, current.rsplit("/", 1)[0])
+        with caplog.at_level(logging.WARNING, logger=materialize_module.__name__):
+            materialize(_df(spark), eager=True)
+        assert not caplog.records
+    finally:
+        spark.conf.unset(DIR_CONF_KEY)

@@ -119,6 +119,74 @@ def test_silver_layer_roundtrip(spark, events, tmp_path):
     assert back_m.count() == monthly.count()
 
 
+def _fact_rows(df):
+    """Order-insensitive row set, by column name (a read-back puts the
+    partition columns last)."""
+    return {tuple(sorted(r.asDict().items())) for r in df.collect()}
+
+
+def test_silver_layer_equals_a3_a4_with_null_keys(spark, tmp_path):
+    """The one-pass silver (monthly aggregate, yearly folded from it on
+    the driver) writes exactly the A3/A4 facts, a null (year, month)
+    group included."""
+    events = spark.createDataFrame(
+        [
+            (2020, 1, 1), (2020, 1, 1), (2020, 2, 1), (2020, 2, 0),
+            (2021, 12, 1), (None, None, 1), (None, None, 1), (2022, None, 1),
+            (None, 3, 1), (2023, 5, 0),
+        ],
+        "year int, month int, tsunami int",
+    )
+    yearly_path = str(tmp_path / "fact_yearly")
+    monthly_path = str(tmp_path / "fact_monthly")
+    silver.build_silver_layer(events, yearly_path, monthly_path)
+    yearly = sinks.read_partitioned_table(spark, yearly_path)
+    monthly = sinks.read_partitioned_table(spark, monthly_path)
+    expected_y = _fact_rows(silver.fact_tsunami_yearly(events))
+    expected_m = _fact_rows(silver.fact_tsunami_monthly(events))
+    assert (None, 3) in {(r.year, r.tsunami_yearly_count) for r in yearly.collect()}
+    assert _fact_rows(yearly) == expected_y
+    assert _fact_rows(monthly) == expected_m
+
+
+def test_silver_layer_empty_facts_are_readable(spark, events, tmp_path):
+    """No tsunami rows: both fact paths still exist, read back empty,
+    and keep the fact schema."""
+    quiet = events.withColumn("tsunami", F.lit(0))
+    yearly_path = str(tmp_path / "fact_yearly")
+    monthly_path = str(tmp_path / "fact_monthly")
+    silver.build_silver_layer(quiet, yearly_path, monthly_path)
+    for path, fact in (
+        (yearly_path, silver.fact_tsunami_yearly(quiet)),
+        (monthly_path, silver.fact_tsunami_monthly(quiet)),
+    ):
+        assert os.path.isdir(path)
+        back = sinks.read_partitioned_table(spark, path)
+        assert back.count() == 0
+        assert [(f.name, f.dataType) for f in back.schema.fields] == [
+            (f.name, f.dataType) for f in fact.schema.fields
+        ]
+
+
+def test_silver_layer_job_budget(spark, events, tmp_path):
+    """Both facts come from one bronze aggregation (its shuffle map
+    stage and the Arrow collect) plus one write each: at most 4 jobs,
+    where a scan, probe, range sample, two exchanges and a write per
+    fact took 12."""
+    sc = spark.sparkContext
+    group = "silver_budget"
+    sc.setJobGroup(group, group)
+    try:
+        silver.build_silver_layer(
+            events, str(tmp_path / "fact_yearly"), str(tmp_path / "fact_monthly")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+
 def test_silver_sql_twins_match_dataframe_api(spark, events):
     """The spark.sql string forms of A3/A4 must produce the same rows
     as the DataFrame implementations."""
@@ -159,7 +227,7 @@ def test_merge_rows_upserts_by_key(spark, tmp_path):
         [(1, 2024, 1, "a"), (2, 2024, 1, "b"), (3, 2024, 2, "c"), (4, 2023, 12, "d")],
         "id long, year int, month int, val string",
     )
-    save_partitioned_table(base, path, "append", ["year", "month"], skip_empty=False)
+    save_partitioned_table(base, path, "append", ["year", "month"])
 
     updates = spark.createDataFrame(
         [(2, 2024, 1, "B2"), (9, 2024, 2, "new")],
@@ -191,7 +259,7 @@ def test_merge_rows_rejects_duplicate_keys_and_skips_empty(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, 2024, 1, "a")], "id long, year int, month int, val string"
     )
-    save_partitioned_table(base, path, "append", ["year", "month"], skip_empty=False)
+    save_partitioned_table(base, path, "append", ["year", "month"])
     dup = spark.createDataFrame(
         [(1, 2024, 1, "x"), (1, 2024, 1, "y")],
         "id long, year int, month int, val string",

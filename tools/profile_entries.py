@@ -5,12 +5,14 @@ history; the round-5 review asked for this to be a committed tool with
 a CI-style regression gate. Two subcommands:
 
   python tools/profile_entries.py run [--sf-dir DIR] [-o OUT.md]
-      Single cold pass over every oracle-gated catalog entry (one
-      count() action each after a session warm-up — the same
-      methodology as every PROFILE.md baseline), emitting the
-      markdown table sorted slowest-first. With -o it writes the
-      table (plus header) to OUT.md; without, the table goes to
-      stdout so it can be spliced into PROFILE.md.
+      Single cold pass over every oracle-gated catalog entry, each
+      forced with the noop sink (``df.write.format("noop")``: every
+      column computed, nothing collected — a count() would let
+      Catalyst prune the measured work) after a session warm-up,
+      emitting the markdown table sorted slowest-first (a
+      count()-forced PROFILE.md table does not compare with it).
+      With -o it writes the table (plus header) to OUT.md; without,
+      the table goes to stdout so it can be spliced into PROFILE.md.
 
   python tools/profile_entries.py diff OLD NEW [--threshold 1.5] [--floor 0.5]
       Parse two PROFILE.md-style tables (any file containing
@@ -83,7 +85,9 @@ def cmd_run(args: argparse.Namespace) -> int:
     entries = [e for e in CATALOG.values() if e.oracle is not None]
     for i, entry in enumerate(entries):
         t0 = time.perf_counter()
-        entry.spark_fn(spark, args.sf_dir).count()
+        entry.spark_fn(spark, args.sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
         timings[entry.name] = round(time.perf_counter() - t0, 3)
         print(
             f"[{i + 1}/{len(entries)}] {entry.name} {timings[entry.name]}",

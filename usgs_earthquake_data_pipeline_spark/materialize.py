@@ -37,6 +37,7 @@ what the r13 verdict asked for ("a session-level policy knob").
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame
@@ -45,6 +46,8 @@ from pyspark.storagelevel import StorageLevel
 CONF_KEY = "spark.graft.materialize.mode"
 DIR_CONF_KEY = "spark.graft.checkpoint.dir"
 _VALID = ("local", "reliable", "persist")
+
+logger = logging.getLogger(__name__)
 
 
 def materialize_mode(spark) -> str:
@@ -68,11 +71,13 @@ def _ensure_checkpoint_dir(spark) -> None:
     """Reliable mode needs ``sc.setCheckpointDir`` before the first
     ``df.checkpoint()``. Honors spark.graft.checkpoint.dir /
     SPARK_GRAFT_CHECKPOINT_DIR; falls back to a per-process scratch
-    subdir so the mode runs (and is tested) locally."""
+    subdir so the mode runs (and is tested) locally.
+
+    The checkpoint dir is set once per SparkContext. When the context
+    already has one and a different dir is requested, the request
+    cannot take effect; that is logged as a warning naming both dirs,
+    never ignored silently."""
     sc = spark.sparkContext
-    current = sc._jsc.sc().getCheckpointDir()
-    if current.isDefined():
-        return
     target = None
     try:
         target = spark.conf.get(DIR_CONF_KEY, None)
@@ -80,11 +85,29 @@ def _ensure_checkpoint_dir(spark) -> None:
         target = None
     if not target:
         target = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    current = sc._jsc.sc().getCheckpointDir()
+    if current.isDefined():
+        if target and not _is_context_dir_under(sc, current.get(), target):
+            logger.warning(
+                "requested checkpoint dir %s is ignored: the SparkContext "
+                "already checkpoints to %s (set once per context)",
+                target, current.get(),
+            )
+        return
     if not target:
         from .session import _scratch_dir
 
         target = os.path.join(_scratch_dir(), "reliable-checkpoints")
     sc.setCheckpointDir(target)
+
+
+def _is_context_dir_under(sc, current: str, target: str) -> bool:
+    """``setCheckpointDir(target)`` stores ``<qualified target>/<uuid>``;
+    True when ``current`` is such a child of ``target``."""
+    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
+    requested = hadoop_path(target)
+    fs = requested.getFileSystem(sc._jsc.hadoopConfiguration())
+    return hadoop_path(current).getParent().equals(fs.makeQualified(requested))
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:

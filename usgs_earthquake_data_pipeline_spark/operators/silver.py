@@ -1,13 +1,22 @@
 """Silver-layer aggregations over the canonical USGS events table —
-the reference's analytical heart (A1-A4,
-/root/reference/usgs_tsunami_count_fact_silver.py:31-55,116-124).
+the reference's analytical heart (A1-A4, reference
+usgs_tsunami_count_fact_silver.py:31-55,116-124).
 
 Each is a DataFrame function over a bronze events DataFrame; the
 ``build_silver_layer`` orchestrator writes both fact tables
 partitioned exactly like the reference (year / year+month).
-Plans at scale: partial-agg → single shuffle on the (tiny) group
-keys → final agg; the write range-partitions on the partition
-columns so each Hive partition gets few large files.
+
+``build_silver_layer`` plans one aggregation, not one per fact: bronze
+is scanned once, filtered to ``tsunami == 1`` and grouped by
+``(year, month)`` (partial-agg → one shuffle on the tiny group keys →
+final agg), and the result — at most 12 rows per year — is pulled to
+the driver as Arrow. The yearly fact is folded from those monthly rows
+on the driver (Σ months = year, null keys included), and each fact
+goes back to the JVM as an Arrow-backed local table and is written
+with a plain partitioned overwrite. No range exchange clusters the
+write: a fact's partition key IS its group key, so every partition
+directory receives exactly one row, hence one file, whatever task
+holds it.
 """
 
 from __future__ import annotations
@@ -15,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sinks import save_partitioned_table
+from ..session import TABLE_FORMAT
 
 
 def count_events_in_year(events: DataFrame, year: int) -> DataFrame:
@@ -74,20 +83,42 @@ SILVER_SQL = {
 }
 
 
+def _write_fact(
+    fact: DataFrame, path: str, partition_cols: list[str], rows: int
+) -> None:
+    """Overwrite one fact table. An empty fact is written unpartitioned
+    as a single empty file: a partitioned empty write emits no parquet
+    footer at all, leaving the path unreadable."""
+    writer = fact.write.format(TABLE_FORMAT).mode("overwrite")
+    if rows:
+        writer = writer.partitionBy(*partition_cols)
+    writer.save(path)
+
+
 def build_silver_layer(
     events: DataFrame, yearly_path: str, monthly_path: str
 ) -> tuple[DataFrame, DataFrame]:
     """Compute and persist both silver fact tables (overwrite mode,
     partitioned by year / year+month — reference
-    usgs_tsunami_count_fact_silver.py:57-72,127-142)."""
-    yearly = fact_tsunami_yearly(events)
-    monthly = fact_tsunami_monthly(events)
-    save_partitioned_table(
-        yearly, yearly_path, mode="overwrite", partition_cols=["year"],
-        skip_empty=False,
+    usgs_tsunami_count_fact_silver.py:57-72,127-142) from one bronze
+    aggregation (module docstring). Returns the two facts as
+    driver-backed frames with the A3/A4 schemas."""
+    spark = events.sparkSession
+    monthly_rows = (
+        events.filter(F.col("tsunami") == 1)
+        .groupBy("year", "month")
+        .agg(F.count("*").alias("tsunami_monthly_count"))
+        .toArrow()
     )
-    save_partitioned_table(
-        monthly, monthly_path, mode="overwrite", partition_cols=["year", "month"],
-        skip_empty=False,
+    yearly_rows = (
+        monthly_rows.group_by("year")
+        .aggregate([("tsunami_monthly_count", "sum")])
+        .select(["year", "tsunami_monthly_count_sum"])
+        .rename_columns(["year", "tsunami_yearly_count"])
     )
+    # reading a schema plans the query but launches no job
+    yearly = spark.createDataFrame(yearly_rows, fact_tsunami_yearly(events).schema)
+    monthly = spark.createDataFrame(monthly_rows, fact_tsunami_monthly(events).schema)
+    _write_fact(yearly, yearly_path, ["year"], yearly_rows.num_rows)
+    _write_fact(monthly, monthly_path, ["year", "month"], monthly_rows.num_rows)
     return yearly, monthly

@@ -327,6 +327,38 @@ def dedup_keep_best_in_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _clusters_refine_exact_ok(
+    edges: DataFrame, exact_clusters: DataFrame
+) -> DataFrame:
+    """One-row ``clusters_refine_exact_ok``: both endpoints of every
+    edge (``id_a``, ``id_b``) carry the same exact canonical id. Left
+    joins: an endpoint with no exact label is a violation, not a row
+    that drops out of the check."""
+    ca = exact_clusters.select(
+        F.col("id").alias("id_a"), F.col("canonical_id").alias("can_a")
+    )
+    cb = exact_clusters.select(
+        F.col("id").alias("id_b"), F.col("canonical_id").alias("can_b")
+    )
+    return (
+        edges.join(ca, "id_a", "left")
+        .join(cb, "id_b", "left")
+        .agg(
+            (
+                F.count(
+                    F.when(
+                        F.col("can_a").isNull()
+                        | F.col("can_b").isNull()
+                        | (F.col("can_a") != F.col("can_b")),
+                        1,
+                    )
+                )
+                == 0
+            ).alias("clusters_refine_exact_ok")
+        )
+    )
+
+
 @register(
     "dedup_resolve_clusters_lsh",
     oracle=(
@@ -383,21 +415,7 @@ def dedup_resolve_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_clusters = D.resolve_dup_clusters(
         _prefix03_pairs_cached(spark, sf_dir)
     )
-    ca = exact_clusters.select(
-        F.col("id").alias("id_a"), F.col("canonical_id").alias("can_a")
-    )
-    cb = exact_clusters.select(
-        F.col("id").alias("id_b"), F.col("canonical_id").alias("can_b")
-    )
-    refine = (
-        lsh.join(ca, "id_a")
-        .join(cb, "id_b")
-        .agg(
-            (
-                F.count(F.when(F.col("can_a") != F.col("can_b"), 1)) == 0
-            ).alias("clusters_refine_exact_ok")
-        )
-    )
+    refine = _clusters_refine_exact_ok(lsh, exact_clusters)
     strong = _exact_jaccard03_cached(spark, sf_dir).filter(
         F.col("jaccard") >= 0.9
     )

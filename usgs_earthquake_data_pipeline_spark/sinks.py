@@ -1,6 +1,7 @@
-"""Sinks: CSV/JSON exports (K1/K2), partitioned bronze/silver table
-writes (K3-K6), layout clustering sort (O1/O2), and the
-Cassandra-shaped serving sink (K7-K9).
+"""Sinks: CSV/JSON exports (K1/K2), partitioned table writes
+(K3/K4/K6; the silver facts, K5, are written by
+``operators/silver.build_silver_layer``), layout clustering sort
+(O1/O2), and the Cassandra-shaped serving sink (K7-K9).
 
 Reference semantics preserved:
 
@@ -88,25 +89,18 @@ def save_partitioned_table(
     cluster_cols: list[str] | None = None,
     table_format: str | None = None,
     merge_schema: bool = False,
-    skip_empty: bool = True,
     observation=None,
     metrics=None,
     enforce_compatible: bool = False,
 ) -> bool:
-    """K3/K4/K5/K6: partitioned table write (Delta when delta-spark is
+    """K3/K4/K6: partitioned table write (Delta when delta-spark is
     importable, else plain partitioned parquet — same layout, same
     partition pruning).
 
-    Returns True when data was written, False on the empty-skip path.
-    Raises ValueError on an invalid mode (reference
+    Returns True when data was written, False on empty input, which
+    is never written (the reference's F3 ingest semantics). Raises
+    ValueError on an invalid mode (reference
     save_to_raw_delta_prod.py:127-128).
-
-    ``skip_empty=True`` (default) is the reference's F3 ingest
-    semantics: never write on empty input. Silver/fact writes pass
-    ``skip_empty=False`` — an empty fact table is a valid result and
-    must exist and be readable: it is written unpartitioned as a
-    single empty file (a partitioned empty write would emit no
-    parquet footer at all, making the path unreadable).
 
     ``observation`` + ``metrics`` (observability.py): the aggregate
     columns are attached to the WRITE job itself, so data-quality
@@ -171,12 +165,7 @@ def save_partitioned_table(
                     "incompatible schema evolution: " + "; ".join(diff.breaking)
                 )
     if df.isEmpty():
-        if skip_empty:
-            return False
-        df.repartition(1).write.format(table_format or TABLE_FORMAT).mode(
-            mode
-        ).save(path)
-        return True
+        return False
     out = clustering_sort(df, partition_cols, cluster_cols) if partition_cols else df
     if observation is not None:
         out = out.observe(observation, *metrics)

@@ -18,6 +18,7 @@ with executors instead of the driver:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -117,9 +118,18 @@ def geojson_docs_to_events(
 
 
 def events_from_geojson_strings(spark: SparkSession, docs: list[str]) -> DataFrame:
-    """Convenience for driver-side fetched pages: list of raw JSON
-    document strings → events DataFrame."""
-    df = spark.createDataFrame([(d,) for d in docs], "value string")
+    """Driver-side fetched pages: list of raw JSON document strings →
+    events DataFrame.
+
+    The documents reach the JVM as one Arrow string column, which
+    Spark decodes JVM-side into a ``LocalTableScan`` leaf: no pickled
+    Python rows and no Python worker on any job that reads the frame
+    (the landing's probe, sample, map stage and write). Over a local
+    relation Catalyst folds the ``from_json`` projection at planning
+    time (``ConvertToLocalRelation``), so the page bodies the driver
+    already holds are parsed in the driver JVM, once per action."""
+    table = pa.table({"value": pa.array(docs, pa.string())})
+    df = spark.createDataFrame(table, "value string")
     return geojson_docs_to_events(df, "value")
 
 
