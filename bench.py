@@ -98,8 +98,10 @@ def run_bench(
         for e in CATALOG.values()
         if e.headline and (only is None or e.name in only)
     ]
-    # warm-up: JVM/codegen startup + parquet footer/file-listing caches,
-    # so steady-state execution is what gets timed
+    # warm-up: JVM/codegen startup, the loader's per-file schema memo
+    # (sources/tables.py) and the OS page cache, so steady-state
+    # execution is what gets timed (each plan is built outside the
+    # timer below, so the memo does not move these medians)
     spark.range(1000).count()
     for entry in headline:
         _force(entry.spark_fn(spark, sf_dir))

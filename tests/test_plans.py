@@ -13,6 +13,7 @@ from usgs_earthquake_data_pipeline_spark.operators.skew import (
     salted_join,
 )
 from usgs_earthquake_data_pipeline_spark.sources.tables import load_table
+from quakebench.catalog_headline import HEADLINERS
 
 
 def _plan(df) -> str:
@@ -32,6 +33,25 @@ def test_no_accidental_cartesian(name, spark, sf_dir):
         pytest.skip("intentional broadcast cross join (bounded query side)")
     plan = _plan(CATALOG[name].spark_fn(spark, sf_dir))
     assert "CartesianProduct" not in plan, name
+
+
+def test_warm_headliner_planning_launches_no_job(spark, sf_dir):
+    """Building a catalog_headline entry's plan (no action) over table
+    files already loaded once launches no Spark job: the loader serves
+    each file's memoized schema instead of re-running footer inference
+    (one job per table reference, 10 over these 8 entries, without it)."""
+    for name in HEADLINERS:
+        CATALOG[name].spark_fn(spark, sf_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("warm_headliner_plans", "warm_headliner_plans")
+    try:
+        for name in HEADLINERS:
+            CATALOG[name].spark_fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("warm_headliner_plans") == []
 
 
 def test_q1_filter_pushed_and_columns_pruned(spark, sf_dir):

@@ -71,9 +71,10 @@ def cmd_run(args: argparse.Namespace) -> int:
     spark = get_spark(app_name="profile")
     spark.range(1000).count()  # JVM/codegen warm-up
     # touch every table once so no entry absorbs the first-touch
-    # parquet listing/footer/page-cache cost for its table — that
-    # cost lands on whichever entry happens to run first and shows
-    # up as a phantom 5x "regression" when run order changes
+    # cost for its table (the loader's schema-memo miss, a footer
+    # inference job, plus the OS page cache) — that cost lands on
+    # whichever entry happens to run first and shows up as a phantom
+    # 5x "regression" when run order changes
     from usgs_earthquake_data_pipeline_spark.sources.tables import (
         load_tables,
     )

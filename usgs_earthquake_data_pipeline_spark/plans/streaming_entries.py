@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import kmv_hash_sql as _kmv_hash_sql
 from ..session import configure_runtime
-from ..sources.tables import normalize_timestamp_col
+from ..sources.tables import normalize_timestamp_col, read_parquet
 from .catalog import register
 
 
@@ -29,10 +29,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory, so the sf_dir is streamed with a glob pinned to the
     events file; the ts normalization mirrors the batch loader
     (bigint nanos / TIMESTAMP_NTZ / TIMESTAMP → session-TZ TIMESTAMP,
-    dispatching on the batch-read schema)."""
+    dispatching on the batch-read schema, taken from the loader's
+    schema memo)."""
     configure_runtime(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
