@@ -153,3 +153,25 @@ def test_no_documents_yields_empty_canonical_frame(spark):
         (f.name, f.dataType) for f in USGS_EVENTS_SCHEMA.fields
     ]
     assert df.count() == 0
+
+
+def test_flatten_is_a_few_py4j_calls(spark, monkeypatch):
+    """The flatten hands Spark a few SQL strings: a warm call makes at
+    most 200 py4j round trips, where building the columns one nested
+    ``Column`` at a time took about 2,350."""
+    from py4j.java_gateway import GatewayClient
+
+    docs = [_doc([FULL_FEATURE, NO_DEPTH_FEATURE, SPARSE_FEATURE])] * 3
+    events_from_geojson_strings(spark, docs)  # warm: imports, Arrow setup
+    calls = []
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    df = events_from_geojson_strings(spark, docs)
+    monkeypatch.setattr(GatewayClient, "send_command", send)
+    assert len(calls) <= 200, len(calls)
+    assert df.count() == 9

@@ -291,9 +291,59 @@ def _window_jobs(spark, tmp_path, name, n_events):
 
 
 def test_window_job_budget_independent_of_page_count(spark, tmp_path):
-    """One write per window: a 3-page window launches exactly as many
-    Spark jobs as a 1-page window."""
-    one_page = _window_jobs(spark, tmp_path, "one_page", 5)
-    three_pages = _window_jobs(spark, tmp_path, "three_pages", 25)
-    assert one_page > 0
-    assert three_pages == one_page
+    """One write per window: a 1-page and a 3-page window each launch
+    exactly two Spark jobs, the sink's ``isEmpty`` probe and the write.
+    The window is driver-held, so no sampling job or map stage runs."""
+    assert _window_jobs(spark, tmp_path, "one_page", 5) == 2
+    assert _window_jobs(spark, tmp_path, "three_pages", 25) == 2
+
+
+def test_run_etl_job_budget_and_labels(spark, tmp_path):
+    """A one-year backfill with one 3-page month launches 6 jobs: the
+    window's probe and write, the silver aggregation's map stage and
+    collect, and one write per fact; the bronze read infers nothing.
+    Every job carries a description naming its pipeline layer (read
+    back from the status store)."""
+    feats = [_feature(i, ts_ms=JAN_2020_MS + i * DAY_MS, tsunami=int(i % 4 == 0))
+             for i in range(25)]
+    sc = spark.sparkContext
+    group = "etl_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        stats = pipeline.run_etl(
+            spark, 2020, 2020, str(tmp_path / "bronze"), str(tmp_path / "yearly"),
+            str(tmp_path / "monthly"), api_url="http://x", limit=10,
+            http_get=TimeRangeApi(feats),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats.events == 25 and stats.pages == 3
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    descs = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobId() in ids:
+            desc = job.description()
+            descs.append(desc.get() if desc.isDefined() else None)
+    assert len(ids) == len(descs) == 6, descs
+    assert descs.count("ingest 2020-01-01..2020-02-01") == 2, descs
+    assert descs.count("silver aggregate") == 2, descs
+    assert descs.count("silver write yearly") == 1, descs
+    assert descs.count("silver write monthly") == 1, descs
+
+
+def test_run_etl_restores_the_callers_job_description(spark, tmp_path):
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        pipeline.run_etl(
+            spark, 2020, 2020, str(tmp_path / "bronze"), str(tmp_path / "yearly"),
+            str(tmp_path / "monthly"), api_url="http://x", limit=10,
+            http_get=TimeRangeApi(_january_features(5)),
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)

@@ -4,6 +4,7 @@ invalid mode, CSV/JSON exports, foreachPartition serving sink."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
@@ -402,3 +403,118 @@ def test_partitioned_roundtrip_orc(spark, sf_dir, tmp_path):
     assert "PushedFilters: [" in plan and "user_id" in plan.split(
         "PushedFilters:"
     )[1].split("]")[0]
+
+
+def _arrow_events(spark, n=120):
+    """A driver-held frame: an Arrow table decodes into a
+    ``LocalRelation`` leaf (unlike a list of tuples, which becomes an
+    RDD scan)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "id": list(range(n)),
+                "year": [2020 + i % 2 for i in range(n)],
+                "month": [1 + i % 3 for i in range(n)],
+                "value": [float(n - i) for i in range(n)],
+            }
+        )
+    )
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_held_write_has_no_exchange(spark, tmp_path):
+    """A frame whose rows the driver holds is written by one task: the
+    write plan has no exchange, and each (year, month) gets one file."""
+    df = _arrow_events(spark)
+    plan = _plan(sinks.clustering_sort(df, ["year", "month"], ["value"]))
+    assert "Exchange" not in plan, plan
+    path = str(tmp_path / "t")
+    assert sinks.save_partitioned_table(df, path, cluster_cols=["value"])
+    stats = sinks.partition_file_stats(spark, path)
+    assert len(stats) == 6 and all(s["n_files"] == 1 for s in stats), stats
+    back = sinks.read_partitioned_table(spark, path)
+    assert sorted(back.select("id").toPandas()["id"]) == list(range(120))
+
+
+def test_file_scan_write_keeps_range_exchange(spark, tmp_path):
+    """Any input that is not driver-held keeps the range exchange: a
+    frame read back from parquet plans ``RangePartitioning``."""
+    path = str(tmp_path / "src")
+    sinks.save_partitioned_table(_arrow_events(spark), path)
+    scanned = sinks.read_partitioned_table(spark, path)
+    assert not sinks._driver_held(scanned)
+    plan = _plan(sinks.clustering_sort(scanned, ["year", "month"]))
+    assert "Exchange rangepartitioning(year" in plan, plan
+    assert sinks.save_partitioned_table(scanned, str(tmp_path / "copy"))
+    stats = sinks.partition_file_stats(spark, str(tmp_path / "copy"))
+    assert len(stats) == 6 and all(s["n_files"] == 1 for s in stats), stats
+
+
+def test_upsert_never_sets_the_session_overwrite_mode(spark, events, tmp_path, monkeypatch):
+    """Dynamic partition overwrite is a writer option: the upsert
+    replaces only the partitions it touches without ever setting the
+    shared session conf, so a concurrent overwrite stays static."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "t")
+    sinks.save_partitioned_table(events, path, mode="overwrite")
+    set_conf = RuntimeConfig.set
+
+    def guarded(self, k, v):
+        assert k != key, f"upsert_partitions set {key}={v} on the session"
+        return set_conf(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", guarded)
+    touched = events.filter((F.col("year") == 2020) & (F.col("month") == 1))
+    n_touched = touched.count()
+    assert sinks.upsert_partitions(touched.withColumn("value", F.lit(-1.0)), path)
+    back = sinks.read_partitioned_table(spark, path)
+    assert back.count() == 200
+    replaced = back.filter((F.col("year") == 2020) & (F.col("month") == 1))
+    assert replaced.filter(F.col("value") == -1.0).count() == n_touched == replaced.count()
+    assert back.filter(F.col("value") == -1.0).count() == n_touched
+    assert spark.conf.get(key).lower() == "static"
+
+
+def test_declared_schema_read_launches_no_job(spark, tmp_path):
+    """Reading bronze by its declared schema skips footer inference
+    (a Spark job) and yields the inferring read's schema, column
+    order and rows."""
+    from usgs_earthquake_data_pipeline_spark.schema import USGS_EVENTS_SCHEMA
+    from usgs_earthquake_data_pipeline_spark.sources.geojson import (
+        events_from_geojson_strings,
+    )
+
+    if sinks.TABLE_FORMAT != "parquet":
+        pytest.skip("a Delta table takes its schema from its log")
+    features = [
+        {
+            "id": f"e{i}",
+            # every 20 days from 2020-01-01: 40 events over 27 months
+            "properties": {"mag": 1.5, "time": 1577836800000 + i * 20 * 86_400_000},
+            "geometry": {"coordinates": [1.0, 2.0] + [3.0] * (i % 2)},
+        }
+        for i in range(40)
+    ]
+    path = str(tmp_path / "bronze")
+    events = events_from_geojson_strings(spark, [json.dumps({"features": features})])
+    assert sinks.save_partitioned_table(events, path)
+    sc = spark.sparkContext
+    sc.setJobGroup("declared_read", "declared_read")
+    try:
+        declared = sinks.read_partitioned_table(spark, path, schema=USGS_EVENTS_SCHEMA)
+        declared_schema = declared.schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("declared_read") == []
+    inferred = sinks.read_partitioned_table(spark, path)
+    assert declared_schema == inferred.schema
+    assert sorted(map(tuple, declared.collect())) == sorted(map(tuple, inferred.collect()))

@@ -17,7 +17,10 @@ uses.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -50,6 +53,21 @@ def with_quality_observation(
     their probes, immediately before the write action."""
     obs = Observation(name)
     return df.observe(obs, *quality_metrics()), obs
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str) -> Iterator[None]:
+    """Label every Spark job launched inside the block with ``text``,
+    the job description the Spark UI and the event log show, then
+    restore the caller's description. The job group is left alone:
+    whoever drives the pipeline (a scheduler, a benchmark) owns it."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(previous)
 
 
 class StreamingMetricsListener:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..observability import job_description
 from ..session import TABLE_FORMAT
 
 
@@ -104,12 +105,13 @@ def build_silver_layer(
     aggregation (module docstring). Returns the two facts as
     driver-backed frames with the A3/A4 schemas."""
     spark = events.sparkSession
-    monthly_rows = (
-        events.filter(F.col("tsunami") == 1)
-        .groupBy("year", "month")
-        .agg(F.count("*").alias("tsunami_monthly_count"))
-        .toArrow()
-    )
+    with job_description(spark, "silver aggregate"):
+        monthly_rows = (
+            events.filter(F.col("tsunami") == 1)
+            .groupBy("year", "month")
+            .agg(F.count("*").alias("tsunami_monthly_count"))
+            .toArrow()
+        )
     yearly_rows = (
         monthly_rows.group_by("year")
         .aggregate([("tsunami_monthly_count", "sum")])
@@ -119,6 +121,8 @@ def build_silver_layer(
     # reading a schema plans the query but launches no job
     yearly = spark.createDataFrame(yearly_rows, fact_tsunami_yearly(events).schema)
     monthly = spark.createDataFrame(monthly_rows, fact_tsunami_monthly(events).schema)
-    _write_fact(yearly, yearly_path, ["year"], yearly_rows.num_rows)
-    _write_fact(monthly, monthly_path, ["year", "month"], monthly_rows.num_rows)
+    with job_description(spark, "silver write yearly"):
+        _write_fact(yearly, yearly_path, ["year"], yearly_rows.num_rows)
+    with job_description(spark, "silver write monthly"):
+        _write_fact(monthly, monthly_path, ["year", "month"], monthly_rows.num_rows)
     return yearly, monthly

@@ -24,10 +24,11 @@ from datetime import date, timedelta
 
 from pyspark.sql import Observation, SparkSession
 
-from .observability import quality_metrics
+from .observability import job_description, quality_metrics
 from .sources.geojson import events_from_geojson_strings
 from .sources.rest import FetchError, HttpGet, fetch_earthquake_data_limit_offset
 from .operators.silver import build_silver_layer
+from .schema import USGS_EVENTS_SCHEMA
 from .sinks import read_partitioned_table, save_partitioned_table, upsert_partitions
 
 logger = logging.getLogger(__name__)
@@ -111,6 +112,12 @@ def ingest_window_paged(
     holds one window's page bodies (at most pages x ``limit``
     features) until the landing, rather than one page.
 
+    The landing costs two Spark jobs whatever the page count: the
+    sink's ``isEmpty`` probe and the write. The flattened window is
+    driver-held, so one task writes it with no range exchange
+    (``sinks.clustering_sort``). Both jobs carry the description
+    ``ingest <start>..<end>``.
+
     ``idempotent=True`` lands the window with a partition-level upsert
     instead of an append: re-running the same window replaces its
     (year, month) partitions rather than duplicating rows — the fix
@@ -134,16 +141,17 @@ def ingest_window_paged(
             break
         offset += limit
     if docs:
-        events = events_from_geojson_strings(spark, docs)
-        # quality counters ride the landing job — no second scan
-        obs = Observation(f"window_{start_time}")
-        kwargs = dict(observation=obs, metrics=quality_metrics())
-        if idempotent:
-            written = upsert_partitions(events, bronze_path, **kwargs)
-        else:
-            written = save_partitioned_table(
-                events, bronze_path, mode="append", **kwargs
-            )
+        with job_description(spark, f"ingest {start_time}..{end_time}"):
+            events = events_from_geojson_strings(spark, docs)
+            # quality counters ride the landing job — no second scan
+            obs = Observation(f"window_{start_time}")
+            kwargs = dict(observation=obs, metrics=quality_metrics())
+            if idempotent:
+                written = upsert_partitions(events, bronze_path, **kwargs)
+            else:
+                written = save_partitioned_table(
+                    events, bronze_path, mode="append", **kwargs
+                )
         if written:
             stats.window_metrics.append(obs.get)
     stats.pages += len(docs)
@@ -204,12 +212,17 @@ def run_etl(
     """C5: two-phase main — ingest, then silver (which actually runs
     after ingest, unlike the reference's truthiness-bugged guard).
     Silver runs only once a window has landed: fetched pages whose
-    features are all invalid never create the bronze table."""
+    features are all invalid never create the bronze table. Bronze is
+    read by its declared schema, so the read launches no
+    schema-inference job."""
     stats = ingest_range(
         spark, start_year, end_year, bronze_path,
         api_url=api_url, limit=limit, http_get=http_get,
     )
     if stats.window_metrics:
-        events = read_partitioned_table(spark, bronze_path)
+        with job_description(spark, "silver read bronze"):
+            events = read_partitioned_table(
+                spark, bronze_path, schema=USGS_EVENTS_SCHEMA
+            )
         build_silver_layer(events, yearly_path, monthly_path)
     return stats

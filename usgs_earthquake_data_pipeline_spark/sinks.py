@@ -24,7 +24,11 @@ so each output partition is written by few tasks → few large files,
 no small-file explosion) then ``sortWithinPartitions`` for the
 clustering columns (data-skipping locality), the distributed
 equivalent of the reference's lexicographic "z-order" sort
-(usgs-earthquake-data-ingest-dynamic-dev.py:289-292).
+(usgs-earthquake-data-ingest-dynamic-dev.py:289-292). A frame whose
+rows the driver already holds (every leaf of its plan a
+``LocalRelation``, such as an ingest window's pages) skips the range
+exchange: one task writes it, so it still lands one file per
+partition, without the sampling job and the map stage.
 """
 
 from __future__ import annotations
@@ -37,6 +41,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import TABLE_FORMAT
 
@@ -50,6 +55,15 @@ def _timestamp_name(prefix: str, suffix: str) -> str:
     return f"{prefix}_{datetime.now(timezone.utc).strftime('%Y%m%d%H%M%S')}{suffix}"
 
 
+def _driver_held(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s analyzed plan is a
+    ``LocalRelation``: its rows already sit in the driver."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return all(
+        leaves.apply(i).nodeName() == "LocalRelation" for i in range(leaves.size())
+    )
+
+
 def clustering_sort(
     df: DataFrame,
     partition_cols: list[str],
@@ -57,8 +71,18 @@ def clustering_sort(
 ) -> DataFrame:
     """O1/O2: range-partition on the table partition columns, sort
     within partitions by the clustering columns. Reproduces the
-    reference's sort-before-write clustering in distributed form."""
-    out = df.repartitionByRange(*[F.col(c) for c in partition_cols])
+    reference's sort-before-write clustering in distributed form.
+
+    A driver-held frame (every plan leaf a ``LocalRelation``) is at
+    most what the driver already holds in memory, so it is coalesced
+    to one task instead: the same one file per partition and the same
+    row order, with no sampling job and no exchange. Any other input —
+    file scans, streaming micro-batches, ``merge_rows`` — takes the
+    range exchange."""
+    if _driver_held(df):
+        out = df.coalesce(1)
+    else:
+        out = df.repartitionByRange(*[F.col(c) for c in partition_cols])
     sort_cols = partition_cols + (cluster_cols or [])
     return out.sortWithinPartitions(*[F.col(c) for c in sort_cols])
 
@@ -127,7 +151,7 @@ def save_partitioned_table(
         partition_cols if partition_cols is not None else RAW_PARTITION_COLS
     )
     if enforce_compatible and mode == "append":
-        from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import StructField
 
         from .operators.contracts import schema_diff
 
@@ -180,9 +204,24 @@ def save_partitioned_table(
     return True
 
 
-def read_partitioned_table(spark, path: str, table_format: str | None = None) -> DataFrame:
-    """Read back a table written by save_partitioned_table."""
-    return spark.read.format(table_format or TABLE_FORMAT).load(path)
+def read_partitioned_table(
+    spark,
+    path: str,
+    table_format: str | None = None,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Read back a table written by save_partitioned_table.
+
+    ``schema`` is the table's declared schema. A
+    parquet read given it skips footer inference, which is a Spark
+    job; the frame's columns, their order and types are those of the
+    inferring read. A Delta table takes its schema from its log, which
+    rejects a user schema, so there ``schema`` is not applied."""
+    fmt = table_format or TABLE_FORMAT
+    reader = spark.read.format(fmt)
+    if schema is not None and fmt != "delta":
+        reader = reader.schema(schema)
+    return reader.load(path)
 
 
 def upsert_partitions(
@@ -200,7 +239,8 @@ def upsert_partitions(
     a month's ingest replaces that month instead of duplicating it
     (the correct form of the reference's append-forever raw layer;
     with delta-spark this would be MERGE, the parquet layout gets the
-    same semantics from partitionOverwriteMode=dynamic).
+    same semantics from the ``partitionOverwriteMode=dynamic`` writer
+    option, which leaves the session's own setting alone).
 
     At scale: the write touches exactly the affected partitions; the
     clustering sort keeps file counts low within each.
@@ -213,18 +253,15 @@ def upsert_partitions(
         # after the isEmpty probe, before the only remaining action —
         # see save_partitioned_table's observation note
         out = out.observe(observation, *metrics)
-    spark = df.sparkSession
-    previous = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            out.write.format(table_format or TABLE_FORMAT)
-            .mode("overwrite")
-            .partitionBy(*partition_cols)
-            .save(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", previous)
+    # a writer option, not the session conf: flipping the shared conf
+    # would make any overwrite another thread runs meanwhile dynamic
+    (
+        out.write.format(table_format or TABLE_FORMAT)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .save(path)
+    )
     return True
 
 

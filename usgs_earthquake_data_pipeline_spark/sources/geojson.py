@@ -9,17 +9,24 @@ with executors instead of the driver:
 
 - P2  nested array index:      latitude = coordinates[1], longitude = [0]
 - P3  conditional on length:   depth = coordinates[2] if size > 2 else NULL
-- P4  epoch-ms → timestamp:    F.timestamp_millis (UTC; the reference used
+- P4  epoch-ms → timestamp:    timestamp_millis (UTC; the reference used
                                local-TZ fromtimestamp — documented divergence)
-- P5/P6 month/year extraction: F.month/F.year on eventtime
+- P5/P6 month/year extraction: month/year on eventtime
 - P7  null-defaulting access:  missing JSON keys → NULL natively
-- P8  struct → JSON string:    F.to_json(geometry struct)
+- P8  struct → JSON string:    to_json(geometry struct)
+
+The flatten is written as module-level SQL: one ``explode`` string, one
+projection of the 32 typed columns (each cast folded into its column)
+and one validity filter. Handing Spark a few strings instead of
+building ~100 nested ``Column`` objects keeps the driver's side of a
+flatten under a hundred py4j calls, whatever the entry point:
+driver pages, streaming ``foreachBatch`` or whole-text files.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import (
@@ -27,54 +34,68 @@ from ..schema import (
     USGS_EVENTS_SCHEMA,
 )
 
+#: one exploded GeoJSON feature struct per row, from the document
+#: column named by ``{col}``
+_FEATURES_SQL = (
+    "explode(from_json(`{col}`, '"
+    + GEOJSON_FEATURE_COLLECTION_SCHEMA.simpleString()
+    + "').features) AS feature"
+)
 
-def _flatten_feature(feature: Column) -> list[Column]:
-    """Project one exploded GeoJSON feature struct into the 32 canonical
-    event columns (order matches USGS_EVENTS_SCHEMA)."""
-    props = feature["properties"]
-    coords = feature["geometry"]["coordinates"]
-    eventtime = F.timestamp_millis(props["time"])
-    return [
-        feature["id"].alias("id"),
-        F.month(eventtime).alias("month"),
-        F.year(eventtime).alias("year"),
-        props["mag"].alias("magnitude"),
-        F.element_at(coords, 2).alias("latitude"),
-        F.element_at(coords, 1).alias("longitude"),
-        # depth = coordinates[2] only when a 3rd element exists (P3)
-        F.when(F.size(coords) > 2, F.element_at(coords, 3)).alias("depth"),
-        eventtime.alias("eventtime"),
-        F.timestamp_millis(props["updated"]).alias("updated"),
-        props["place"].alias("place"),
-        props["url"].alias("url"),
-        props["detail"].alias("detail"),
-        props["felt"].alias("felt"),
-        props["cdi"].alias("cdi"),
-        props["mmi"].alias("mmi"),
-        props["alert"].alias("alert"),
-        props["status"].alias("status"),
-        props["tsunami"].alias("tsunami"),
-        props["sig"].alias("significance"),
-        props["net"].alias("network"),
-        props["code"].alias("code"),
-        props["ids"].alias("ids"),
-        props["sources"].alias("sources"),
-        props["types"].alias("types"),
-        props["nst"].alias("nst"),
-        props["dmin"].alias("dmin"),
-        props["rms"].alias("rms"),
-        props["gap"].alias("gap"),
-        props["magType"].alias("magnitude_type"),
-        props["type"].alias("type"),
-        props["title"].alias("title"),
-        # keep the geometry as a JSON string, like the stored schema (P8)
-        F.to_json(feature["geometry"]).alias("geometry"),
-    ]
+_PROPS = "feature.properties"
+_COORDS = "feature.geometry.coordinates"
+_EVENTTIME = f"timestamp_millis({_PROPS}.time)"  # P4
 
+#: each canonical event column over one exploded ``feature``
+_EVENT_EXPRS = {
+    "id": "feature.id",
+    "month": f"month({_EVENTTIME})",  # P5
+    "year": f"year({_EVENTTIME})",  # P6
+    "magnitude": f"{_PROPS}.mag",
+    "latitude": f"element_at({_COORDS}, 2)",  # P2
+    "longitude": f"element_at({_COORDS}, 1)",  # P2
+    # depth = coordinates[2] only when a 3rd element exists (P3)
+    "depth": f"CASE WHEN size({_COORDS}) > 2 THEN element_at({_COORDS}, 3) END",
+    "eventtime": _EVENTTIME,
+    "updated": f"timestamp_millis({_PROPS}.updated)",  # P4
+    "place": f"{_PROPS}.place",
+    "url": f"{_PROPS}.url",
+    "detail": f"{_PROPS}.detail",
+    "felt": f"{_PROPS}.felt",
+    "cdi": f"{_PROPS}.cdi",
+    "mmi": f"{_PROPS}.mmi",
+    "alert": f"{_PROPS}.alert",
+    "status": f"{_PROPS}.status",
+    "tsunami": f"{_PROPS}.tsunami",
+    "significance": f"{_PROPS}.sig",
+    "network": f"{_PROPS}.net",
+    "code": f"{_PROPS}.code",
+    "ids": f"{_PROPS}.ids",
+    "sources": f"{_PROPS}.sources",
+    "types": f"{_PROPS}.types",
+    "nst": f"{_PROPS}.nst",
+    "dmin": f"{_PROPS}.dmin",
+    "rms": f"{_PROPS}.rms",
+    "gap": f"{_PROPS}.gap",
+    "magnitude_type": f"{_PROPS}.magType",
+    "type": f"{_PROPS}.type",
+    "title": f"{_PROPS}.title",
+    # keep the geometry as a JSON string, like the stored schema (P8)
+    "geometry": "to_json(feature.geometry)",
+}
+
+#: the 32 canonical columns in USGS_EVENTS_SCHEMA order, each cast to
+#: its declared type (P10: schema-enforced construction)
+_EVENT_COLUMNS_SQL = tuple(
+    f"CAST({_EVENT_EXPRS[f.name]} AS {f.dataType.simpleString()}) AS `{f.name}`"
+    for f in USGS_EVENTS_SCHEMA.fields
+)
 
 #: columns declared non-nullable in USGS_EVENTS_SCHEMA that from_json can
 #: still produce as NULL from malformed/truncated documents
-_REQUIRED_EVENT_COLS = ("id", "latitude", "longitude", "eventtime", "geometry")
+_VALID_EVENT_SQL = " AND ".join(
+    f"`{c}` IS NOT NULL" for c in ("id", "latitude", "longitude", "eventtime", "geometry")
+)
 
 
 def geojson_docs_to_events(
@@ -100,21 +121,9 @@ def geojson_docs_to_events(
     the reference's ``geojson.dumps`` of raw values can differ.
     Compare geometry semantically (re-parse) in correctness checks.
     """
-    parsed = docs.select(
-        F.from_json(F.col(json_col), GEOJSON_FEATURE_COLLECTION_SCHEMA).alias("doc")
-    )
-    features = parsed.select(F.explode("doc.features").alias("feature"))
-    flat = features.select(*_flatten_feature(F.col("feature")))
-    # enforce the canonical column types (P10: schema-enforced construction)
-    casts = [F.col(f.name).cast(f.dataType).alias(f.name) for f in USGS_EVENTS_SCHEMA.fields]
-    out = flat.select(*casts)
-    if drop_invalid:
-        predicate = None
-        for c in _REQUIRED_EVENT_COLS:
-            cond = F.col(c).isNotNull()
-            predicate = cond if predicate is None else (predicate & cond)
-        out = out.filter(predicate)
-    return out
+    features = docs.selectExpr(_FEATURES_SQL.format(col=json_col))
+    out = features.selectExpr(*_EVENT_COLUMNS_SQL)
+    return out.filter(_VALID_EVENT_SQL) if drop_invalid else out
 
 
 def events_from_geojson_strings(spark: SparkSession, docs: list[str]) -> DataFrame:
@@ -122,12 +131,11 @@ def events_from_geojson_strings(spark: SparkSession, docs: list[str]) -> DataFra
     events DataFrame.
 
     The documents reach the JVM as one Arrow string column, which
-    Spark decodes JVM-side into a ``LocalTableScan`` leaf: no pickled
+    Spark decodes JVM-side into a ``LocalRelation`` leaf: no pickled
     Python rows and no Python worker on any job that reads the frame
-    (the landing's probe, sample, map stage and write). Over a local
-    relation Catalyst folds the ``from_json`` projection at planning
-    time (``ConvertToLocalRelation``), so the page bodies the driver
-    already holds are parsed in the driver JVM, once per action."""
+    (the landing's ``isEmpty`` probe and its write). Because every
+    leaf of the frame is local, the sinks write it from one task with
+    no range exchange (``sinks.clustering_sort``)."""
     table = pa.table({"value": pa.array(docs, pa.string())})
     df = spark.createDataFrame(table, "value string")
     return geojson_docs_to_events(df, "value")
