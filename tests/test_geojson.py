@@ -95,7 +95,7 @@ def test_empty_features_yields_zero_rows(spark):
 def test_malformed_documents_filtered(spark):
     bad = ["not json at all", json.dumps({"type": "FeatureCollection"})]
     df = events_from_geojson_strings(spark, bad + [_doc([FULL_FEATURE])])
-    assert df.count() == 1  # drop_invalid removes null-id rows
+    assert df.count() == 1  # rows with a null id are dropped
     kept = events_from_geojson_strings(spark, bad)
     assert kept.count() == 0
 
@@ -109,7 +109,6 @@ def test_truncated_feature_dropped_unless_requested(spark):
 
     docs = spark.createDataFrame([( _doc([no_geom, FULL_FEATURE]),)], "value string")
     assert geojson_docs_to_events(docs).count() == 1
-    assert geojson_docs_to_events(docs, drop_invalid=False).count() == 2
 
 
 def test_roundtrip_to_geojson_feature(spark):

@@ -13,7 +13,6 @@ import pytest
 from usgs_earthquake_data_pipeline_spark import pipeline, sinks
 from usgs_earthquake_data_pipeline_spark.sources.rest import (
     FetchError,
-    fetch_earthquake_data,
     fetch_earthquake_data_limit_offset,
 )
 
@@ -57,11 +56,6 @@ class FakeApi:
         feats = self.pages_by_window.get(start, [])
         page = feats[offset - 1 : offset - 1 + limit]
         return 200, _page(page)
-
-
-def test_rest_source_returns_empty_dict_on_error():
-    api = FakeApi({}, fail_windows={"2020-01-01"})
-    assert fetch_earthquake_data("http://x", "2020-01-01", "2020-02-01", api) == {}
 
 
 def test_rest_source_limit_offset_raises_classified():
@@ -229,6 +223,19 @@ def _january_features(n: int):
     # one event per day of January 2020, at noon: every week window of
     # the month holds fewer than 10 of them
     return [_feature(i, ts_ms=JAN_2020_MS + (i % 31) * DAY_MS + DAY_MS // 2) for i in range(n)]
+
+
+def test_pager_raises_on_a_failed_page():
+    """A failed page raises FetchError for C4 to classify; it never
+    reads as the end of the window."""
+    api = TimeRangeApi(_january_features(25), fail=lambda s, e, o: o > 1)
+    pages = pipeline.fetch_pages(
+        "http://x", "2020-01-01", "2020-02-01", limit=10, http_get=api
+    )
+    assert len(next(pages)["features"]) == 10
+    with pytest.raises(FetchError) as exc:
+        next(pages)
+    assert exc.value.status == 503
 
 
 def test_window_is_atomic_on_mid_window_failure(spark, tmp_path):

@@ -1,72 +1,87 @@
-"""Custom Python data-source tests: fixture-driven windows, schema,
-partition parallelism, agreement with the JVM flatten path."""
+"""Custom Python data-source tests against a loopback fake FDSN
+service: month partitions, paging past the page limit, the week
+fallback inside a partition read, the stream reader's offset contract,
+agreement with the driver flatten, and the GeoJSON writer."""
 
 from __future__ import annotations
 
+import contextlib
 import json
+import threading
+import time
+import urllib.parse
+from datetime import datetime, timezone
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pytest
+
+from usgs_earthquake_data_pipeline_spark.pipeline import PAGE_LIMIT
 from usgs_earthquake_data_pipeline_spark.schema import EVENT_COLUMNS
+from usgs_earthquake_data_pipeline_spark.sources.geojson import (
+    events_from_geojson_strings,
+    geojson_docs_to_events,
+)
+from usgs_earthquake_data_pipeline_spark.sources.rest import FetchError
 from usgs_earthquake_data_pipeline_spark.sources.usgs_datasource import (
     UsgsGeoJsonDataSource,
+    UsgsGeoJsonReader,
+    UsgsGeoJsonStreamReader,
+    UsgsWindowPartition,
 )
 
 from tests.test_geojson import FULL_FEATURE, NO_DEPTH_FEATURE, SPARSE_FEATURE, _doc
 
-
-def _write_fixture(dirpath, start, features):
-    (dirpath / f"{start}.json").write_text(_doc(features))
-
-
-def test_datasource_reads_fixture_windows(spark, tmp_path):
-    fixtures = tmp_path / "fx"
-    fixtures.mkdir()
-    _write_fixture(fixtures, "2024-01-01", [FULL_FEATURE, NO_DEPTH_FEATURE])
-    _write_fixture(fixtures, "2024-02-01", [SPARSE_FEATURE])
-    # March..December windows have no fixture file → empty partitions
-
-    spark.dataSource.register(UsgsGeoJsonDataSource)
-    df = (
-        spark.read.format("usgs_geojson")
-        .option("start_year", 2024)
-        .option("fixture_dir", str(fixtures))
-        .load()
-    )
-    assert df.columns == EVENT_COLUMNS
-    rows = {r["id"]: r for r in df.collect()}
-    assert set(rows) == {"us7000abcd", "ci00000002", "nc00000003"}
-    assert rows["us7000abcd"]["latitude"] == 36.12
-    assert rows["ci00000002"]["depth"] is None
-    assert df.rdd.getNumPartitions() == 12  # one partition per month window
+HOUR_MS = 3_600_000
+DAY_MS = 24 * HOUR_MS
+MAR_2024_MS = 1709251200000  # 2024-03-01T00:00:00Z
 
 
-def test_datasource_agrees_with_jvm_flatten(spark, tmp_path):
-    from usgs_earthquake_data_pipeline_spark.sources.geojson import (
-        events_from_geojson_strings,
-    )
+def _ms(iso: str) -> float:
+    return datetime.fromisoformat(iso).replace(tzinfo=timezone.utc).timestamp() * 1000
 
-    fixtures = tmp_path / "fx"
-    fixtures.mkdir()
-    feats = [FULL_FEATURE, NO_DEPTH_FEATURE, SPARSE_FEATURE]
-    _write_fixture(fixtures, "2024-01-01", feats)
 
-    spark.dataSource.register(UsgsGeoJsonDataSource)
-    via_source = (
-        spark.read.format("usgs_geojson")
-        .option("start_year", 2024)
-        .option("fixture_dir", str(fixtures))
-        .load()
-    )
-    via_jvm = events_from_geojson_strings(spark, [_doc(feats)])
+@contextlib.contextmanager
+def fake_fdsn(features, fail=lambda start, end, offset: False):
+    """A loopback FDSN event service over ``features``. It honours
+    ``starttime``/``endtime`` (both inclusive), ``limit`` and 1-based
+    ``offset``, and answers 503 to the requests ``fail(start, end,
+    offset)`` picks. Yields the query URL, the ``(start, end, offset)``
+    of every request, and the body of every page it served."""
+    calls, served = [], []
 
-    def norm(df):
-        out = set()
-        for r in df.collect():
-            d = r.asDict()
-            d["geometry"] = json.dumps(json.loads(d["geometry"]), sort_keys=True)
-            out.add(tuple(d[c] for c in EVENT_COLUMNS))
-        return out
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):
+            q = urllib.parse.parse_qs(urllib.parse.urlparse(self.path).query)
+            start, end = q["starttime"][0], q["endtime"][0]
+            offset, limit = int(q["offset"][0]), int(q["limit"][0])
+            calls.append((start, end, offset))
+            if fail(start, end, offset):
+                self.send_error(503)
+                return
+            lo, hi = _ms(start), _ms(end)
+            hits = [f for f in features if lo <= f["properties"]["time"] <= hi]
+            body = _doc(hits[offset - 1 : offset - 1 + limit])
+            served.append(body)
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body.encode())))
+            self.end_headers()
+            self.wfile.write(body.encode())
 
-    assert norm(via_source) == norm(via_jvm)
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        yield f"http://127.0.0.1:{server.server_port}/fdsnws/event/1/query", calls, served
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def _month_outage(month_start: str, month_end: str):
+    """503 to every request for the whole month, and to nothing else."""
+    return lambda start, end, offset: (start, end) == (month_start, month_end)
 
 
 def _feature_at(fid: str, time_ms: int) -> dict:
@@ -78,77 +93,175 @@ def _feature_at(fid: str, time_ms: int) -> dict:
     }
 
 
-def test_stream_reader_windows_and_offsets(tmp_path):
-    """Unit-level offset contract: half-open windows, no overlap,
-    deterministic replay via readBetweenOffsets."""
-    from usgs_earthquake_data_pipeline_spark.sources.usgs_datasource import (
-        UsgsGeoJsonStreamReader,
+def _read_2024(spark, url: str):
+    spark.dataSource.register(UsgsGeoJsonDataSource)
+    return geojson_docs_to_events(
+        spark.read.format("usgs_geojson")
+        .option("start_year", 2024)
+        .option("api_url", url)
+        .load()
     )
 
-    hour = 3_600_000
+
+def _norm(df) -> set:
+    out = set()
+    for r in df.collect():
+        d = r.asDict()
+        d["geometry"] = json.dumps(json.loads(d["geometry"]), sort_keys=True)
+        out.add(tuple(d[c] for c in EVENT_COLUMNS))
+    return out
+
+
+def test_datasource_reads_fixture_windows(spark):
+    # December holds FULL_FEATURE, January the other two; the other
+    # ten month windows read empty pages
+    feats = [FULL_FEATURE, NO_DEPTH_FEATURE, SPARSE_FEATURE]
+    with fake_fdsn(feats) as (url, _, _):
+        df = _read_2024(spark, url)
+        assert df.columns == EVENT_COLUMNS
+        rows = {r["id"]: r for r in df.collect()}
+        assert set(rows) == {"us7000abcd", "ci00000002", "nc00000003"}
+        assert rows["us7000abcd"]["latitude"] == 36.12
+        assert rows["ci00000002"]["depth"] is None
+        assert df.rdd.getNumPartitions() == 12  # one partition per month window
+
+
+def test_datasource_agrees_with_jvm_flatten(spark):
+    feats = [FULL_FEATURE, NO_DEPTH_FEATURE, SPARSE_FEATURE]
+    with fake_fdsn(feats) as (url, _, _):
+        via_source = _read_2024(spark, url)
+        assert _norm(via_source) == _norm(events_from_geojson_strings(spark, [_doc(feats)]))
+
+
+MARCH = ("2024-03-01", "2024-04-01")
+
+
+@pytest.fixture(scope="module")
+def over_limit_march():
+    """One page limit plus 9 events in March 2024, 170 s apart and none
+    on a week boundary: the month takes two pages, each week one."""
+    return [
+        _feature_at(f"m{i:05d}", MAR_2024_MS + HOUR_MS + i * 170_000)
+        for i in range(PAGE_LIMIT + 9)
+    ]
+
+
+def test_datasource_pages_a_window_over_the_limit(spark, over_limit_march):
+    with fake_fdsn(over_limit_march) as (url, calls, served):
+        got = _norm(_read_2024(spark, url))
+        march = [o for s, e, o in calls if (s, e) == MARCH]
+        want = _norm(events_from_geojson_strings(spark, list(served)))
+    assert march == [1, PAGE_LIMIT + 1]
+    assert len(got) == PAGE_LIMIT + 9
+    assert got == want
+
+
+def test_datasource_second_page_outage_yields_each_event_once(spark, over_limit_march):
+    """The month's first page is served, its second answers 503: the
+    partition keeps nothing of the month and reads its weeks instead."""
+    second_page_down = lambda s, e, o: (s, e) == MARCH and o > 1  # noqa: E731
+    with fake_fdsn(over_limit_march, fail=second_page_down) as (url, calls, _):
+        ids = [r.id for r in _read_2024(spark, url).select("id").collect()]
+    assert len(ids) == len(set(ids)) == PAGE_LIMIT + 9
+    assert [o for s, e, o in calls if (s, e) == MARCH] == [1, PAGE_LIMIT + 1]
+    weeks = [s for s, e, _ in calls if s.startswith("2024-03-") and (s, e) != MARCH]
+    assert weeks == ["2024-03-01", "2024-03-08", "2024-03-15", "2024-03-22", "2024-03-29"]
+
+
+def test_datasource_month_outage_falls_back_to_weeks(spark):
+    # one event at noon on each day of March 2024
+    feats = [
+        _feature_at(f"d{d:02d}", MAR_2024_MS + d * DAY_MS + DAY_MS // 2)
+        for d in range(31)
+    ]
+    with fake_fdsn(feats, fail=_month_outage(*MARCH)) as (url, calls, _):
+        ids = [r.id for r in _read_2024(spark, url).select("id").collect()]
+    assert sorted(ids) == [f"d{d:02d}" for d in range(31)]
+    weeks = [s for s, e, _ in calls if s.startswith("2024-03-") and (s, e) != MARCH]
+    assert weeks == ["2024-03-01", "2024-03-08", "2024-03-15", "2024-03-22", "2024-03-29"]
+
+
+def test_datasource_week_still_failing_raises_naming_it():
+    """After the month and one of its weeks answer 503, every week is
+    still tried, then the read fails naming the week: a Spark read has
+    no ledger, so a skipped week would read as a quiet one."""
+    feats = [_feature_at("q1", MAR_2024_MS + DAY_MS)]
+    month_down = _month_outage(*MARCH)
+    with fake_fdsn(
+        feats, fail=lambda s, e, o: month_down(s, e, o) or s == "2024-03-15"
+    ) as (url, calls, _):
+        reader = UsgsGeoJsonReader({"api_url": url})
+        with pytest.raises(FetchError, match=r"week 2024-03-15\.\.2024-03-22") as exc:
+            list(reader.read(UsgsWindowPartition(*MARCH)))
+    assert exc.value.status == 503
+    assert [s for s, _, _ in calls][-2:] == ["2024-03-22", "2024-03-29"]
+
+
+def _stream_ids(rows) -> list[str]:
+    return sorted(f["id"] for (body,) in rows for f in json.loads(body)["features"])
+
+
+def test_stream_reader_windows_and_offsets():
+    """Unit-level offset contract: half-open windows, no overlap,
+    deterministic replay via readBetweenOffsets."""
     feats = [
         _feature_at("w0a", 0),
-        _feature_at("w0b", hour - 1),
-        _feature_at("w1a", hour),
-        _feature_at("w2a", 2 * hour + 5),
+        _feature_at("w0b", HOUR_MS - 1),
+        _feature_at("w1a", HOUR_MS),
+        _feature_at("w2a", 2 * HOUR_MS + 5),
     ]
-    fx = tmp_path / "feed.json"
-    fx.write_text(_doc(feats))
-    r = UsgsGeoJsonStreamReader(
-        {"fixture_file": str(fx), "window_ms": str(hour), "start_ms": "0"}
-    )
-    off0 = r.initialOffset()
-    rows1, off1 = r.read(off0)
-    assert sorted(t[0] for t in rows1) == ["w0a", "w0b"]
-    assert off1 == {"end_ms": hour}
-    rows2, off2 = r.read(off1)
-    assert [t[0] for t in rows2] == ["w1a"]
-    # exactly-once replay from the offset log
-    assert [t[0] for t in r.readBetweenOffsets(off0, off1)] == ["w0a", "w0b"]
-    assert [t[0] for t in r.readBetweenOffsets(off1, off2)] == ["w1a"]
+    with fake_fdsn(feats) as (url, _, _):
+        r = UsgsGeoJsonStreamReader(
+            {"api_url": url, "window_ms": str(HOUR_MS), "start_ms": "0"}
+        )
+        off0 = r.initialOffset()
+        rows1, off1 = r.read(off0)
+        assert _stream_ids(rows1) == ["w0a", "w0b"]
+        assert off1 == {"end_ms": HOUR_MS}
+        rows2, off2 = r.read(off1)
+        assert _stream_ids(rows2) == ["w1a"]
+        # exactly-once replay from the offset log
+        assert _stream_ids(r.readBetweenOffsets(off0, off1)) == ["w0a", "w0b"]
+        assert _stream_ids(r.readBetweenOffsets(off1, off2)) == ["w1a"]
 
 
 def test_stream_source_end_to_end(spark, tmp_path):
     """The registered format runs as a real readStream source: three
     micro-batches drain three windows into a memory sink."""
-    import time
-
-    hour = 3_600_000
     feats = [
         _feature_at("s0", 10),
-        _feature_at("s1", hour + 10),
-        _feature_at("s2", 2 * hour + 10),
+        _feature_at("s1", HOUR_MS + 10),
+        _feature_at("s2", 2 * HOUR_MS + 10),
     ]
-    fx = tmp_path / "feed.json"
-    fx.write_text(_doc(feats))
     spark.dataSource.register(UsgsGeoJsonDataSource)
-    stream = (
-        spark.readStream.format("usgs_geojson")
-        .option("fixture_file", str(fx))
-        .option("window_ms", str(hour))
-        .option("start_ms", "0")
-        .load()
-    )
-    assert stream.isStreaming
-    assert stream.columns == EVENT_COLUMNS
-    q = (
-        stream.select("id", "eventtime")
-        .writeStream.format("memory")
-        .queryName("usgs_stream_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if spark.table("usgs_stream_sink").count() >= 3:
-                break
-            time.sleep(1)
-        got = {r.id for r in spark.table("usgs_stream_sink").collect()}
-        assert {"s0", "s1", "s2"} <= got
-    finally:
-        q.stop()
+    with fake_fdsn(feats) as (url, _, _):
+        stream = geojson_docs_to_events(
+            spark.readStream.format("usgs_geojson")
+            .option("api_url", url)
+            .option("window_ms", str(HOUR_MS))
+            .option("start_ms", "0")
+            .load()
+        )
+        assert stream.isStreaming
+        assert stream.columns == EVENT_COLUMNS
+        q = (
+            stream.select("id", "eventtime")
+            .writeStream.format("memory")
+            .queryName("usgs_stream_sink")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + 120
+            while time.time() < deadline:
+                if spark.table("usgs_stream_sink").count() >= 3:
+                    break
+                time.sleep(1)
+            got = {r.id for r in spark.table("usgs_stream_sink").collect()}
+            assert {"s0", "s1", "s2"} <= got
+        finally:
+            q.stop()
 
 
 def test_datasource_writer_roundtrip(spark, tmp_path):

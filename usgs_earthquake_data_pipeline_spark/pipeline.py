@@ -10,6 +10,11 @@ The fetch transport is injectable end-to-end so tests drive the whole
 pipeline from local fixtures. Each window is atomic: all of its pages
 are fetched first, then the window lands in bronze with one write.
 
+The pager (``fetch_pages``, C3) and the month -> week fallback
+(``with_week_fallback``, C2) are the package's only ones: the driver
+ingest here and the ``usgs_geojson`` data source
+(``sources/usgs_datasource.py``) both go through them.
+
 Fixed vs the reference: its ``if ETLIngestion:`` truthiness bug
 (silver unconditionally ran on the function object, :568-575) — here
 the silver phase runs only after ingest actually completes.
@@ -19,6 +24,7 @@ from __future__ import annotations
 
 import json
 import logging
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from datetime import date, timedelta
 
@@ -34,6 +40,10 @@ from .sinks import read_partitioned_table, save_partitioned_table, upsert_partit
 logger = logging.getLogger(__name__)
 
 USGS_API_URL = "https://earthquake.usgs.gov/fdsnws/event/1/query"
+
+#: FDSN page size: every pager in the package asks for this many
+#: features per request (FDSN caps a query at 20 000)
+PAGE_LIMIT = 15000
 
 
 def month_windows(start_year: int, end_year: int) -> list[tuple[str, str]]:
@@ -75,6 +85,60 @@ def is_retryable(exc: Exception) -> bool:
     return isinstance(exc, FetchError) and 400 <= exc.status < 600
 
 
+def fetch_pages(
+    api_url: str,
+    start_time: str,
+    end_time: str,
+    *,
+    limit: int = PAGE_LIMIT,
+    http_get: HttpGet | None = None,
+) -> Iterator[dict]:
+    """C3: the decoded pages of one window, by 1-based offset
+    pagination; stops on an empty page or a short page (reference
+    usgs-earthquake-data-ingestion-prod.py:392-437). A failed page
+    raises ``FetchError`` for the caller to classify (C4)."""
+    offset = 1  # FDSN offsets are 1-based
+    while True:
+        doc = fetch_earthquake_data_limit_offset(
+            api_url, start_time, end_time, limit, offset, http_get
+        )
+        features = doc.get("features") or []
+        if not features:  # F4: empty page ends pagination
+            return
+        yield doc
+        if len(features) < limit:  # short page: final one
+            return
+        offset += limit
+
+
+def with_week_fallback(
+    run_window: Callable[[str, str], object], month_start: str, month_end: str
+) -> list[tuple[str, str, FetchError]]:
+    """C2: ``run_window(start, end)`` on the month; on a retryable
+    failure, on each of its weeks instead. Returns each week that still
+    failed, with its error; a non-retryable error propagates.
+
+    ``run_window`` must keep nothing from a window that raises, or the
+    weeks re-deliver what the failed month already handed on."""
+    try:
+        run_window(month_start, month_end)
+        return []
+    except FetchError as exc:
+        if not is_retryable(exc):
+            raise
+        logger.warning("month %s failed (%s); retrying weekly", month_start, exc)
+    failed = []
+    for w_start, w_end in week_windows(month_start, month_end):
+        try:
+            run_window(w_start, w_end)
+        except FetchError as exc:
+            if not is_retryable(exc):
+                raise
+            logger.warning("week %s failed (%s)", w_start, exc)
+            failed.append((w_start, w_end, exc))
+    return failed
+
+
 @dataclass
 class IngestStats:
     pages: int = 0
@@ -93,14 +157,12 @@ def ingest_window_paged(
     end_time: str,
     bronze_path: str,
     *,
-    limit: int = 15000,
+    limit: int = PAGE_LIMIT,
     http_get: HttpGet | None = None,
     stats: IngestStats | None = None,
     idempotent: bool = False,
 ) -> int:
-    """C3: offset-pagination loop for one time window; terminates on
-    an empty page or a short page (reference
-    usgs-earthquake-data-ingestion-prod.py:392-437).
+    """Fetch every page of one window (``fetch_pages``) and land it.
 
     The window is ATOMIC with respect to bronze: every page is fetched
     on the driver first, and only then is the whole window flattened
@@ -125,24 +187,12 @@ def ingest_window_paged(
     S3 overwrite bug, SURVEY §3.1 step 8).
     """
     stats = stats if stats is not None else IngestStats()
-    offset = 1  # FDSN offsets are 1-based
-    docs: list[str] = []
-    total = 0
-    while True:
-        doc = fetch_earthquake_data_limit_offset(
-            api_url, start_time, end_time, limit, offset, http_get
-        )
-        features = doc.get("features") or []
-        if not features:  # F4: empty page ends pagination
-            break
-        docs.append(json.dumps(doc))
-        total += len(features)
-        if len(features) < limit:  # short page: final one
-            break
-        offset += limit
-    if docs:
+    pages = list(
+        fetch_pages(api_url, start_time, end_time, limit=limit, http_get=http_get)
+    )
+    if pages:
         with job_description(spark, f"ingest {start_time}..{end_time}"):
-            events = events_from_geojson_strings(spark, docs)
+            events = events_from_geojson_strings(spark, [json.dumps(p) for p in pages])
             # quality counters ride the landing job — no second scan
             obs = Observation(f"window_{start_time}")
             kwargs = dict(observation=obs, metrics=quality_metrics())
@@ -154,7 +204,8 @@ def ingest_window_paged(
                 )
         if written:
             stats.window_metrics.append(obs.get)
-    stats.pages += len(docs)
+    total = sum(len(p["features"]) for p in pages)
+    stats.pages += len(pages)
     stats.events += total
     return total
 
@@ -166,34 +217,23 @@ def ingest_range(
     bronze_path: str,
     *,
     api_url: str = USGS_API_URL,
-    limit: int = 15000,
+    limit: int = PAGE_LIMIT,
     http_get: HttpGet | None = None,
 ) -> IngestStats:
-    """C1+C2: iterate month windows; on a retryable failure, retry the
-    month in week windows; a window that still fails is recorded and
+    """C1+C2: iterate month windows through ``with_week_fallback``; a
+    week that still fails is recorded in ``failed_windows`` and
     skipped (the run continues)."""
     stats = IngestStats()
+
+    def land(start: str, end: str) -> None:
+        ingest_window_paged(
+            spark, api_url, start, end, bronze_path,
+            limit=limit, http_get=http_get, stats=stats,
+        )
+
     for m_start, m_end in month_windows(start_year, end_year):
-        try:
-            ingest_window_paged(
-                spark, api_url, m_start, m_end, bronze_path,
-                limit=limit, http_get=http_get, stats=stats,
-            )
-        except Exception as exc:
-            if not is_retryable(exc):
-                raise
-            logger.warning("month %s failed (%s); retrying weekly", m_start, exc)
-            for w_start, w_end in week_windows(m_start, m_end):
-                try:
-                    ingest_window_paged(
-                        spark, api_url, w_start, w_end, bronze_path,
-                        limit=limit, http_get=http_get, stats=stats,
-                    )
-                except Exception as wexc:
-                    if not is_retryable(wexc):
-                        raise
-                    logger.warning("week %s failed (%s); skipped", w_start, wexc)
-                    stats.failed_windows.append((w_start, w_end))
+        failed = with_week_fallback(land, m_start, m_end)
+        stats.failed_windows += [(s, e) for s, e, _ in failed]
     return stats
 
 
@@ -206,7 +246,7 @@ def run_etl(
     monthly_path: str,
     *,
     api_url: str = USGS_API_URL,
-    limit: int = 15000,
+    limit: int = PAGE_LIMIT,
     http_get: HttpGet | None = None,
 ) -> IngestStats:
     """C5: two-phase main — ingest, then silver (which actually runs

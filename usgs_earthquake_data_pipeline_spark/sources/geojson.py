@@ -20,7 +20,9 @@ projection of the 32 typed columns (each cast folded into its column)
 and one validity filter. Handing Spark a few strings instead of
 building ~100 nested ``Column`` objects keeps the driver's side of a
 flatten under a hundred py4j calls, whatever the entry point:
-driver pages, streaming ``foreachBatch`` or whole-text files.
+driver pages, streaming ``foreachBatch``, whole-text files or the
+``usgs_geojson`` data source's raw pages. It is the package's only
+GeoJSON → events flatten.
 """
 
 from __future__ import annotations
@@ -98,9 +100,7 @@ _VALID_EVENT_SQL = " AND ".join(
 )
 
 
-def geojson_docs_to_events(
-    docs: DataFrame, json_col: str = "value", drop_invalid: bool = True
-) -> DataFrame:
+def geojson_docs_to_events(docs: DataFrame, json_col: str = "value") -> DataFrame:
     """Parse a DataFrame of raw GeoJSON FeatureCollection documents
     (one JSON string per row in ``json_col``) into the canonical events
     table.
@@ -109,11 +109,10 @@ def geojson_docs_to_events(
     (explode drops them), reproducing the reference's empty-DF
     short-circuit (F3/F4) declaratively.
 
-    ``drop_invalid`` enforces the schema's declared nullability:
-    malformed documents that parse to NULL in a required column
-    (id/latitude/longitude/eventtime/geometry) are filtered out rather
-    than silently passed through. Set False to keep them for
-    quarantine-style handling.
+    Rows are filtered to the schema's declared nullability: malformed
+    documents that parse to NULL in a required column
+    (id/latitude/longitude/eventtime/geometry) are dropped rather than
+    silently passed through.
 
     Known divergence (documented, accepted): ``geometry`` is the
     re-serialization of the *parsed* struct, so coordinates render as
@@ -122,8 +121,7 @@ def geojson_docs_to_events(
     Compare geometry semantically (re-parse) in correctness checks.
     """
     features = docs.selectExpr(_FEATURES_SQL.format(col=json_col))
-    out = features.selectExpr(*_EVENT_COLUMNS_SQL)
-    return out.filter(_VALID_EVENT_SQL) if drop_invalid else out
+    return features.selectExpr(*_EVENT_COLUMNS_SQL).filter(_VALID_EVENT_SQL)
 
 
 def events_from_geojson_strings(spark: SparkSession, docs: list[str]) -> DataFrame:

@@ -1,25 +1,25 @@
-"""REST GeoJSON source (S1-S3) with injectable transport.
+"""REST GeoJSON page fetch (S2) with injectable transport.
 
-The reference fetches the USGS FDSN API with requests and returns
-``{}`` on error (usgs-earthquake-data-ingest.py:76-85; prod twins
+The reference fetches the USGS FDSN API with requests
+(usgs-earthquake-data-ingest.py:76-85; prod twins
 usgs-earthquake-data-ingestion-prod.py:87-148). Here the HTTP call is
 injected (``http_get``) so tests and offline runs use local fixtures;
 the default transport is urllib (stdlib).
 
-These run on the driver by design — the USGS API is a paged REST
-endpoint, not a splittable source; parallelism enters downstream when
-the parsed pages append to the partitioned bronze table.
+This module fetches one page. Paging a window (C3) and the month ->
+week fallback (C2) live in ``pipeline.py`` (``fetch_pages``,
+``with_week_fallback``); the driver ingest and the ``usgs_geojson``
+data source both use them. The reference's time-range (S1) and
+newest-N (S3) fetches, which returned ``{}`` on any error, are that
+pager: a failed page raises ``FetchError`` instead.
 """
 
 from __future__ import annotations
 
 import json
-import logging
 import urllib.parse
 import urllib.request
 from collections.abc import Callable
-
-logger = logging.getLogger(__name__)
 
 #: http_get(url) -> (status_code, body_text)
 HttpGet = Callable[[str], tuple[int, str]]
@@ -37,33 +37,8 @@ def _default_http_get(url: str) -> tuple[int, str]:
     try:
         with urllib.request.urlopen(url, timeout=60) as resp:  # noqa: S310
             return resp.status, resp.read().decode("utf-8")
-    except urllib.error.HTTPError as exc:  # pragma: no cover - network
+    except urllib.error.HTTPError as exc:
         return exc.code, ""
-
-
-def _fetch(api_url: str, params: dict, http_get: HttpGet | None) -> dict:
-    url = f"{api_url}?{urllib.parse.urlencode(params)}"
-    get = http_get or _default_http_get
-    status, body = get(url)
-    if status != 200:
-        raise FetchError(status, url)
-    return json.loads(body)
-
-
-def fetch_earthquake_data(
-    api_url: str, start_time: str, end_time: str, http_get: HttpGet | None = None
-) -> dict:
-    """S1: time-range fetch. Returns {} on any error (reference
-    behavior, usgs-earthquake-data-ingest.py:76-85)."""
-    try:
-        return _fetch(
-            api_url,
-            {"format": "geojson", "starttime": start_time, "endtime": end_time},
-            http_get,
-        )
-    except Exception as exc:
-        logger.warning("fetch failed: %s", exc)
-        return {}
 
 
 def fetch_earthquake_data_limit_offset(
@@ -78,25 +53,15 @@ def fetch_earthquake_data_limit_offset(
     FetchError so the caller can classify (C4) and fall back (C2) —
     the prod reference distinguishes failures rather than swallowing
     them (usgs-earthquake-data-ingestion-prod.py:103-123, 439-445)."""
-    return _fetch(
-        api_url,
-        {
-            "format": "geojson",
-            "starttime": start_time,
-            "endtime": end_time,
-            "limit": limit,
-            "offset": offset,
-        },
-        http_get,
-    )
-
-
-def fetch_earthquake_data_by_limit(
-    api_url: str, limit: int, http_get: HttpGet | None = None
-) -> dict:
-    """S3: newest-N fetch."""
-    try:
-        return _fetch(api_url, {"format": "geojson", "limit": limit}, http_get)
-    except Exception as exc:
-        logger.warning("fetch failed: %s", exc)
-        return {}
+    params = {
+        "format": "geojson",
+        "starttime": start_time,
+        "endtime": end_time,
+        "limit": limit,
+        "offset": offset,
+    }
+    url = f"{api_url}?{urllib.parse.urlencode(params)}"
+    status, body = (http_get or _default_http_get)(url)
+    if status != 200:
+        raise FetchError(status, url)
+    return json.loads(body)

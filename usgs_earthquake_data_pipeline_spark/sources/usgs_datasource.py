@@ -4,33 +4,35 @@ USGS FDSN GeoJSON feed: ``spark.read.format("usgs_geojson")``.
 SURVEY.md §2.1 names this as the idiomatic Spark form of S1: instead
 of the driver fetching pages serially (the reference's shape, kept in
 ``pipeline.py``), each *input partition* is one month window and the
-fetch runs on executors — N windows download in parallel, and the
-rows land already flattened to the canonical 32-column schema.
+fetch runs on executors — N windows download in parallel.
 
-Offline/testing: the ``fixture_dir`` option reads one
-``<starttime>.json`` FeatureCollection file per window instead of
-hitting the network — the same partition/flatten code path.
-
-Flattening here is per-row Python on the executor (the data-source
-API yields Python tuples). That is the right trade for a
-network-bound source: the fetch dominates, and parallelism comes from
-partitioning. For bulk on-disk GeoJSON the JVM-side
-``sources.geojson.read_geojson_files`` path remains the fast lane.
+The source is a transport only. Each partition pages its month with
+the pipeline's own pager and week fallback (``pipeline.fetch_pages``,
+``pipeline.with_week_fallback``) and yields the raw page bodies as one
+Arrow batch of ``value string`` rows. A month that fails with a 4xx/5xx
+is re-read week by week inside the partition; a week that still fails
+fails the read with ``FetchError`` naming it, because a Spark read has
+no ledger in which a skipped week could be told from a quiet one.
+Callers flatten with ``geojson_docs_to_events``, the package's one
+GeoJSON flatten, which then runs under codegen on the executors.
 
 Usage::
 
     spark.dataSource.register(UsgsGeoJsonDataSource)
-    df = (spark.read.format("usgs_geojson")
-          .option("start_year", 2020).option("end_year", 2021)
-          .option("fixture_dir", "/path/to/fixtures")  # or live API
-          .load())
+    events = geojson_docs_to_events(
+        spark.read.format("usgs_geojson")
+        .option("start_year", 2020).option("end_year", 2021)
+        .load()  # .option("api_url", ...) for another FDSN service
+    )
 
     # streaming (see UsgsGeoJsonStreamReader): continuous ingest with
     # offset-checkpointed event-time windows
-    events = (spark.readStream.format("usgs_geojson")
-              .option("start_ms", 1704067200000)
-              .option("window_ms", 3_600_000)
-              .load())
+    events = geojson_docs_to_events(
+        spark.readStream.format("usgs_geojson")
+        .option("start_ms", 1704067200000)
+        .option("window_ms", 3_600_000)
+        .load()
+    )
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ import json
 import os
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -48,7 +51,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..schema import USGS_EVENTS_SCHEMA
+from .. import pipeline
+from .rest import FetchError
 
 
 class UsgsWindowPartition(InputPartition):
@@ -57,99 +61,43 @@ class UsgsWindowPartition(InputPartition):
         self.end = end
 
 
-def _flatten_feature_py(feature: dict):
-    """Row-wise flatten of one GeoJSON feature to the 32-column tuple
-    (executor-side Python; mirrors the JVM expression flatten in
-    sources/geojson.py — same semantics, same column order)."""
-    props = feature.get("properties") or {}
-    geom = feature.get("geometry") or {}
-    coords = geom.get("coordinates") or []
-
-    def ts(ms):
-        if ms is None:
-            return None
-        return datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc).replace(
-            tzinfo=None
-        )
-
-    eventtime = ts(props.get("time"))
-    if feature.get("id") is None or len(coords) < 2 or eventtime is None:
-        return None  # required-field validation, as in geojson_docs_to_events
-
-    def _int(v):
-        return int(v) if v is not None else None
-
-    def _float(v):
-        return float(v) if v is not None else None
-
-    return (
-        feature.get("id"),
-        eventtime.month,
-        eventtime.year,
-        _float(props.get("mag")),
-        float(coords[1]),
-        float(coords[0]),
-        float(coords[2]) if len(coords) > 2 else None,
-        eventtime,
-        ts(props.get("updated")),
-        props.get("place"),
-        props.get("url"),
-        props.get("detail"),
-        _int(props.get("felt")),
-        _float(props.get("cdi")),
-        _float(props.get("mmi")),
-        props.get("alert"),
-        props.get("status"),
-        _int(props.get("tsunami")),
-        _int(props.get("sig")),
-        props.get("net"),
-        props.get("code"),
-        props.get("ids"),
-        props.get("sources"),
-        props.get("types"),
-        _int(props.get("nst")),
-        _float(props.get("dmin")),
-        _float(props.get("rms")),
-        _float(props.get("gap")),
-        props.get("magType"),
-        props.get("type"),
-        props.get("title"),
-        json.dumps(geom),
-    )
-
-
 class UsgsGeoJsonReader(DataSourceReader):
     def __init__(self, options: dict):
         self.options = options
 
     def partitions(self):
-        from ..pipeline import month_windows
-
         start_year = int(self.options.get("start_year", "2024"))
         end_year = int(self.options.get("end_year", str(start_year)))
         return [
-            UsgsWindowPartition(s, e) for s, e in month_windows(start_year, end_year)
+            UsgsWindowPartition(s, e)
+            for s, e in pipeline.month_windows(start_year, end_year)
         ]
 
     def read(self, partition: UsgsWindowPartition):
-        fixture_dir = self.options.get("fixture_dir")
-        if fixture_dir:
-            path = os.path.join(fixture_dir, f"{partition.start}.json")
-            if not os.path.exists(path):
-                return
-            with open(path) as fh:
-                doc = json.load(fh)
-        else:  # pragma: no cover - live network path
-            from .rest import fetch_earthquake_data
+        api_url = self.options.get("api_url", pipeline.USGS_API_URL)
+        bodies: list[str] = []
 
-            api_url = self.options.get(
-                "api_url", "https://earthquake.usgs.gov/fdsnws/event/1/query"
-            )
-            doc = fetch_earthquake_data(api_url, partition.start, partition.end)
-        for feature in doc.get("features") or []:
-            row = _flatten_feature_py(feature)
-            if row is not None:
-                yield row
+        def gather(start: str, end: str) -> None:
+            # the whole window before keeping any of it: a month that
+            # fails part way must not hand on its first pages, which
+            # its weeks then deliver again
+            window = list(pipeline.fetch_pages(api_url, start, end))
+            bodies.extend(json.dumps(doc) for doc in window)
+
+        failed = pipeline.with_week_fallback(
+            gather, partition.start, partition.end
+        )
+        if failed:
+            start, end, exc = failed[0]
+            raise FetchError(exc.status, f"week {start}..{end} failed after its month")
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(bodies, pa.string())], names=["value"]
+        )
+
+
+def _iso(ms: int) -> str:
+    utc = datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc)
+    return utc.replace(tzinfo=None).isoformat()
 
 
 class UsgsGeoJsonStreamReader(SimpleDataSourceStreamReader):
@@ -168,10 +116,11 @@ class UsgsGeoJsonStreamReader(SimpleDataSourceStreamReader):
     exactly-once replay via ``readBetweenOffsets``).
 
     The simple stream-reader API reads on the driver — the right
-    trade for a rate-limited HTTP feed (one request per batch); the
-    flatten is the same per-feature path the batch reader uses.
-    ``fixture_file`` replaces the network with a local
-    FeatureCollection filtered by each window (tests)."""
+    trade for a rate-limited HTTP feed. A batch pages its slice with
+    ``pipeline.fetch_pages`` (FDSN's ``endtime`` is inclusive, so the
+    features are then cut to the half-open slice) and yields one
+    ``(body,)`` row: a FeatureCollection of the slice's features, for
+    ``geojson_docs_to_events`` to flatten."""
 
     def __init__(self, options: dict):
         self.options = options
@@ -189,36 +138,17 @@ class UsgsGeoJsonStreamReader(SimpleDataSourceStreamReader):
     def readBetweenOffsets(self, start: dict, end: dict):
         return iter(self._fetch(int(start["end_ms"]), int(end["end_ms"])))
 
-    def _fetch(self, s_ms: int, e_ms: int) -> list:
-        fixture_file = self.options.get("fixture_file")
-        if fixture_file:
-            with open(fixture_file) as fh:
-                doc = json.load(fh)
-        else:  # pragma: no cover - live network path
-            from .rest import fetch_earthquake_data
+    def _fetch(self, s_ms: int, e_ms: int) -> list[tuple[str]]:
+        api_url = self.options.get("api_url", pipeline.USGS_API_URL)
 
-            api_url = self.options.get(
-                "api_url", "https://earthquake.usgs.gov/fdsnws/event/1/query"
-            )
-
-            def iso(ms):
-                return (
-                    datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc)
-                    .replace(tzinfo=None)
-                    .isoformat()
-                )
-
-            doc = fetch_earthquake_data(api_url, iso(s_ms), iso(e_ms))
-        rows = []
-        for feature in doc.get("features") or []:
+        def in_slice(feature: dict) -> bool:
             t = (feature.get("properties") or {}).get("time")
-            # window filter is half-open [s, e) — batches never overlap
-            if t is None or not (s_ms <= t < e_ms):
-                continue
-            row = _flatten_feature_py(feature)
-            if row is not None:
-                rows.append(row)
-        return rows
+            # half-open [s, e): batches never overlap
+            return t is not None and s_ms <= t < e_ms
+
+        pages = pipeline.fetch_pages(api_url, _iso(s_ms), _iso(e_ms))
+        features = [f for doc in pages for f in doc["features"] if in_slice(f)]
+        return [(json.dumps({"type": "FeatureCollection", "features": features}),)]
 
 
 class GeoJsonCommit(WriterCommitMessage):
@@ -414,7 +344,7 @@ class UsgsGeoJsonDataSource(DataSource):
         return "usgs_geojson"
 
     def schema(self):
-        return USGS_EVENTS_SCHEMA
+        return "value string"
 
     def reader(self, schema) -> UsgsGeoJsonReader:
         return UsgsGeoJsonReader(self.options)
