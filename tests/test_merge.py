@@ -654,3 +654,63 @@ def test_merge_join_state_empty_deltas_is_identity(spark):
         view, a, a.filter("k < 0"), b, b.filter("k < 0"), "k"
     ).collect()
     assert [tuple(r) for r in out] == [(1, "a", 1.0)]
+
+
+#: ``sinks.merge_rows``' jobs on the three-row table below: the
+#: duplicate-key check, the touched-partition collect, the footer read
+#: of the table and the upsert's range-sampled write (with the probes
+#: of ``updates`` and of the merged frame it was 17)
+MERGE_ROWS_JOBS = 12
+
+
+def _merge_rows_table(spark, tmp_path):
+    from usgs_earthquake_data_pipeline_spark.sinks import save_partitioned_table
+
+    path = str(tmp_path / "tbl")
+    base = spark.createDataFrame(
+        [(1, 2024, 1, "a"), (2, 2024, 1, "b"), (3, 2024, 2, "c")],
+        "id long, year int, month int, val string",
+    )
+    assert save_partitioned_table(base, path, "append", ["year", "month"])
+    return path, base.schema
+
+
+def test_merge_rows_job_budget(spark, tmp_path):
+    """``sinks.merge_rows`` probes nothing: the duplicate-key check,
+    the touched-partition collect and the one upsert write, whose row
+    count also answers emptiness. Pinned exactly: a probe that comes
+    back adds a job."""
+    from test_tables import _jobs
+
+    from usgs_earthquake_data_pipeline_spark.sinks import (
+        merge_rows,
+        read_partitioned_table,
+    )
+
+    path, schema = _merge_rows_table(spark, tmp_path)
+    updates = spark.createDataFrame([(2, 2024, 1, "B"), (9, 2024, 2, "new")], schema)
+    wrote = []
+    assert _jobs(
+        spark, "merge_rows_budget",
+        lambda: wrote.append(merge_rows(spark, path, updates, ["id"])),
+    ) == MERGE_ROWS_JOBS
+    assert wrote == [True]
+    got = {(r.id, r.val) for r in read_partitioned_table(spark, path).collect()}
+    assert got == {(1, "a"), (2, "B"), (3, "c"), (9, "new")}
+
+
+def test_merge_rows_empty_updates_is_a_noop(spark, tmp_path):
+    """Empty updates touch no partition: False, and the table's files
+    and rows stay as they were."""
+    from test_sinks import _listing
+
+    from usgs_earthquake_data_pipeline_spark.sinks import (
+        merge_rows,
+        read_partitioned_table,
+    )
+
+    path, schema = _merge_rows_table(spark, tmp_path)
+    before = _listing(path)
+    assert merge_rows(spark, path, spark.createDataFrame([], schema), ["id"]) is False
+    assert _listing(path) == before
+    assert read_partitioned_table(spark, path).count() == 3

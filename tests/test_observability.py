@@ -1,5 +1,6 @@
 """Observation-API pipeline metrics: counters ride the write job
-(no second scan) and survive the sinks' pre-write probes."""
+(no second scan) and survive the pre-write probe of the sink paths
+that still probe."""
 
 from __future__ import annotations
 
@@ -49,22 +50,24 @@ def test_ingest_upsert_path_records_metrics(spark, tmp_path):
 
 
 def test_sink_observation_not_poisoned_by_isempty_probe(spark, tmp_path):
-    """The sink attaches the observation AFTER its isEmpty probe; the
-    captured metrics must reflect the full write, not the limit-1
-    probe scan."""
+    """The captured metrics reflect the full write on both kinds of
+    sink path: a partitioned append, which runs no probe, and a static
+    overwrite, which probes with ``isEmpty`` first and attaches the
+    observation after it, not the limit-1 probe scan."""
     df = spark.range(100).selectExpr(
         "id", "CAST(id % 3 AS INT) AS year", "CAST(id % 2 AS INT) AS month"
     )
-    obs = Observation("probe_check")
     from pyspark.sql import functions as F
 
-    ok = sinks.save_partitioned_table(
-        df, str(tmp_path / "t"), mode="append",
-        partition_cols=["year", "month"],
-        observation=obs, metrics=[F.count(F.lit(1)).alias("rows")],
-    )
-    assert ok
-    assert obs.get["rows"] == 100
+    for mode in ("append", "overwrite"):
+        obs = Observation(f"probe_check_{mode}")
+        ok = sinks.save_partitioned_table(
+            df, str(tmp_path / mode), mode=mode,
+            partition_cols=["year", "month"],
+            observation=obs, metrics=[F.count(F.lit(1)).alias("rows")],
+        )
+        assert ok
+        assert obs.get["rows"] == 100, mode
 
 
 def test_empty_window_leaves_metrics_empty(spark, tmp_path):

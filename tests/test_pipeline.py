@@ -299,15 +299,16 @@ def _window_jobs(spark, tmp_path, name, n_events):
 
 def test_window_job_budget_independent_of_page_count(spark, tmp_path):
     """One write per window: a 1-page and a 3-page window each launch
-    exactly two Spark jobs, the sink's ``isEmpty`` probe and the write.
-    The window is driver-held, so no sampling job or map stage runs."""
-    assert _window_jobs(spark, tmp_path, "one_page", 5) == 2
-    assert _window_jobs(spark, tmp_path, "three_pages", 25) == 2
+    exactly one Spark job, the write, which counts its own rows, so the
+    sink runs no ``isEmpty`` probe. The window is driver-held, so no
+    sampling job or map stage runs."""
+    assert _window_jobs(spark, tmp_path, "one_page", 5) == 1
+    assert _window_jobs(spark, tmp_path, "three_pages", 25) == 1
 
 
 def test_run_etl_job_budget_and_labels(spark, tmp_path):
-    """A one-year backfill with one 3-page month launches 6 jobs: the
-    window's probe and write, the silver aggregation's map stage and
+    """A one-year backfill with one 3-page month launches 5 jobs: the
+    window's write, the silver aggregation's map stage and
     collect, and one write per fact; the bronze read infers nothing.
     Every job carries a description naming its pipeline layer (read
     back from the status store)."""
@@ -335,8 +336,8 @@ def test_run_etl_job_budget_and_labels(spark, tmp_path):
         if job.jobId() in ids:
             desc = job.description()
             descs.append(desc.get() if desc.isDefined() else None)
-    assert len(ids) == len(descs) == 6, descs
-    assert descs.count("ingest 2020-01-01..2020-02-01") == 2, descs
+    assert len(ids) == len(descs) == 5, descs
+    assert descs.count("ingest 2020-01-01..2020-02-01") == 1, descs
     assert descs.count("silver aggregate") == 2, descs
     assert descs.count("silver write yearly") == 1, descs
     assert descs.count("silver write monthly") == 1, descs

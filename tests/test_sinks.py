@@ -1,5 +1,6 @@
-"""Sink tests: partitioned round-trip with pruning, empty-skip,
-invalid mode, CSV/JSON exports, foreachPartition serving sink."""
+"""Sink tests: partitioned round-trip with pruning, empty-skip (F3,
+with and without a probe), invalid mode, CSV/JSON exports,
+foreachPartition serving sink."""
 
 from __future__ import annotations
 
@@ -482,29 +483,38 @@ def test_upsert_never_sets_the_session_overwrite_mode(spark, events, tmp_path, m
     assert spark.conf.get(key).lower() == "static"
 
 
+def _window_events(spark):
+    """An ingest window as the pipeline lands it: one page of 40
+    features flattened by ``events_from_geojson_strings``, a
+    driver-held frame whose flatten Catalyst cannot fold away, so even
+    a limit-1 probe of it is a Spark job."""
+    from usgs_earthquake_data_pipeline_spark.sources.geojson import (
+        events_from_geojson_strings,
+    )
+
+    features = [
+        {
+            "id": f"e{i}",
+            # every 20 days from 2020-01-01: 40 events over 27 months
+            "properties": {"mag": 1.5, "time": 1577836800000 + i * 20 * 86_400_000,
+                           "tsunami": i % 2},
+            "geometry": {"coordinates": [1.0, 2.0] + [3.0] * (i % 2)},
+        }
+        for i in range(40)
+    ]
+    return events_from_geojson_strings(spark, [json.dumps({"features": features})])
+
+
 def test_declared_schema_read_launches_no_job(spark, tmp_path):
     """Reading bronze by its declared schema skips footer inference
     (a Spark job) and yields the inferring read's schema, column
     order and rows."""
     from usgs_earthquake_data_pipeline_spark.schema import USGS_EVENTS_SCHEMA
-    from usgs_earthquake_data_pipeline_spark.sources.geojson import (
-        events_from_geojson_strings,
-    )
 
     if sinks.TABLE_FORMAT != "parquet":
         pytest.skip("a Delta table takes its schema from its log")
-    features = [
-        {
-            "id": f"e{i}",
-            # every 20 days from 2020-01-01: 40 events over 27 months
-            "properties": {"mag": 1.5, "time": 1577836800000 + i * 20 * 86_400_000},
-            "geometry": {"coordinates": [1.0, 2.0] + [3.0] * (i % 2)},
-        }
-        for i in range(40)
-    ]
     path = str(tmp_path / "bronze")
-    events = events_from_geojson_strings(spark, [json.dumps({"features": features})])
-    assert sinks.save_partitioned_table(events, path)
+    assert sinks.save_partitioned_table(_window_events(spark), path)
     sc = spark.sparkContext
     sc.setJobGroup("declared_read", "declared_read")
     try:
@@ -518,3 +528,111 @@ def test_declared_schema_read_launches_no_job(spark, tmp_path):
     inferred = sinks.read_partitioned_table(spark, path)
     assert declared_schema == inferred.schema
     assert sorted(map(tuple, declared.collect())) == sorted(map(tuple, inferred.collect()))
+
+
+def _listing(path):
+    """Every file under ``path`` with its size, relative to ``path``."""
+    return sorted(
+        (os.path.relpath(os.path.join(root, f), path), os.path.getsize(os.path.join(root, f)))
+        for root, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def _empty_inputs(spark, tmp_path):
+    """Empty frames of the three input kinds: driver-held, an RDD scan
+    and a file scan whose filter drops every row."""
+    src = str(tmp_path / "src")
+    assert sinks.save_partitioned_table(_arrow_events(spark), src)
+    return {
+        "driver_held": _arrow_events(spark).limit(0),
+        "rdd": spark.createDataFrame([], "id long, year long, month long, value double"),
+        "file_scan": sinks.read_partitioned_table(spark, src).filter(F.col("id") < 0),
+    }
+
+
+def test_empty_append_and_upsert_leave_an_existing_table_unchanged(spark, tmp_path):
+    """F3 without a probe: an empty append or upsert onto an existing
+    table returns False and leaves its files (names and sizes) and its
+    rows as they were."""
+    path = str(tmp_path / "t")
+    assert sinks.save_partitioned_table(_arrow_events(spark), path)
+    files = _listing(path)
+    rows = sorted(map(tuple, sinks.read_partitioned_table(spark, path).collect()))
+    for kind, empty in _empty_inputs(spark, tmp_path).items():
+        assert sinks.save_partitioned_table(empty, path) is False, kind
+        assert sinks.upsert_partitions(empty, path) is False, kind
+        assert _listing(path) == files, kind
+    back = sinks.read_partitioned_table(spark, path)
+    assert sorted(map(tuple, back.collect())) == rows
+
+
+def test_empty_append_and_upsert_to_a_new_path_leave_no_path(spark, tmp_path):
+    for kind, empty in _empty_inputs(spark, tmp_path).items():
+        appended = str(tmp_path / f"append_{kind}")
+        upserted = str(tmp_path / f"upsert_{kind}")
+        assert sinks.save_partitioned_table(empty, appended) is False, kind
+        assert sinks.upsert_partitions(empty, upserted) is False, kind
+        assert not os.path.exists(appended), (kind, _listing(appended))
+        assert not os.path.exists(upserted), (kind, _listing(upserted))
+
+
+def test_empty_write_keeps_a_pre_existing_directory(spark, tmp_path):
+    """Only a path the write itself created is removed."""
+    path = tmp_path / "made_by_caller"
+    path.mkdir()
+    (path / "_SUCCESS").write_text("")
+    empty = _arrow_events(spark).limit(0)
+    assert sinks.save_partitioned_table(empty, str(path)) is False
+    assert sinks.upsert_partitions(empty, str(path)) is False
+    assert os.path.exists(path / "_SUCCESS")
+
+
+def test_empty_static_overwrite_leaves_the_table_intact(spark, tmp_path):
+    """A static overwrite deletes its target before writing, so it
+    still probes: empty input leaves the table as it was."""
+    path = str(tmp_path / "t")
+    assert sinks.save_partitioned_table(_arrow_events(spark), path)
+    files = _listing(path)
+    empty = _arrow_events(spark).limit(0)
+    assert sinks.save_partitioned_table(empty, path, mode="overwrite") is False
+    assert _listing(path) == files
+    assert sinks.read_partitioned_table(spark, path).count() == 120
+
+
+@pytest.mark.parametrize("write", ["append", "upsert"])
+def test_driver_held_landing_is_one_job_that_counts_its_rows(spark, tmp_path, write):
+    """A non-empty append or upsert of an ingest window launches
+    exactly one Spark job, the write, and the Observation riding it
+    counts the rows that land."""
+    from pyspark.sql import Observation
+
+    from test_tables import _jobs
+
+    df = _window_events(spark)
+    path = str(tmp_path / "t")
+    obs = Observation(f"landing_{write}")
+    kwargs = dict(observation=obs, metrics=[F.count(F.lit(1)).alias("rows")])
+    sink = sinks.save_partitioned_table if write == "append" else sinks.upsert_partitions
+    wrote = []
+    assert _jobs(spark, f"one_job_{write}", lambda: wrote.append(sink(df, path, **kwargs))) == 1
+    assert wrote == [True]
+    assert obs.get["rows"] == sinks.read_partitioned_table(spark, path).count() == 40
+
+
+def test_silver_schemas_are_the_declared_fact_schemas(spark, tmp_path):
+    """A3's and A4's schemas over a bronze read by USGS_EVENTS_SCHEMA
+    are the declared fact schemas ``build_silver_layer`` builds with."""
+    from usgs_earthquake_data_pipeline_spark.schema import (
+        FACT_TSUNAMI_MONTHLY_SCHEMA,
+        FACT_TSUNAMI_YEARLY_SCHEMA,
+        USGS_EVENTS_SCHEMA,
+    )
+
+    if sinks.TABLE_FORMAT != "parquet":
+        pytest.skip("a Delta table takes its schema from its log")
+    path = str(tmp_path / "bronze")
+    assert sinks.save_partitioned_table(_window_events(spark), path)
+    bronze = sinks.read_partitioned_table(spark, path, schema=USGS_EVENTS_SCHEMA)
+    assert silver.fact_tsunami_yearly(bronze).schema == FACT_TSUNAMI_YEARLY_SCHEMA
+    assert silver.fact_tsunami_monthly(bronze).schema == FACT_TSUNAMI_MONTHLY_SCHEMA

@@ -46,11 +46,12 @@ def with_quality_observation(
     ``observation.get`` after that action completes.
 
     ``Observation.get`` captures the FIRST action that executes the
-    CollectMetrics node — so never attach upstream of a sink that
-    probes the DataFrame first (``isEmpty`` is a limit-1 partial scan
-    and would capture rows=0/1). The partitioned sinks instead take
-    ``observation``/``metrics`` parameters and attach them after
-    their probes, immediately before the write action."""
+    CollectMetrics node. A partitioned append or upsert is one action,
+    the write, so attaching upstream of it is safe. A static overwrite
+    or an unpartitioned write probes with ``isEmpty`` first, a limit-1
+    partial scan that would capture rows=0/1; for any sink, pass
+    ``observation``/``metrics`` to it instead, and it attaches them
+    after any probe, immediately before the write."""
     obs = Observation(name)
     return df.observe(obs, *quality_metrics()), obs
 

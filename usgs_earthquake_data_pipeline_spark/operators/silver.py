@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..observability import job_description
+from ..schema import FACT_TSUNAMI_MONTHLY_SCHEMA, FACT_TSUNAMI_YEARLY_SCHEMA
 from ..session import TABLE_FORMAT
 
 
@@ -103,7 +104,9 @@ def build_silver_layer(
     partitioned by year / year+month — reference
     usgs_tsunami_count_fact_silver.py:57-72,127-142) from one bronze
     aggregation (module docstring). Returns the two facts as
-    driver-backed frames with the A3/A4 schemas."""
+    driver-backed frames with the declared fact schemas
+    (``schema.FACT_TSUNAMI_YEARLY_SCHEMA`` / ``_MONTHLY_SCHEMA``), which
+    are A3's and A4's over a bronze read by ``USGS_EVENTS_SCHEMA``."""
     spark = events.sparkSession
     with job_description(spark, "silver aggregate"):
         monthly_rows = (
@@ -118,9 +121,8 @@ def build_silver_layer(
         .select(["year", "tsunami_monthly_count_sum"])
         .rename_columns(["year", "tsunami_yearly_count"])
     )
-    # reading a schema plans the query but launches no job
-    yearly = spark.createDataFrame(yearly_rows, fact_tsunami_yearly(events).schema)
-    monthly = spark.createDataFrame(monthly_rows, fact_tsunami_monthly(events).schema)
+    yearly = spark.createDataFrame(yearly_rows, FACT_TSUNAMI_YEARLY_SCHEMA)
+    monthly = spark.createDataFrame(monthly_rows, FACT_TSUNAMI_MONTHLY_SCHEMA)
     with job_description(spark, "silver write yearly"):
         _write_fact(yearly, yearly_path, ["year"], yearly_rows.num_rows)
     with job_description(spark, "silver write monthly"):

@@ -174,11 +174,11 @@ def ingest_window_paged(
     holds one window's page bodies (at most pages x ``limit``
     features) until the landing, rather than one page.
 
-    The landing costs two Spark jobs whatever the page count: the
-    sink's ``isEmpty`` probe and the write. The flattened window is
-    driver-held, so one task writes it with no range exchange
-    (``sinks.clustering_sort``). Both jobs carry the description
-    ``ingest <start>..<end>``.
+    The landing costs one Spark job whatever the page count: the
+    write, which counts its own rows, so the sink needs no ``isEmpty``
+    probe. The flattened window is driver-held, so one task writes it
+    with no range exchange (``sinks.clustering_sort``). The job carries
+    the description ``ingest <start>..<end>``.
 
     ``idempotent=True`` lands the window with a partition-level upsert
     instead of an append: re-running the same window replaces its

@@ -29,6 +29,18 @@ rows the driver already holds (every leaf of its plan a
 ``LocalRelation``, such as an ingest window's pages) skips the range
 exchange: one task writes it, so it still lands one file per
 partition, without the sampling job and the map stage.
+
+Empty input (F3) costs no probe on the writes where it is a no-op: a
+partitioned append and the dynamic-overwrite upsert write no data file
+for zero rows, so they count their rows with an Observation riding the
+one write job (``_save_counted``) and report False on a zero count,
+removing the table path again if that write created it and left only
+commit markers there. Where an empty write is NOT a no-op the sink still
+probes with ``isEmpty`` first, a Spark job of its own: a static
+overwrite (Spark deletes the target before writing) and an
+unpartitioned write (Spark writes one empty part file). A caller's
+``observation``/``metrics`` are attached inside the sink, next to the
+row count and after any probe, so they always describe the write job.
 """
 
 from __future__ import annotations
@@ -39,7 +51,8 @@ import re
 from collections.abc import Callable, Iterator, Mapping, Sequence
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -122,17 +135,27 @@ def save_partitioned_table(
     partition pruning).
 
     Returns True when data was written, False on empty input, which
-    is never written (the reference's F3 ingest semantics). Raises
-    ValueError on an invalid mode (reference
+    never creates or changes a table (the reference's F3 ingest
+    semantics). Raises ValueError on an invalid mode (reference
     save_to_raw_delta_prod.py:127-128).
+
+    A partitioned append launches ONE Spark job, the write: it counts
+    its own rows (``_save_counted``) instead of probing first. A static
+    ``mode="overwrite"`` and an unpartitioned write probe with
+    ``isEmpty`` before writing, because for them an empty write is not
+    a no-op (module docstring). With Delta, an empty partitioned append
+    would commit a version that adds no file — the rows are unchanged
+    but the history gains a version, and to a new path the
+    ``_delta_log`` directory stays; this is unverified here, as
+    delta-spark is not installed.
 
     ``observation`` + ``metrics`` (observability.py): the aggregate
     columns are attached to the WRITE job itself, so data-quality
-    counters cost no second scan. They must attach here — inside the
-    sink, after the ``isEmpty`` probe — because attaching upstream
-    would let that probe (a limit-1 partial scan) be the observed
-    DataFrame's first action and capture garbage partial metrics.
-    Read ``observation.get`` only when this returns True.
+    counters cost no second scan. Passing them here rather than
+    attaching upstream keeps them off the probe of the two probing
+    paths, which would otherwise be the observed DataFrame's first
+    action and capture limit-1 partial metrics. Read
+    ``observation.get`` only when this returns True.
 
     ``enforce_compatible=True`` turns schema evolution into a GATED
     deploy: before an append/merge onto an existing table, the new
@@ -188,20 +211,66 @@ def save_partitioned_table(
                 raise ValueError(
                     "incompatible schema evolution: " + "; ".join(diff.breaking)
                 )
-    if df.isEmpty():
+    probe = mode == "overwrite" or not partition_cols
+    if probe and df.isEmpty():
         return False
     out = clustering_sort(df, partition_cols, cluster_cols) if partition_cols else df
     if observation is not None:
         out = out.observe(observation, *metrics)
-    writer = out.write.format(table_format or TABLE_FORMAT).mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    if merge_schema:
-        # K6: schema evolution (delta's mergeSchema; parquet accepts and
-        # resolves on read via mergeSchema read option)
-        writer = writer.option("mergeSchema", "true")
-    writer.save(path)
-    return True
+
+    def write(frame: DataFrame) -> None:
+        writer = frame.write.format(table_format or TABLE_FORMAT).mode(mode)
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        if merge_schema:
+            # K6: schema evolution (delta's mergeSchema; parquet accepts and
+            # resolves on read via mergeSchema read option)
+            writer = writer.option("mergeSchema", "true")
+        writer.save(path)
+
+    if probe:
+        write(out)
+        return True
+    return _save_counted(out, path, write)
+
+
+def _save_counted(out: DataFrame, path: str, write: Callable[[DataFrame], None]) -> bool:
+    """Run ``write``, one write action of ``out`` to ``path`` on which
+    empty input writes no data file, with a row count riding that job.
+    Returns whether any row was written. After an empty write, a path
+    this call created is removed again if it holds only commit markers
+    (``_drop_marker_only_dir``), so empty input creates no table."""
+    jvm, fs = _fs_for(out.sparkSession, path)
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    existed = fs.exists(hpath)
+    counted = Observation()
+    write(out.observe(counted, F.count(F.lit(1)).alias("rows")))
+    if counted.get["rows"]:
+        return True
+    if not existed:
+        _drop_marker_only_dir(fs, hpath)
+    return False
+
+
+def _drop_marker_only_dir(fs, hpath) -> None:
+    """Delete directory ``hpath`` if it holds only commit-marker files:
+    names starting with ``_`` or ``.``, such as ``_SUCCESS`` and its
+    ``.crc`` sidecar. Any other entry keeps it, a directory too
+    (another writer's ``_temporary`` is one). The directory itself is
+    deleted non-recursively, so if a file lands meanwhile the delete
+    fails and the path stays."""
+    entries = fs.listStatus(hpath)
+    if any(
+        e.isDirectory() or not e.getPath().getName().startswith(("_", "."))
+        for e in entries
+    ):
+        return
+    for e in entries:
+        fs.delete(e.getPath(), False)
+    try:
+        fs.delete(hpath, False)
+    except Py4JJavaError:
+        pass
 
 
 def read_partitioned_table(
@@ -244,25 +313,30 @@ def upsert_partitions(
 
     At scale: the write touches exactly the affected partitions; the
     clustering sort keeps file counts low within each.
+
+    Returns True when rows were written, False on empty input. A
+    dynamic overwrite of zero rows replaces no partition, so the
+    upsert launches ONE Spark job, the write, which counts its own
+    rows (``_save_counted``); no probe runs. ``observation`` +
+    ``metrics`` ride that job as in ``save_partitioned_table``.
     """
-    if df.isEmpty():
-        return False
     partition_cols = partition_cols if partition_cols is not None else RAW_PARTITION_COLS
     out = clustering_sort(df, partition_cols, cluster_cols)
     if observation is not None:
-        # after the isEmpty probe, before the only remaining action —
-        # see save_partitioned_table's observation note
         out = out.observe(observation, *metrics)
-    # a writer option, not the session conf: flipping the shared conf
-    # would make any overwrite another thread runs meanwhile dynamic
-    (
-        out.write.format(table_format or TABLE_FORMAT)
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .save(path)
-    )
-    return True
+
+    def write(frame: DataFrame) -> None:
+        # a writer option, not the session conf: flipping the shared conf
+        # would make any overwrite another thread runs meanwhile dynamic
+        (
+            frame.write.format(table_format or TABLE_FORMAT)
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_cols)
+            .save(path)
+        )
+
+    return _save_counted(out, path, write)
 
 
 def compact_partitioned_table(
@@ -494,14 +568,14 @@ def merge_rows(
     key would make the merge result order-dependent).
     """
     partition_cols = partition_cols if partition_cols is not None else RAW_PARTITION_COLS
-    if updates.isEmpty():
-        return False
     dup = (
         updates.groupBy(*key_cols).count().filter(F.col("count") > 1).limit(1).count()
     )
     if dup:
         raise ValueError(f"merge_rows: duplicate keys in updates on {key_cols}")
     touched = updates.select(*partition_cols).distinct().collect()
+    if not touched:  # no partition touched: the updates are empty
+        return False
     current = read_partitioned_table(spark, path, table_format)
     pred = F.lit(False)
     for row in touched:

@@ -131,9 +131,9 @@ def events_from_geojson_strings(spark: SparkSession, docs: list[str]) -> DataFra
     The documents reach the JVM as one Arrow string column, which
     Spark decodes JVM-side into a ``LocalRelation`` leaf: no pickled
     Python rows and no Python worker on any job that reads the frame
-    (the landing's ``isEmpty`` probe and its write). Because every
-    leaf of the frame is local, the sinks write it from one task with
-    no range exchange (``sinks.clustering_sort``)."""
+    (the landing's one job, its write). Because every leaf of the
+    frame is local, the sinks write it from one task with no range
+    exchange (``sinks.clustering_sort``)."""
     table = pa.table({"value": pa.array(docs, pa.string())})
     df = spark.createDataFrame(table, "value string")
     return geojson_docs_to_events(df, "value")
