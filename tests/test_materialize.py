@@ -1,42 +1,33 @@
-"""The scale-safe materialization policy (r13 verdict item 3).
+"""The one materialization policy.
 
 Every multiply-consumed frame in the operators/entries is pinned via
-``materialize.materialize``; these tests pin the policy switch itself:
+``materialize.materialize``; these tests pin the policy itself:
 
-- default (``local``) mode IS ``localCheckpoint`` — lineage truncated
-  to an RDD scan, identical to the round-13 plans;
-- ``persist`` mode keeps lineage (an InMemoryRelation appears, the
-  source stays under it — recomputable on block loss, guide §5);
-- ``reliable`` mode writes a reliable checkpoint into the configured
-  dir and truncates lineage like ``local``;
-- results are identical across modes (the knob changes fault
-  tolerance, never values);
-- an unknown mode fails loudly, never silently degrades;
-- a requested checkpoint dir the context cannot adopt is logged.
+- the mechanism follows the master: ``localCheckpoint`` on a local
+  master, reliable ``checkpoint`` on any other;
+- both truncate lineage to an RDD scan and give identical results;
+- ``release`` drops a pin's blocks and leaves later pins readable;
+- nothing in the package or ``tools/`` pins a frame any other way.
 """
 
 from __future__ import annotations
 
-import logging
+import ast
+from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
 from usgs_earthquake_data_pipeline_spark import materialize as materialize_module
-from usgs_earthquake_data_pipeline_spark.materialize import (
-    CONF_KEY,
-    DIR_CONF_KEY,
-    materialize,
-    materialize_mode,
-)
+from usgs_earthquake_data_pipeline_spark.materialize import materialize, release
 
 
-@pytest.fixture
-def mode_conf(spark):
-    """Restore the session's materialize mode after each test (the
-    suite's session is shared)."""
-    yield spark
-    spark.conf.unset(CONF_KEY)
+def _reliable(spark, ckpt, monkeypatch):
+    """Take the non-local branch on the shared local session, with the
+    context's checkpoint dir at ``ckpt``."""
+    monkeypatch.setattr(materialize_module, "_local_master", lambda sc: False)
+    spark.sparkContext.setCheckpointDir(str(ckpt))
 
 
 def _df(spark):
@@ -45,96 +36,98 @@ def _df(spark):
     )
 
 
+def _rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _pinned_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize(
+    "master, local",
+    [
+        ("local", True),
+        ("local[4]", True),
+        ("local[*]", True),
+        ("local[4,2]", True),
+        ("local-cluster[2,1,1024]", False),
+        ("spark://host:7077", False),
+        ("yarn", False),
+        ("k8s://https://host:6443", False),
+    ],
+)
+def test_mechanism_follows_the_master(master, local):
+    assert materialize_module._local_master(SimpleNamespace(master=master)) is local
+
+
 def test_default_mode_is_local(spark):
-    assert materialize_mode(spark) == "local"
+    """The suite's own ``local[N]`` session takes ``localCheckpoint``:
+    the pin is a block-backed persistent RDD."""
+    assert materialize_module._local_master(spark.sparkContext)
+    assert _rdd_id(materialize(_df(spark))) in _pinned_ids(spark)
 
 
-def test_local_truncates_lineage(mode_conf):
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "local")
+def test_local_truncates_lineage(spark):
     out = materialize(_df(spark), eager=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
     assert "Range" not in plan  # source subtree gone — lineage cut
 
 
-def test_persist_keeps_lineage(mode_conf):
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "persist")
-    df = _df(spark)
-    out = materialize(df, eager=True)
-    try:
-        plan = out._jdf.queryExecution().withCachedData().toString()
-        assert "InMemoryRelation" in plan
-        # lineage retained: the source Range sits under the cache, so
-        # a lost block recomputes instead of failing the job
-        assert "Range" in plan
-        assert out.storageLevel.useDisk and out.storageLevel.useMemory
-    finally:
-        out.unpersist()
-
-
-def test_reliable_checkpoints_to_dir(mode_conf, tmp_path):
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "reliable")
-    spark.conf.set(
-        "spark.graft.checkpoint.dir", str(tmp_path / "ckpt")
-    )
+def test_reliable_checkpoints_to_dir(spark, tmp_path, monkeypatch):
+    _reliable(spark, tmp_path, monkeypatch)
     out = materialize(_df(spark), eager=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
-    ckpt_dir = spark.sparkContext._jsc.sc().getCheckpointDir()
-    assert ckpt_dir.isDefined()
-    # NOTE: setCheckpointDir is once-per-context in practice (a shared
-    # test session may have pinned it already); the mode contract is
-    # "a reliable dir exists and the checkpoint succeeded", which the
-    # Defined check plus the materialized result pin.
+    assert "Range" not in plan
+    # the checkpoint files sit under the context's dir, not in blocks
+    assert any(tmp_path.rglob(f"rdd-{_rdd_id(out)}"))
+    assert _rdd_id(out) not in _pinned_ids(spark)
     assert out.count() == 100
 
 
-def test_results_identical_across_modes(mode_conf):
-    spark = mode_conf
+def test_results_identical_across_modes(spark, tmp_path, monkeypatch):
+    """Local and reliable pins differ in fault tolerance, never in rows."""
     expected = sorted(r.id for r in _df(spark).collect())
-    for mode in ("local", "persist", "reliable"):
-        spark.conf.set(CONF_KEY, mode)
-        out = materialize(_df(spark), eager=False)
-        got = sorted(r.id for r in out.collect())
-        assert got == expected, mode
-        if mode == "persist":
-            out.unpersist()
+    local = sorted(r.id for r in materialize(_df(spark), eager=False).collect())
+    _reliable(spark, tmp_path, monkeypatch)
+    checked = sorted(r.id for r in materialize(_df(spark), eager=False).collect())
+    assert local == checked == expected
 
 
-def test_unknown_mode_fails_loudly(mode_conf):
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "everywhere")
-    with pytest.raises(ValueError, match="everywhere"):
-        materialize(_df(spark))
+def test_released_pin_leaves_the_session(spark):
+    """A loop round: pin, pin the next round over it, release the
+    first. Its RDD leaves ``getPersistentRDDs`` and the rounds after it
+    still collect."""
+    first = materialize(_df(spark))
+    second = materialize(first.select("id", (F.col("k") + 1).alias("k")))
+    release(first)
+    assert _rdd_id(first) not in _pinned_ids(spark)
+    assert _rdd_id(second) in _pinned_ids(spark)
+    third = materialize(second.select("id", (F.col("k") * 2).alias("k")))
+    release(second)
+    got = sorted((r.id, r.k) for r in third.collect())
+    assert got == [(i, (i % 7 + 1) * 2) for i in range(100)]
 
 
-def test_reliable_warns_when_requested_dir_is_not_the_contexts(
-    mode_conf, tmp_path, caplog
-):
-    """The checkpoint dir is once per SparkContext: a different
-    requested dir cannot take effect, and that must be logged with
-    both dirs rather than ignored silently."""
-    spark = mode_conf
-    spark.conf.set(CONF_KEY, "reliable")
-    try:
-        spark.conf.set(DIR_CONF_KEY, str(tmp_path / "first"))
-        materialize(_df(spark), eager=True)  # pins the context's dir
-        current = spark.sparkContext._jsc.sc().getCheckpointDir().get()
-        other = str(tmp_path / "elsewhere")
-        spark.conf.set(DIR_CONF_KEY, other)
-        with caplog.at_level(logging.WARNING, logger=materialize_module.__name__):
-            assert materialize(_df(spark), eager=True).count() == 100
-        warned = [r.getMessage() for r in caplog.records]
-        assert any(other in m and current in m for m in warned), warned
-
-        # requesting the dir the context already uses is silent
-        caplog.clear()
-        spark.conf.set(DIR_CONF_KEY, current.rsplit("/", 1)[0])
-        with caplog.at_level(logging.WARNING, logger=materialize_module.__name__):
-            materialize(_df(spark), eager=True)
-        assert not caplog.records
-    finally:
-        spark.conf.unset(DIR_CONF_KEY)
+def test_only_materialize_checkpoints():
+    """A direct ``.localCheckpoint(`` / ``.checkpoint(`` call anywhere
+    in the package or ``tools/`` would pin outside the one policy."""
+    root = Path(__file__).resolve().parents[1]
+    own = Path(materialize_module.__file__).resolve()
+    found = []
+    for path in sorted(
+        [*root.joinpath("usgs_earthquake_data_pipeline_spark").rglob("*.py"),
+         *root.joinpath("tools").rglob("*.py")]
+    ):
+        if path.resolve() == own:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                found.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not found, found

@@ -656,11 +656,13 @@ def test_merge_join_state_empty_deltas_is_identity(spark):
     assert [tuple(r) for r in out] == [(1, "a", 1.0)]
 
 
-#: ``sinks.merge_rows``' jobs on the three-row table below: the
-#: duplicate-key check, the touched-partition collect, the footer read
-#: of the table and the upsert's range-sampled write (with the probes
-#: of ``updates`` and of the merged frame it was 17)
-MERGE_ROWS_JOBS = 12
+#: ``sinks.merge_rows``' jobs on the three-row table below: the one
+#: aggregate over ``updates`` that answers the duplicate-key check and
+#: the touched partitions (3), the footer read of the table (1) and the
+#: upsert's range-sampled write (6). A separate duplicate-key pass and
+#: partition collect made it 12; the probes of ``updates`` and of the
+#: merged frame before them, 17.
+MERGE_ROWS_JOBS = 10
 
 
 def _merge_rows_table(spark, tmp_path):
@@ -676,10 +678,10 @@ def _merge_rows_table(spark, tmp_path):
 
 
 def test_merge_rows_job_budget(spark, tmp_path):
-    """``sinks.merge_rows`` probes nothing: the duplicate-key check,
-    the touched-partition collect and the one upsert write, whose row
-    count also answers emptiness. Pinned exactly: a probe that comes
-    back adds a job."""
+    """``sinks.merge_rows`` probes nothing: one aggregate answers the
+    duplicate-key check and the touched partitions, and the one upsert
+    write's row count answers emptiness. Pinned exactly: a probe that
+    comes back adds a job."""
     from test_tables import _jobs
 
     from usgs_earthquake_data_pipeline_spark.sinks import (
@@ -697,6 +699,39 @@ def test_merge_rows_job_budget(spark, tmp_path):
     assert wrote == [True]
     got = {(r.id, r.val) for r in read_partitioned_table(spark, path).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c"), (9, "new")}
+
+
+def test_merge_rows_keeps_rows_of_a_null_partition(spark, tmp_path):
+    """A touched partition whose values are null is read back
+    null-safely: its rows that ``updates`` does not replace survive the
+    dynamic overwrite of that partition."""
+    from usgs_earthquake_data_pipeline_spark.sinks import (
+        merge_rows,
+        read_partitioned_table,
+        save_partitioned_table,
+    )
+
+    path = str(tmp_path / "tbl")
+    schema = "id string, year int, month int, val double"
+    base = spark.createDataFrame(
+        [("a", 2020, 1, 1.0), ("b", None, None, 2.0), ("c", None, None, 3.0)],
+        schema,
+    )
+    assert save_partitioned_table(base, path, "append", ["year", "month"])
+    updates = spark.createDataFrame(
+        [("b", None, None, 9.0), ("d", 2020, 1, 4.0)], schema
+    )
+    assert merge_rows(spark, path, updates, ["id"])
+    got = {
+        (r.id, r.year, r.month, r.val)
+        for r in read_partitioned_table(spark, path).collect()
+    }
+    assert got == {
+        ("a", 2020, 1, 1.0),
+        ("b", None, None, 9.0),
+        ("c", None, None, 3.0),
+        ("d", 2020, 1, 4.0),
+    }
 
 
 def test_merge_rows_empty_updates_is_a_noop(spark, tmp_path):

@@ -37,8 +37,9 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 N_LISTS = 64
 N_PROBE = 4
@@ -58,6 +59,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from usgs_earthquake_data_pipeline_spark.materialize import materialize
     from usgs_earthquake_data_pipeline_spark.operators import pq as P
     from usgs_earthquake_data_pipeline_spark.operators import similarity as S
     from usgs_earthquake_data_pipeline_spark.session import get_spark
@@ -80,7 +82,7 @@ def main() -> None:
         emb = (
             load_table(spark, sf_dir, "embeddings")
             .repartition(n_cpus)
-            .localCheckpoint()
+            .transform(materialize)
         )
         n = emb.count()
         queries = emb.filter(F.col("vec_id") < N_QUERIES)

@@ -9,11 +9,13 @@ Usage: python tools/cc_chain_rung.py [n_nodes=1000000]
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
+from usgs_earthquake_data_pipeline_spark.materialize import materialize
 from usgs_earthquake_data_pipeline_spark.operators.dedup import (
     resolve_dup_clusters,
     two_phase_components,
@@ -28,7 +30,7 @@ def main() -> None:
         spark.range(n)
         .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
         .repartition(32)
-        .localCheckpoint()
+        .transform(materialize)
     )
     rounds: list[float] = []
     t0 = time.time()
@@ -46,7 +48,7 @@ def main() -> None:
     small = (
         spark.range(2000)
         .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     t0 = time.time()
     try:

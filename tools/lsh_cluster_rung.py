@@ -23,6 +23,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 def run(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
+    from usgs_earthquake_data_pipeline_spark.materialize import materialize
     from usgs_earthquake_data_pipeline_spark.operators.dedup import (
         minhash_lsh_pairs,
         two_phase_components,
@@ -34,7 +35,7 @@ def run(spark, sf_dir: str) -> dict:
     pairs = (
         minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.3)
         .select("id_a", "id_b")
-        .localCheckpoint()
+        .transform(materialize)
     )
     n_pairs = pairs.count()
     t1 = time.perf_counter()

@@ -1,137 +1,56 @@
-"""Scale-safe materialization policy for multiply-consumed frames.
+"""One way to pin a multiply-consumed frame.
 
-Round 13 removed hundreds of redundant subtree evaluations by pinning
-multiply-consumed DataFrames with ``localCheckpoint``. That is the
-right mechanism in local mode (one process; RDD blocks live on the
-driver's own disks), but ``localCheckpoint`` both truncates lineage
-AND stores blocks non-replicated on executor-local storage: on a real
-cluster, losing one executor after materialization fails the job
-instead of recomputing the lost partitions (optimization guide §5 —
-the r13 verdict's item 1). The fix is a policy knob, not a different
-plan: every operator/entry that pins a frame funnels through
-:func:`materialize`, which picks the mechanism from session conf.
+Every operator/entry that pins a frame funnels through
+:func:`materialize`, which picks the mechanism from the one thing that
+decides it, the master:
 
-Modes (``spark.graft.materialize.mode`` session conf, env fallback
-``SPARK_GRAFT_MATERIALIZE``; default ``local``):
+- a local master (``local``, ``local[N]``, ``local[*]``, ``local[N,F]``)
+  gets ``df.localCheckpoint(eager)``. One process, so the blocks live
+  on the driver's own disks; lineage is truncated to an RDD scan.
+- any other master gets ``df.checkpoint(eager)`` into Spark's own
+  checkpoint dir. A cluster must set ``spark.checkpoint.dir`` (HDFS,
+  S3, any store every executor can read), which Spark applies when the
+  context starts; without it the first pin fails with Spark's
+  "checkpoint directory has not been set" error. Executor-local
+  ``localCheckpoint`` blocks would make the loss of one executor fail
+  the job instead of recomputing it; reliable checkpoint files survive
+  that loss, and lineage stays truncated.
 
-- ``local`` — ``df.localCheckpoint(eager)``. The bench/test mode;
-  plans, scan counts and timings identical to the round-13 tree.
-- ``reliable`` — ``df.checkpoint(eager)`` against the reliable
-  checkpoint dir (HDFS/S3 on a cluster: set
-  ``spark.graft.checkpoint.dir`` or ``SPARK_GRAFT_CHECKPOINT_DIR``;
-  defaults to a per-process temp dir so the mode is testable
-  locally). Blocks survive executor loss; lineage still truncated,
-  so very long iterative lineages stay bounded.
-- ``persist`` — ``df.persist(MEMORY_AND_DISK)`` keeping lineage: a
-  lost cache block recomputes from source instead of failing the
-  job. The plan gains an InMemoryRelation (scan counts at the leaves
-  are unchanged — the source subtree remains under it). ``eager``
-  persist is forced with one ``count()`` action, mirroring eager
-  checkpoint semantics.
+Both mechanisms give the same rows; only fault tolerance differs.
 
-Why a *session* conf and not a per-call argument: the right mode is a
-property of the deployment (local bench vs cluster), not of any one
-operator — one switch must flip every pin at once, which is exactly
-what the r13 verdict asked for ("a session-level policy knob").
+Iterative loops pin one frame per round. :func:`release` drops the
+blocks of a pin that a later, already computed pin has replaced, so a
+long session holds one round's pin per loop rather than one per round.
 """
 
 from __future__ import annotations
 
-import logging
-import os
-
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
-
-CONF_KEY = "spark.graft.materialize.mode"
-DIR_CONF_KEY = "spark.graft.checkpoint.dir"
-_VALID = ("local", "reliable", "persist")
-
-logger = logging.getLogger(__name__)
 
 
-def materialize_mode(spark) -> str:
-    """Resolve the active materialization mode: session conf first,
-    then the SPARK_GRAFT_MATERIALIZE env var, default ``local``."""
-    mode = None
-    try:
-        mode = spark.conf.get(CONF_KEY, None)
-    except Exception:  # pragma: no cover - conf access locked down
-        mode = None
-    if not mode:
-        mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
-    if mode not in _VALID:
-        raise ValueError(
-            f"{CONF_KEY}={mode!r}: expected one of {', '.join(_VALID)}"
-        )
-    return mode
-
-
-def _ensure_checkpoint_dir(spark) -> None:
-    """Reliable mode needs ``sc.setCheckpointDir`` before the first
-    ``df.checkpoint()``. Honors spark.graft.checkpoint.dir /
-    SPARK_GRAFT_CHECKPOINT_DIR; falls back to a per-process scratch
-    subdir so the mode runs (and is tested) locally.
-
-    The checkpoint dir is set once per SparkContext. When the context
-    already has one and a different dir is requested, the request
-    cannot take effect; that is logged as a warning naming both dirs,
-    never ignored silently."""
-    sc = spark.sparkContext
-    target = None
-    try:
-        target = spark.conf.get(DIR_CONF_KEY, None)
-    except Exception:  # pragma: no cover
-        target = None
-    if not target:
-        target = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    current = sc._jsc.sc().getCheckpointDir()
-    if current.isDefined():
-        if target and not _is_context_dir_under(sc, current.get(), target):
-            logger.warning(
-                "requested checkpoint dir %s is ignored: the SparkContext "
-                "already checkpoints to %s (set once per context)",
-                target, current.get(),
-            )
-        return
-    if not target:
-        from .session import _scratch_dir
-
-        target = os.path.join(_scratch_dir(), "reliable-checkpoints")
-    sc.setCheckpointDir(target)
-
-
-def _is_context_dir_under(sc, current: str, target: str) -> bool:
-    """``setCheckpointDir(target)`` stores ``<qualified target>/<uuid>``;
-    True when ``current`` is such a child of ``target``."""
-    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
-    requested = hadoop_path(target)
-    fs = requested.getFileSystem(sc._jsc.hadoopConfiguration())
-    return hadoop_path(current).getParent().equals(fs.makeQualified(requested))
+def _local_master(sc) -> bool:
+    return sc.master == "local" or sc.master.startswith("local[")
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Pin a multiply-consumed DataFrame so its subtree executes once,
-    using the session's configured mechanism (module docstring).
-
-    Drop-in replacement for the bare ``df.localCheckpoint(eager)``
-    calls round 13 introduced: in the default ``local`` mode it IS
-    that call, byte-for-byte the same plan."""
-    mode = materialize_mode(df.sparkSession)
-    if mode == "local":
+    """Pin ``df`` so its subtree executes once: ``localCheckpoint`` on a
+    local master, reliable ``checkpoint`` elsewhere (module docstring)."""
+    if _local_master(df.sparkSession.sparkContext):
         return df.localCheckpoint(eager=eager)
-    if mode == "reliable":
-        _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=eager)
-    # persist: lineage retained — recomputable on block loss (§5)
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        out.count()
-    return out
+    return df.checkpoint(eager=eager)
 
 
 def materialize_lazy(df: DataFrame) -> DataFrame:
-    """:func:`materialize` with ``eager=False`` — chainable via
-    ``df.transform(materialize_lazy)``, the drop-in for the round-13
-    ``.localCheckpoint(eager=False)`` call sites."""
+    """:func:`materialize` with ``eager=False``, chainable via
+    ``df.transform(materialize_lazy)``."""
     return materialize(df, eager=False)
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist the RDD under a frame :func:`materialize` returned.
+
+    Only for a pin nothing will read again: a frame still planned over
+    it fails once its blocks are gone. A reliable checkpoint holds no
+    cached blocks, so there it is a no-op (its files are Spark's to
+    clean, ``spark.cleaner.referenceTracking.cleanCheckpoints``)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..materialize import materialize
+from ..materialize import materialize, release
 
 
 def _sq_dist_decimal(a: Column, b: Column) -> Column:
@@ -133,7 +133,7 @@ def kmeans_lloyd(
         .limit(k)
         .select(F.row_number().over(w).alias("list_id"), F.col("v").alias("c"))
     )
-    assigned = None
+    assigned = pinned = None
     for it in range(iterations):
         cent_arr = F.broadcast(
             cents.agg(F.collect_list(F.struct("list_id", "c")).alias("__cents"))
@@ -160,6 +160,9 @@ def kmeans_lloyd(
         )
         if checkpoint_every and (it + 1) % checkpoint_every == 0:
             cents = cents.transform(materialize)
+            if pinned is not None:
+                release(pinned)
+            pinned = cents
     return (
         cents.select(
             "list_id",

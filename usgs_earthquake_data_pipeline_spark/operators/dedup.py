@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from ..materialize import materialize, materialize_lazy
+from ..materialize import materialize, materialize_lazy, release
 
 
 def _widen(df: DataFrame) -> DataFrame:
@@ -634,6 +634,7 @@ def resolve_dup_clusters(
         .withColumn("label", F.col("id"))
     )
     converged = False
+    mat = None
     for _ in range(max_iterations):
         t0 = time.perf_counter() if round_times is not None else 0.0
         neighbor_min = (
@@ -655,7 +656,9 @@ def resolve_dup_clusters(
         # ONE materialization per round: the checkpoint both truncates
         # lineage and serves the convergence probe — a separate
         # changed-count action would re-run the join a second time.
-        mat = updated.transform(materialize)
+        prev, mat = mat, updated.transform(materialize)
+        if prev is not None:
+            release(prev)
         changed = mat.filter(F.col("__changed")).limit(1).count()
         labels = mat.drop("__changed")
         if round_times is not None:
@@ -912,11 +915,13 @@ def two_phase_components(
             )
         )
         new_canon = _norm(small).transform(materialize)
+        release(after_large)
         if round_times is not None:
             round_times.append(time.monotonic() - t0)
         changed = (
             new_canon.exceptAll(canon).unionAll(canon.exceptAll(new_canon))
         ).limit(1).count()
+        release(canon)
         canon = new_canon
         if changed == 0:
             break

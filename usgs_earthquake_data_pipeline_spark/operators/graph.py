@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import materialize, materialize_lazy
+from ..materialize import materialize, materialize_lazy, release
 
 
 def pagerank(
@@ -69,6 +69,7 @@ def pagerank(
     )
     ranks = nodes.withColumn("rank", F.lit(1.0))
     contrib_edges = e.join(outw, "src").transform(materialize_lazy)
+    pinned = None
     for it in range(iterations):
         contribs = (
             contrib_edges.join(
@@ -88,6 +89,9 @@ def pagerank(
         )
         if checkpoint_every and (it + 1) % checkpoint_every == 0:
             ranks = ranks.transform(materialize)
+            if pinned is not None:
+                release(pinned)
+            pinned = ranks
     return ranks
 
 

@@ -24,9 +24,9 @@ Two bounds to know before reusing this operator elsewhere:
   (explode + semi-join on the term set), not |Q| counters.
 - The materialized per-doc frame is corpus-sized (narrow: id, dl,
   tf_0..tf_|Q|). How it is pinned — and the executor-loss story at
-  100 TB — is the session materialization policy
-  (``materialize.py``: localCheckpoint locally; reliable checkpoint
-  or lineage-keeping persist on a cluster).
+  100 TB — is ``materialize.py``'s one policy: localCheckpoint on a
+  local master, reliable checkpoint into ``spark.checkpoint.dir`` on
+  a cluster.
 """
 
 from __future__ import annotations

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
-from ..materialize import materialize, materialize_lazy
+from ..materialize import materialize, materialize_lazy, release
 from ..operators.sketches import KMV_SPACE_SQL as _KMV_SPACE_SQL
 from ..operators.sketches import kmv_hash_sql as _kmv_hash_sql
 from ..sources.tables import load_table
@@ -612,6 +612,7 @@ def _bpe_train(
         .cache()
     )
     out: list[tuple[int, str, int]] = []
+    pinned = None
     try:
         cur = wf
         for it in range(1, k + 1):
@@ -653,6 +654,9 @@ def _bpe_train(
             cur = cur.select(merged.alias("s"), "wf")
             if checkpoint_every and it % checkpoint_every == 0:
                 cur = cur.transform(materialize)
+                if pinned is not None:
+                    release(pinned)
+                pinned = cur
             if round_times is not None:
                 # per-merge wall time for the depth-stress flatness
                 # assertion (each round's one action is the best-pair

@@ -555,25 +555,30 @@ def merge_rows(
     replace existing rows with the same key, new keys append, all
     other rows are untouched.
 
-    Partition-pruned by construction: the partition values present in
-    ``updates`` are collected (tiny — one row per touched partition),
-    only those partitions are read back (partition pruning keeps the
-    scan to the affected slice), survivors = old rows LEFT ANTI JOIN
-    updates on the key, and survivors + updates are written with
-    dynamic partition overwrite. Cost is proportional to the touched
+    Partition-pruned by construction: one collected aggregate over
+    ``updates`` answers both questions asked of it, whether a key
+    repeats and which partitions it touches (tiny: one struct per
+    touched partition). Only those partitions are read back (partition
+    pruning keeps the scan to the affected slice; a null partition
+    value matches null-safely), ``operators.merge.merge_upsert``
+    replaces their rows by key, and the result is written with dynamic
+    partition overwrite. Cost is proportional to the touched
     partitions, never the table; the key anti-join shuffles only the
     affected slice against the (typically broadcastable) update set.
 
     Keys must be unique within ``updates`` (enforced — a duplicate
     key would make the merge result order-dependent).
     """
+    from .operators.merge import merge_upsert
+
     partition_cols = partition_cols if partition_cols is not None else RAW_PARTITION_COLS
-    dup = (
-        updates.groupBy(*key_cols).count().filter(F.col("count") > 1).limit(1).count()
-    )
-    if dup:
+    n, n_keys, touched = updates.agg(
+        F.count(F.lit(1)),
+        F.count_distinct(F.struct(*key_cols)),
+        F.collect_set(F.struct(*partition_cols)),
+    ).first()
+    if n != n_keys:
         raise ValueError(f"merge_rows: duplicate keys in updates on {key_cols}")
-    touched = updates.select(*partition_cols).distinct().collect()
     if not touched:  # no partition touched: the updates are empty
         return False
     current = read_partitioned_table(spark, path, table_format)
@@ -581,13 +586,13 @@ def merge_rows(
     for row in touched:
         clause = F.lit(True)
         for c in partition_cols:
-            clause = clause & (F.col(c) == F.lit(row[c]))
+            clause = clause & F.col(c).eqNullSafe(F.lit(row[c]))
         pred = pred | clause
-    affected = current.filter(pred)
     # no broadcast hint: AQE broadcasts a small update set and falls
     # back to a shuffled anti-join when the updates are themselves big
-    survivors = affected.join(updates.select(*key_cols), key_cols, "left_anti")
-    merged = survivors.unionByName(updates.select(*current.columns))
+    merged = merge_upsert(
+        current.filter(pred), updates, key_cols, duplicate_policy="trusted"
+    )
     return upsert_partitions(
         merged, path, partition_cols=partition_cols, table_format=table_format
     )
