@@ -808,23 +808,21 @@ def test_exact_pairs_memo_invalidates_on_regenerated_data(spark, tmp_path):
     truth set instead of silently reusing the stale checkpoint."""
     import shutil
 
-    from usgs_earthquake_data_pipeline_spark.plans.llm_ops import (
-        _exact_all_pairs_cached,
-    )
+    from usgs_earthquake_data_pipeline_spark.plans.certify import exact_all_pairs
     from tools.gen_testdata import generate
 
     d = str(tmp_path / "sf")
     generate(0.001, d, only={"embeddings"})
-    first = _exact_all_pairs_cached(spark, d)
-    assert _exact_all_pairs_cached(spark, d) is first  # memo hit
+    first = exact_all_pairs(spark, d)
+    assert exact_all_pairs(spark, d) is first  # memo hit
 
     shutil.rmtree(os.path.join(d, "embeddings.parquet"), ignore_errors=True)
     if os.path.isfile(os.path.join(d, "embeddings.parquet")):
         os.remove(os.path.join(d, "embeddings.parquet"))
     generate(0.001, d, seed=7, only={"embeddings"})  # different data
-    second = _exact_all_pairs_cached(spark, d)
+    second = exact_all_pairs(spark, d)
     assert second is not first  # stale truth set recomputed
-    assert _exact_all_pairs_cached(spark, d) is second
+    assert exact_all_pairs(spark, d) is second
 
 
 def test_ivf_delete_compact_entry_and_teeth(spark, sf_dir):
@@ -833,8 +831,9 @@ def test_ivf_delete_compact_entry_and_teeth(spark, sf_dir):
     and the delete theorem has TEETH: a 'delete' that forgets the
     anti-join (serving the full index against the rebuilt one) must
     flip delete_matches_rebuild_ok to False through the same
-    symmetric-exceptAll expression the entry uses."""
+    ``certify.rows_equal_ok`` leg the entry uses."""
     from usgs_earthquake_data_pipeline_spark.plans.catalog import CATALOG
+    from usgs_earthquake_data_pipeline_spark.plans.certify import rows_equal_ok
 
     rows = CATALOG["ann_ivf_delete_compact"].spark_fn(spark, sf_dir).collect()
     assert rows
@@ -853,13 +852,7 @@ def test_ivf_delete_compact_entry_and_teeth(spark, sf_dir):
     # corrupted delete: the anti-join is "forgotten" — full index served
     forgot = S.ivf_search_assigned(assigned, queries, cents, k=5, n_probe=4)
     reb = S.ivf_search_assigned(rebuilt, queries, cents, k=5, n_probe=4)
-    flag = (
-        forgot.exceptAll(reb)
-        .unionAll(reb.exceptAll(forgot))
-        .agg((F.count(F.lit(1)) == 0).alias("ok"))
-        .collect()[0]["ok"]
-    )
-    assert flag is False
+    assert rows_equal_ok(forgot, reb, "ok").first()["ok"] is False
 
 
 def test_two_phase_components_equals_label_propagation(spark, sf_dir):
@@ -897,26 +890,3 @@ def test_two_phase_components_equals_label_propagation(spark, sf_dir):
         for r in D.two_phase_components(multi).collect()
     }
     assert got == {5: 5, 9: 5, 7: 5, 20: 20, 30: 20, 21: 20}
-
-
-def test_clusters_refine_gate_fails_on_unlabeled_endpoint(spark):
-    """dedup_resolve_clusters_lsh's refinement boolean has teeth on
-    both failure shapes: an edge across two exact clusters, and an
-    edge whose endpoint has no exact label at all (an inner join would
-    drop that edge and pass)."""
-    from usgs_earthquake_data_pipeline_spark.plans.llm_ops import (
-        _clusters_refine_exact_ok,
-    )
-
-    exact = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 3), (4, 3)], "id long, canonical_id long"
-    )
-
-    def ok(edges):
-        df = spark.createDataFrame(edges, "id_a long, id_b long")
-        return _clusters_refine_exact_ok(df, exact).first()[0]
-
-    assert ok([(1, 2), (3, 4)]) is True
-    assert ok([(1, 2), (2, 3)]) is False  # merges two exact clusters
-    assert ok([(1, 2), (3, 9)]) is False  # 9 has no exact label
-    assert ok([(9, 1)]) is False

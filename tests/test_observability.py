@@ -38,12 +38,12 @@ def test_ingest_window_records_observed_metrics(spark, tmp_path):
 
 
 def test_ingest_upsert_path_records_metrics(spark, tmp_path):
-    feats = [_feature(i) for i in range(3)]
-    api = FakeApi({"2020-01-01": feats})
+    feats = [_feature(i) for i in range(3)]  # all at 2024-01-01T00:00Z
+    api = FakeApi({"2024-01-01": feats})
     bronze = str(tmp_path / "bronze")
     stats = pipeline.IngestStats()
     pipeline.ingest_window_paged(
-        spark, "http://x", "2020-01-01", "2020-02-01", bronze,
+        spark, "http://x", "2024-01-01", "2024-02-01", bronze,
         limit=10, http_get=api, stats=stats, idempotent=True,
     )
     assert [m["rows"] for m in stats.window_metrics] == [3]

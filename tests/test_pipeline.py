@@ -135,12 +135,12 @@ def test_week_fallback_on_month_failure(spark, tmp_path):
 def test_idempotent_reingest_no_duplicates(spark, tmp_path):
     """Re-running the same window in idempotent mode replaces its
     partitions instead of duplicating rows; plain append duplicates."""
-    feats = [_feature(i) for i in range(25)]
+    feats = [_feature(i) for i in range(25)]  # all at 2024-01-01T00:00Z
     bronze = str(tmp_path / "bronze")
     for _ in range(2):  # same window ingested twice
-        api = FakeApi({"2020-01-01": feats})
+        api = FakeApi({"2024-01-01": feats})
         pipeline.ingest_window_paged(
-            spark, "http://x", "2020-01-01", "2020-02-01", bronze,
+            spark, "http://x", "2024-01-01", "2024-02-01", bronze,
             limit=10, http_get=api, idempotent=True,
         )
     assert sinks.read_partitioned_table(spark, bronze).count() == 25
@@ -223,6 +223,49 @@ def _january_features(n: int):
     # one event per day of January 2020, at noon: every week window of
     # the month holds fewer than 10 of them
     return [_feature(i, ts_ms=JAN_2020_MS + (i % 31) * DAY_MS + DAY_MS // 2) for i in range(n)]
+
+
+FEB_2020_MS = JAN_2020_MS + 31 * DAY_MS  # 2020-02-01T00:00:00Z
+
+
+def test_idempotent_rerun_keeps_the_next_month(spark, tmp_path):
+    """FDSN's endtime is inclusive, so a January query also serves an
+    event at exactly 2020-02-01T00:00. Re-running January alone must
+    not let that row replace February's partition."""
+    feb = [_feature(i, ts_ms=FEB_2020_MS + i * DAY_MS) for i in range(5)]
+    jan = [_feature(100 + i, ts_ms=JAN_2020_MS + i * DAY_MS) for i in range(3)]
+    bronze = str(tmp_path / "bronze")
+    api = FakeApi({"2020-02-01": feb, "2020-01-01": jan + feb[:1]})
+    for window in (("2020-02-01", "2020-03-01"), ("2020-01-01", "2020-02-01")):
+        pipeline.ingest_window_paged(
+            spark, "http://x", *window, bronze,
+            limit=10, http_get=api, idempotent=True,
+        )
+    landed = sinks.read_partitioned_table(spark, bronze)
+    by_month = {
+        (r.year, r.month): r["count"]
+        for r in landed.groupBy("year", "month").count().collect()
+    }
+    assert by_month == {(2020, 1): 3, (2020, 2): 5}
+
+
+def test_idempotent_refuses_a_week_window(spark, tmp_path):
+    """An upsert replaces every month its rows touch, so a week window
+    would replace its whole month with one week of rows: idempotent
+    mode takes only a ``month_windows`` window."""
+    feats = _january_features(31)
+    bronze = str(tmp_path / "bronze")
+    api = TimeRangeApi(feats)
+    pipeline.ingest_window_paged(
+        spark, "http://x", "2020-01-01", "2020-02-01", bronze,
+        limit=10, http_get=api, idempotent=True,
+    )
+    with pytest.raises(ValueError, match="one month window"):
+        pipeline.ingest_window_paged(
+            spark, "http://x", "2020-01-08", "2020-01-15", bronze,
+            limit=10, http_get=api, idempotent=True,
+        )
+    assert sinks.read_partitioned_table(spark, bronze).count() == 31
 
 
 def test_pager_raises_on_a_failed_page():

@@ -24,8 +24,8 @@ SMALL sf, then one timed pass small -> big interleaved per op. One
 pass each — a ratio smoke, not a latency record.
 
 Usage: python tools/ann_scale_smoke.py [SMALL_DIR BIG_DIR]
-Defaults: /root/repo/tmp_scale/{sf1,sf10} (embeddings table only is
-needed; generate with ``gen_testdata.py 10 tmp_scale/sf10
+Defaults: tmp_scale/{sf1,sf10} under the repository root (embeddings
+table only is needed; generate with ``gen_testdata.py 10 tmp_scale/sf10
 embeddings``). Index parquet goes under <dir>/ann_index_smoke and is
 overwritten per run.
 """
@@ -39,7 +39,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 N_LISTS = 64
 N_PROBE = 4
@@ -52,8 +53,8 @@ def main() -> None:
     if len(argv) == 2:
         small, big = argv
     elif not argv:
-        small = "/root/repo/tmp_scale/sf1"
-        big = "/root/repo/tmp_scale/sf10"
+        small = str(REPO / "tmp_scale" / "sf1")
+        big = str(REPO / "tmp_scale" / "sf10")
     else:
         raise SystemExit("usage: ann_scale_smoke.py [SMALL_DIR BIG_DIR]")
 

@@ -3,8 +3,9 @@ entries vs their exact twins at each SF, to pick driver-gate thresholds
 (round-11 item 1). Not part of the package; safe to delete."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 

@@ -10,8 +10,9 @@ Usage: python tools/measure_theta_margins.py [sf_root=/root/testdata]
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
 

@@ -12,10 +12,10 @@ box drift spreads evenly. One pass each — this is a ratio smoke, not
 a latency record (bench.py owns those).
 
 Usage: python tools/sf1_smoke.py [SMALL_DIR BIG_DIR] [--entries a,b,c]
-Defaults: /root/repo/tmp_scale/{sf0.1g,sf1}; --entries restricts the
-run to the named catalog entries (round-12: the sf1->sf10 rung runs
-the 5 heaviest document-table headliners only — the docs-only sf10
-dir has no other tables).
+Defaults: tmp_scale/{sf0.1g,sf1} under the repository root; --entries
+restricts the run to the named catalog entries (round-12: the
+sf1->sf10 rung runs the 5 heaviest document-table headliners only —
+the docs-only sf10 dir has no other tables).
 """
 
 from __future__ import annotations
@@ -23,8 +23,10 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
@@ -40,8 +42,8 @@ def main() -> None:
     if len(argv) == 2:
         small, big = argv
     elif not argv:
-        small = "/root/repo/tmp_scale/sf0.1g"
-        big = "/root/repo/tmp_scale/sf1"
+        small = str(REPO / "tmp_scale" / "sf0.1g")
+        big = str(REPO / "tmp_scale" / "sf1")
     else:
         # one stray operand would silently measure the DEFAULT dirs —
         # fail loud instead (round-11 review)

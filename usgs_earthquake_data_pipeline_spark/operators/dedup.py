@@ -668,6 +668,9 @@ def resolve_dup_clusters(
         if changed == 0:
             converged = True
             break
+    # the labels read only the last round's eager pin: the edge set is
+    # read by nothing more
+    release(edges)
     if not converged:
         raise RuntimeError(
             f"resolve_dup_clusters did not converge in {max_iterations} "

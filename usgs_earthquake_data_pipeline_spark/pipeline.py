@@ -52,10 +52,10 @@ def month_windows(start_year: int, end_year: int) -> list[tuple[str, str]]:
     Each window ends at the NEXT month's first day, so the final
     window covers all of December (FDSN start/end are inclusive; an
     end pinned to 12-31T00:00 would drop Dec-31 events). A boundary
-    instant (exactly 00:00 on the 1st) is matched by both adjacent
-    windows — harmless under idempotent ingest (the later window's
-    upsert converges the partition) and a documented at-least-once
-    in append mode.
+    instant (exactly 00:00 on the 1st) is therefore served to both
+    adjacent windows: append mode lands it twice (a documented
+    at-least-once), while idempotent ingest lands only the rows in
+    ``[start, end)``, so the instant lands with its own month.
     """
     windows = []
     current = date(start_year, 1, 1)
@@ -182,10 +182,21 @@ def ingest_window_paged(
 
     ``idempotent=True`` lands the window with a partition-level upsert
     instead of an append: re-running the same window replaces its
-    (year, month) partitions rather than duplicating rows — the fix
+    (year, month) partition rather than duplicating rows — the fix
     for the reference's append-forever semantics (and its per-chunk
-    S3 overwrite bug, SURVEY §3.1 step 8).
+    S3 overwrite bug, SURVEY §3.1 step 8). The upsert replaces every
+    partition its rows touch, so the window must be one
+    ``month_windows`` window (``ValueError`` otherwise: a week would
+    replace its whole month), and only rows with ``start <= eventtime
+    < end`` land (FDSN's inclusive ``endtime`` also serves the next
+    month's 00:00 instant, which would replace that month).
     """
+    if idempotent and (start_time, end_time) not in month_windows(
+        int(start_time[:4]), int(start_time[:4])
+    ):
+        raise ValueError(
+            f"idempotent ingest needs one month window, got {start_time}..{end_time}"
+        )
     stats = stats if stats is not None else IngestStats()
     pages = list(
         fetch_pages(api_url, start_time, end_time, limit=limit, http_get=http_get)
@@ -197,7 +208,8 @@ def ingest_window_paged(
             obs = Observation(f"window_{start_time}")
             kwargs = dict(observation=obs, metrics=quality_metrics())
             if idempotent:
-                written = upsert_partitions(events, bronze_path, **kwargs)
+                keep = f"eventtime >= '{start_time}' AND eventtime < '{end_time}'"
+                written = upsert_partitions(events.filter(keep), bronze_path, **kwargs)
             else:
                 written = save_partitioned_table(
                     events, bronze_path, mode="append", **kwargs

@@ -6,13 +6,12 @@ entries (MinHash-LSH, hyperplane-LSH, SimHash banding, IVF) are
 hash-gated too (round 11): the exact statistic is the oracle payload
 and the approximation's accuracy contract — scores-exact, recall
 floor, estimator bound — rides as booleans the oracle pins TRUE,
-computed distributed over the production output.
+computed distributed over the production output. The legs shared by
+more than one entry, and the memo of exact truth sets they verify
+against, are in ``certify``.
 """
 
 from __future__ import annotations
-
-import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -23,6 +22,7 @@ from ..functions import text as T
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..sources.tables import load_table
+from . import certify as C
 from .catalog import register
 
 # ---------------------------------------------------------------------------
@@ -235,8 +235,8 @@ def dedup_resolve_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     output to the inverted index (tested at t=0.3) without its
     full co-occurrence aggregation, which OOMs at permissive
     thresholds as the corpus grows. The pair set is the shared
-    checkpointed t=0.3 relation (``_prefix03_pairs_cached``)."""
-    pairs = _prefix03_pairs_cached(spark, sf_dir)
+    checkpointed t=0.3 relation (``certify.prefix03_pairs``)."""
+    pairs = C.prefix03_pairs(spark, sf_dir)
     return D.resolve_dup_clusters(pairs)
 
 
@@ -262,8 +262,8 @@ def dedup_components_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (shrinking) edge set itself. This is the general-graph
     100 TB component path resolve_dup_clusters' docstring defers
     to, now implemented and gated rather than cited. The pair set is
-    the shared checkpointed t=0.3 relation (``_prefix03_pairs_cached``)."""
-    pairs = _prefix03_pairs_cached(spark, sf_dir)
+    the shared checkpointed t=0.3 relation (``certify.prefix03_pairs``)."""
+    pairs = C.prefix03_pairs(spark, sf_dir)
     return D.two_phase_components(pairs)
 
 
@@ -304,7 +304,7 @@ def dedup_keep_best_in_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     pluggable (any per-doc score column joins in the same way);
     n_chars is used here because the oracle can re-derive it."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _prefix03_pairs_cached(spark, sf_dir)
+    pairs = C.prefix03_pairs(spark, sf_dir)
     clusters = D.resolve_dup_clusters(pairs)
     joined = clusters.join(
         docs.select(F.col("doc_id").alias("id"), "n_chars"), "id"
@@ -324,38 +324,6 @@ def dedup_keep_best_in_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_members").cast("long").alias("n_members"),
         )
         .orderBy("canonical_id")
-    )
-
-
-def _clusters_refine_exact_ok(
-    edges: DataFrame, exact_clusters: DataFrame
-) -> DataFrame:
-    """One-row ``clusters_refine_exact_ok``: both endpoints of every
-    edge (``id_a``, ``id_b``) carry the same exact canonical id. Left
-    joins: an endpoint with no exact label is a violation, not a row
-    that drops out of the check."""
-    ca = exact_clusters.select(
-        F.col("id").alias("id_a"), F.col("canonical_id").alias("can_a")
-    )
-    cb = exact_clusters.select(
-        F.col("id").alias("id_b"), F.col("canonical_id").alias("can_b")
-    )
-    return (
-        edges.join(ca, "id_a", "left")
-        .join(cb, "id_b", "left")
-        .agg(
-            (
-                F.count(
-                    F.when(
-                        F.col("can_a").isNull()
-                        | F.col("can_b").isNull()
-                        | (F.col("can_a") != F.col("can_b")),
-                        1,
-                    )
-                )
-                == 0
-            ).alias("clusters_refine_exact_ok")
-        )
     )
 
 
@@ -413,10 +381,10 @@ def dedup_resolve_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clusters = D.two_phase_components(lsh).transform(materialize_lazy)
     exact_clusters = D.resolve_dup_clusters(
-        _prefix03_pairs_cached(spark, sf_dir)
+        C.prefix03_pairs(spark, sf_dir)
     )
-    refine = _clusters_refine_exact_ok(lsh, exact_clusters)
-    strong = _exact_jaccard03_cached(spark, sf_dir).filter(
+    refine = C.same_label_ok(lsh, exact_clusters, "clusters_refine_exact_ok")
+    strong = C.exact_jaccard03(spark, sf_dir).filter(
         F.col("jaccard") >= 0.9
     )
     la = clusters.select(
@@ -470,234 +438,6 @@ def _cosine_topk_oracle(k: int, extra: str) -> str:
     )
 
 
-def _recall_floor_agg(
-    approx: DataFrame,
-    exact: DataFrame,
-    keys: tuple[str, ...],
-    floor: float,
-    name: str,
-):
-    """Boolean aggregate: |approx ∩ exact| / |exact| >= floor over
-    ``keys`` — the identity-boolean device's recall leg. ONE
-    left-outer join + one agg (the round-11 review dropped a redundant
-    semi-join stage); both sides are distinct on ``keys`` by the
-    emitting operators' contracts, so the outer join cannot fan out."""
-    marked = approx.select(*keys).withColumn("_hit", F.lit(1))
-    return (
-        exact.select(*keys)
-        .join(marked, list(keys), "left_outer")
-        .agg((F.count("_hit") >= F.lit(floor) * F.count(F.lit(1))).alias(name))
-    )
-
-
-def _cosine_exact_all_pairs(emb: DataFrame) -> DataFrame:
-    """Every (query vec_id < 10, corpus) exact cosine pair, ranked —
-    computed with the JVM sequential-fold `cosine` expression, the
-    SAME doubles the IVF/LSH operators score candidates with AND the
-    same left-to-right association DuckDB's list_cosine_similarity
-    uses. That bit-identity is what makes the `*_scores_exact_ok`
-    booleans THEOREMS rather than corpus-dependent facts: the round-11
-    review flagged that the previous numpy-scored universe
-    (brute_force_topk's pairwise-summed matmul) could round a
-    boundary pair to a different 6th decimal than the operators' fold
-    and flip a pinned-TRUE boolean with no code change. Broadcast
-    nested-loop over the 10-query contract bound; rank ties broken by
-    neighbor_id on the UNROUNDED score, exactly like the SQL oracle."""
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_raw"), F.asc("neighbor_id")
-    )
-    return (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            S.cosine(F.col("qv"), F.col("cv")).alias("score_raw"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("score_raw", 6).alias("score"),
-            "rank",
-        )
-    )
-
-
-# Per-(session, sf_dir) memo of checkpointed shared TRUTH SETS: the
-# exact all-pairs cosine universe (four ANN gate entries verify
-# against it — round-11 verdict item 6 measured the family's profile
-# cost at ~2x what one shared universe needs), and since round 13 the
-# exact t=0.3 Jaccard pair set (three minhash gate entries) and the
-# k=1 SemDeDup survivor set (both semdedup entries) — the r12
-# verdict's item 7, PROFILE.md's two dominant gate families.
-# WeakKeyDictionary: a stopped session's checkpoint blocks are gone,
-# so its cache entry must die with it. Keys carry the source table's
-# file fingerprint so regenerating the parquet within one session
-# recomputes the truth instead of silently reusing a stale checkpoint
-# (round-12 advice).
-_TRUTH_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _table_fingerprint(sf_dir: str, table: str) -> tuple:
-    """(path, mtime_ns, size) of every file under the sf_dir's
-    ``<table>.parquet`` — the memo-invalidation key."""
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isfile(root):
-        st = os.stat(root)
-        return ((root, st.st_mtime_ns, st.st_size),)
-    out = []
-    for dirpath, _dirs, files in os.walk(root):
-        for f in sorted(files):
-            p = os.path.join(dirpath, f)
-            st = os.stat(p)
-            out.append((os.path.relpath(p, root), st.st_mtime_ns, st.st_size))
-    return tuple(out)
-
-
-def _truth_cached(spark: SparkSession, sf_dir: str, name: str, table: str, build):
-    """Memoized localCheckpoint of a shared truth set. ``build`` takes
-    the loaded source table and returns the truth DataFrame. Safe to
-    share: every consumer treats the result as an immutable relation."""
-    per = _TRUTH_MEMO.setdefault(spark, {})
-    key = (name, os.path.normpath(sf_dir), _table_fingerprint(sf_dir, table))
-    if key not in per:
-        # drop superseded fingerprints for the same (name, sf_dir) so
-        # a regenerate-loop can't grow the memo without bound
-        for old in [k for k in per if k[:2] == key[:2]]:
-            del per[old]
-        per[key] = build(load_table(spark, sf_dir, table)).transform(materialize)
-    return per[key]
-
-
-def _exact_all_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The checkpointed exact cosine all-pairs universe for this
-    (session, sf_dir), computed once and shared across the ANN gate
-    family: an immutable (query_id, neighbor_id, score, rank)
-    relation."""
-    return _truth_cached(
-        spark, sf_dir, "ann_exact_pairs", "embeddings",
-        _cosine_exact_all_pairs,
-    )
-
-
-def _exact_jaccard03_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The checkpointed exact 3-gram Jaccard pair set at t=0.3 —
-    the truth relation the three minhash gate entries verify against
-    (each used to recompute the full posting-list self-join). The
-    HEADLINE entry ``dedup_ngram_jaccard`` deliberately does NOT use
-    the memo: it is the exact tier's regression-visible timing."""
-    return _truth_cached(
-        spark, sf_dir, "jaccard03_pairs", "documents",
-        lambda docs: D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.3
-        ),
-    )
-
-
-def _prefix03_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The checkpointed prefix-filtered exact Jaccard pair set at
-    t=0.3 — the shared input of the four cluster-resolution entries
-    (``dedup_resolve_clusters``, ``dedup_components_two_phase``,
-    ``dedup_keep_best_in_cluster``, ``near_dedup_keep_one``), each of
-    which used to re-run the full PPJoin plan (r13 optimization
-    round — same device as the minhash/semdedup truth sets, guide
-    §2.4). The HEADLINE prefix entry ``dedup_jaccard_prefix`` (t=0.7)
-    deliberately does NOT share: it is the prefix tier's
-    regression-visible timing."""
-    return _truth_cached(
-        spark, sf_dir, "prefix03_pairs", "documents",
-        lambda docs: D.ngram_jaccard_prefix_pairs(
-            docs, "doc_id", "text", threshold=0.3
-        ),
-    )
-
-
-def _cosine03_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The checkpointed exact (n_planes=0 — every pair compared)
-    embedding-cosine pair set at t=0.3: the truth relation shared by
-    ``dedup_embedding_cosine`` (its precision/recall reference legs)
-    and ``dedup_embedding_cosine_exact`` (its whole payload), which
-    each used to run the O(n²) single-bucket self-join per call
-    (r13 optimization round, guide §2.4)."""
-    return _truth_cached(
-        spark, sf_dir, "cosine03_pairs", "embeddings",
-        lambda emb: S.embedding_near_dup_pairs(
-            emb, threshold=0.3, n_planes=0
-        ),
-    )
-
-
-def _semdedup_exact_survivors_cached(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The checkpointed k=1 SemDeDup survivor set (expr comparator —
-    the bit-stable keep-min rule): (vec_id, list_id) rows shared by
-    ``dedup_semdedup_exact`` (its whole payload) and
-    ``dedup_semantic_semdedup`` (its exactness reference leg) —
-    PROFILE.md's single most expensive truth recompute."""
-    from ..operators.similarity import semantic_dedup
-
-    return _truth_cached(
-        spark, sf_dir, "semdedup_exact_k1", "embeddings",
-        lambda emb: semantic_dedup(
-            emb, "vec_id", "embedding", k=1, dim=64, threshold=0.3,
-            comparator="expr",
-        ),
-    )
-
-
-def _ann_cosine_gate(
-    all_pairs: DataFrame,
-    approx: DataFrame,
-    *,
-    floor: float,
-    scores_name: str,
-    recall_name: str,
-) -> DataFrame:
-    """Shared body of the ann_ivf / ann_lsh_bucketed gates (the
-    round-11 review's dedup): exact cosine top-5 payload + the
-    scores-exact theorem + the recall floor, over any approximate
-    (query_id, neighbor_id, score) result. ``all_pairs`` is the
-    (already-checkpointed) _exact_all_pairs_cached universe.
-
-    ``approx`` feeds both booleans; un-materialized, the caller's
-    whole approximate pipeline (bucket/candidate join + scoring)
-    would execute once per consumer. It is a ≤ k·|queries|-row frame,
-    so materialize it (r13 optimization round, guide §2.4)."""
-    approx = approx.transform(materialize_lazy)
-    exact5 = all_pairs.filter(F.col("rank") <= 5).select(
-        "query_id", "neighbor_id", "score", "rank"
-    )
-    scores_ok = (
-        approx.select("query_id", "neighbor_id", "score")
-        .join(
-            all_pairs.select("query_id", "neighbor_id", "score"),
-            ["query_id", "neighbor_id", "score"],
-            "left_anti",
-        )
-        .agg((F.count(F.lit(1)) == 0).alias(scores_name))
-    )
-    recall_ok = _recall_floor_agg(
-        approx, exact5, ("query_id", "neighbor_id"), floor, recall_name
-    )
-    return (
-        exact5.crossJoin(F.broadcast(scores_ok))
-        .crossJoin(F.broadcast(recall_ok))
-        .orderBy("query_id", "rank")
-    )
-
-
 @register(
     "ann_ivf",
     oracle=_cosine_topk_oracle(
@@ -718,7 +458,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
       identical 6-dp score. Pruning may drop true neighbors but must
       never invent or mis-score a pair; a THEOREM here because the
       universe is scored with the same JVM fold the operator uses
-      (see _cosine_exact_all_pairs).
+      (see certify.exact_all_pairs).
     - ``ivf_recall_ok`` — recall@5 against the exact top-5 >= 0.8.
       Measured floor: 0.94 / 0.92 / 1.00 at sf0.001/0.01/0.1
       (tools/measure_recall.py round 11); deterministic per corpus —
@@ -731,8 +471,9 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     ivf = S.ivf_topk(emb, queries, k=5, n_lists=16, n_probe=4)
-    return _ann_cosine_gate(
-        _exact_all_pairs_cached(spark, sf_dir),
+    return C.ann_cosine_gate(
+        spark,
+        sf_dir,
         ivf,
         floor=0.8,
         scores_name="ivf_scores_exact_ok",
@@ -772,7 +513,7 @@ def ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed exact top-5, folded through an array_sort aggregate
     for the adjacency check. Complements `ann_ivf` (which pins the
     single production point n_probe=4): this entry pins the SHAPE of
-    the dial. The truth set comes from _exact_all_pairs_cached — the
+    the dial. The truth set comes from certify.exact_all_pairs — the
     SAME JVM-fold-scored universe the other gates use (round-12
     advice: the previous brute_force_topk truth was numpy-scored, so
     a rank-5/6 near-tie could diverge from the operators' fold at the
@@ -780,11 +521,7 @@ def ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     change)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    exact5 = (
-        _exact_all_pairs_cached(spark, sf_dir)
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+    exact5 = C.exact_cosine_top5(spark, sf_dir).select("query_id", "neighbor_id")
     probes = [1, 2, 4, 8, 16]
     # list ASSIGNMENT is probe-independent: assign the corpus once and
     # search the materialized index per probe setting — the previous
@@ -892,25 +629,14 @@ def ann_ivf_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild = S.ivf_topk(
         emb, queries, k=5, n_lists=16, n_probe=4, centroids=centroids
     )
-    inc_ok = (
-        incremental.exceptAll(rebuild)
-        .unionAll(rebuild.exceptAll(incremental))
-        .agg(
-            (F.count(F.lit(1)) == 0).alias("incremental_matches_rebuild_ok")
-        )
+    inc_ok = C.rows_equal_ok(
+        incremental, rebuild, "incremental_matches_rebuild_ok"
     )
-    all_pairs = _exact_all_pairs_cached(spark, sf_dir)
-    exact5 = all_pairs.filter(F.col("rank") <= 5).select(
-        "query_id", "neighbor_id", "score", "rank"
-    )
+    exact5 = C.exact_cosine_top5(spark, sf_dir)
     stale_full = S.ivf_topk(
         emb, queries, k=5, n_lists=16, n_probe=16, centroids=centroids
     ).select("query_id", "neighbor_id", "score", "rank")
-    stale_ok = (
-        stale_full.exceptAll(exact5)
-        .unionAll(exact5.exceptAll(stale_full))
-        .agg((F.count(F.lit(1)) == 0).alias("stale_fullprobe_exact_ok"))
-    )
+    stale_ok = C.rows_equal_ok(stale_full, exact5, "stale_fullprobe_exact_ok")
     return (
         exact5.crossJoin(F.broadcast(inc_ok))
         .crossJoin(F.broadcast(stale_ok))
@@ -968,26 +694,13 @@ def ann_ivf_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored = spark.read.parquet(out)
     mem = S.ivf_search_assigned(assigned, queries, centroids, k=5, n_probe=4)
     disk = S.ivf_search_assigned(stored, queries, centroids, k=5, n_probe=4)
-    same_ok = (
-        disk.exceptAll(mem)
-        .unionAll(mem.exceptAll(disk))
-        .agg((F.count(F.lit(1)) == 0).alias("persisted_matches_memory_ok"))
-    )
-    all_pairs = _exact_all_pairs_cached(spark, sf_dir)
-    exact5 = all_pairs.filter(F.col("rank") <= 5).select(
-        "query_id", "neighbor_id", "score", "rank"
-    )
+    same_ok = C.rows_equal_ok(disk, mem, "persisted_matches_memory_ok")
+    exact5 = C.exact_cosine_top5(spark, sf_dir)
     full = S.ivf_search_assigned(
         stored, queries, centroids, k=5, n_probe=16
     ).select("query_id", "neighbor_id", "score", "rank")
-    full_ok = (
-        full.exceptAll(exact5)
-        .unionAll(exact5.exceptAll(full))
-        .agg(
-            (F.count(F.lit(1)) == 0).alias(
-                "fullprobe_after_roundtrip_exact_ok"
-            )
-        )
+    full_ok = C.rows_equal_ok(
+        full, exact5, "fullprobe_after_roundtrip_exact_ok"
     )
     return (
         exact5.crossJoin(F.broadcast(same_ok))
@@ -1072,11 +785,7 @@ def ann_ivf_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     reb_search = S.ivf_search_assigned(
         rebuilt, queries, centroids, k=5, n_probe=4
     )
-    del_ok = (
-        del_search.exceptAll(reb_search)
-        .unionAll(reb_search.exceptAll(del_search))
-        .agg((F.count(F.lit(1)) == 0).alias("delete_matches_rebuild_ok"))
-    )
+    del_ok = C.rows_equal_ok(del_search, reb_search, "delete_matches_rebuild_ok")
     out = _os.path.join(
         _scratch_dir(),
         f"ivf_compact_{_os.path.basename(_os.path.normpath(sf_dir))}",
@@ -1086,7 +795,7 @@ def ann_ivf_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = S.ivf_search_assigned(
         compacted, queries, centroids, k=5, n_probe=16
     ).select("query_id", "neighbor_id", "score", "rank")
-    all_pairs = _exact_all_pairs_cached(spark, sf_dir)
+    all_pairs = C.exact_all_pairs(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(F.asc("rank"))
     exact5_after = (
         all_pairs.filter(
@@ -1096,11 +805,7 @@ def ann_ivf_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "score", "rank")
     )
-    compact_ok = (
-        full.exceptAll(exact5_after)
-        .unionAll(exact5_after.exceptAll(full))
-        .agg((F.count(F.lit(1)) == 0).alias("compact_fullprobe_exact_ok"))
-    )
+    compact_ok = C.rows_equal_ok(full, exact5_after, "compact_fullprobe_exact_ok")
     return (
         exact5_after.crossJoin(F.broadcast(del_ok))
         .crossJoin(F.broadcast(compact_ok))
@@ -1148,13 +853,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = D.minhash_lsh_pairs(
         docs, "doc_id", "text", threshold=0.3
     ).select("id_a", "id_b").transform(materialize)
-    exact = _exact_jaccard03_cached(spark, sf_dir)
-    prec = lsh.join(
-        exact.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-    ).agg((F.count(F.lit(1)) == 0).alias("lsh_precision_ok"))
-    strong = exact.filter(F.col("jaccard") >= 0.9)
-    rec = _recall_floor_agg(
-        lsh, strong, ("id_a", "id_b"), 0.95, "lsh_strong_recall_ok"
+    prec, rec = C.minhash_lsh_ok(
+        lsh, C.exact_jaccard03(spark, sf_dir), "lsh_strong_recall_ok"
     )
     census = docs.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs")
@@ -1222,7 +922,7 @@ def dedup_minhash_estimate_checked(spark: SparkSession, sf_dir: str) -> DataFram
     signature truncation — flips some pair's boolean and the driver
     row goes red."""
     docs = load_table(spark, sf_dir, "documents")
-    exact = _exact_jaccard03_cached(spark, sf_dir)
+    exact = C.exact_jaccard03(spark, sf_dir)
     sigs = D.hashed_shingle_sets(docs, "doc_id", "text").select(
         "id", D.minhash_signature(F.col("hs"), 32).alias("sig")
     )
@@ -1272,35 +972,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dedup_simhash_checked` (total count), so the two entries hash
     different rows."""
     docs = load_table(spark, sf_dir, "documents")
-    # r13 optimization round: ONE lazily-materialized fingerprint
-    # frame feeds the banded join (via fp_df) AND both sides of the
-    # brute-force twin — the SimHash fold (O(tokens·64) per doc) used
-    # to re-evaluate once per branch reference.
-    fp = (
-        D.simhash_col(
-            D._widen(docs.select(F.col("doc_id").alias("id"), "text")),
-            "text",
-        )
-        .select("id", "simhash")
-        .transform(materialize_lazy)
-    )
-    banded = D.simhash_near_pairs(
-        docs, "doc_id", "text", max_hamming=3, fp_df=fp
-    ).select("id_a", "id_b", "hamming")
-    a = fp.select(F.col("id").alias("id_a"), F.col("simhash").alias("fa"))
-    b = fp.select(F.col("id").alias("id_b"), F.col("simhash").alias("fb"))
-    brute = (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", D.hamming64(F.col("fa"), F.col("fb")))
-        .filter(F.col("hamming") <= 3)
-        .select("id_a", "id_b", "hamming")
-    )
-    ok = (
-        banded.exceptAll(brute)
-        .unionAll(brute.exceptAll(banded))
-        .agg((F.count(F.lit(1)) == 0).alias("banding_complete"))
-    )
+    ok = C.simhash_banding_complete_ok(docs)
     census = docs.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs")
     )
@@ -1355,28 +1027,14 @@ def dedup_minhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
       measured recall on the driver corpora is 1.0 at every SF (all
       true pairs are near-identical documents)."""
     docs = load_table(spark, sf_dir, "documents")
-    exact = _exact_jaccard03_cached(spark, sf_dir)
+    exact = C.exact_jaccard03(spark, sf_dir)
     # the precision and recall legs both consume the LSH pair set —
     # un-materialized, the banded pipeline ran twice (the headline
     # sibling already checkpoints; r13 optimization round, guide §2.4)
     lsh = D.minhash_lsh_pairs(
         docs, "doc_id", "text", threshold=0.3
     ).select("id_a", "id_b").transform(materialize_lazy)
-    exact_ids = exact.select("id_a", "id_b")
-    prec = lsh.join(exact_ids, ["id_a", "id_b"], "left_anti").agg(
-        (F.count(F.lit(1)) == 0).alias("lsh_precision_ok")
-    )
-    strong = exact.filter(F.col("jaccard") >= 0.9).select("id_a", "id_b")
-    rec = (
-        strong.join(
-            lsh.withColumn("_hit", F.lit(1)), ["id_a", "id_b"], "left_outer"
-        )
-        .agg(
-            (
-                F.count("_hit") >= F.lit(0.95) * F.count(F.lit(1))
-            ).alias("lsh_recall_ok")
-        )
-    )
+    prec, rec = C.minhash_lsh_ok(lsh, exact, "lsh_recall_ok")
     return (
         exact.crossJoin(F.broadcast(prec))
         .crossJoin(F.broadcast(rec))
@@ -1408,35 +1066,7 @@ def dedup_simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, bounded and deliberate (the CHECK is quadratic; the
     production path stays banded)."""
     docs = load_table(spark, sf_dir, "documents")
-    # r13 optimization round: ONE lazily-materialized fingerprint
-    # frame feeds the banded join (via fp_df) AND both sides of the
-    # brute-force twin — the SimHash fold (O(tokens·64) per doc) used
-    # to re-evaluate once per branch reference.
-    fp = (
-        D.simhash_col(
-            D._widen(docs.select(F.col("doc_id").alias("id"), "text")),
-            "text",
-        )
-        .select("id", "simhash")
-        .transform(materialize_lazy)
-    )
-    banded = D.simhash_near_pairs(
-        docs, "doc_id", "text", max_hamming=3, fp_df=fp
-    ).select("id_a", "id_b", "hamming")
-    a = fp.select(F.col("id").alias("id_a"), F.col("simhash").alias("fa"))
-    b = fp.select(F.col("id").alias("id_b"), F.col("simhash").alias("fb"))
-    brute = (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", D.hamming64(F.col("fa"), F.col("fb")))
-        .filter(F.col("hamming") <= 3)
-        .select("id_a", "id_b", "hamming")
-    )
-    ok = (
-        banded.exceptAll(brute)
-        .unionAll(brute.exceptAll(banded))
-        .agg((F.count(F.lit(1)) == 0).alias("banding_complete"))
-    )
+    ok = C.simhash_banding_complete_ok(docs)
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     return n.crossJoin(F.broadcast(ok))
 
@@ -1492,11 +1122,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_pairs = S.embedding_near_dup_pairs(
         emb, threshold=0.3, sigs=sigs
     ).transform(materialize)
-    exact_pairs = _cosine03_pairs_cached(spark, sf_dir)
-    prec = lsh_pairs.select("id_a", "id_b").join(
-        exact_pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-    ).agg((F.count(F.lit(1)) == 0).alias("bucket_precision_ok"))
-    floor = _recall_floor_agg(
+    exact_pairs = C.cosine03_pairs(spark, sf_dir)
+    prec = C.subset_ok(
+        lsh_pairs, exact_pairs, ("id_a", "id_b"), "bucket_precision_ok"
+    )
+    floor = C.recall_floor_ok(
         lsh_pairs,
         exact_pairs,
         ("id_a", "id_b"),
@@ -1522,9 +1152,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id_a"),
         (F.col("vec_id") + offset).alias("id_b"),
     )
-    planted_ok = expected.join(
-        aug_pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-    ).agg((F.count(F.lit(1)) == 0).alias("planted_recall_ok"))
+    planted_ok = C.subset_ok(
+        expected, aug_pairs, ("id_a", "id_b"), "planted_recall_ok"
+    )
     n = exact_pairs.agg(F.count(F.lit(1)).alias("n_exact_pairs"))
     return (
         n.crossJoin(F.broadcast(prec))
@@ -1625,7 +1255,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
       identical 6-dp score: bucketing may prune true neighbors but
       must never invent or mis-score a candidate (post-bucket scoring
       uses the full vectors). A THEOREM — the universe is scored with
-      the operator's own JVM fold (see _cosine_exact_all_pairs).
+      the operator's own JVM fold (see certify.exact_all_pairs).
     - ``lsh_recall_floor_ok`` — recall@5 vs exact top-5 >= 0.1.
       Honest floor: on the driver's near-orthogonal random corpus the
       true top-5 are themselves low-cosine (~0.3-0.4), exactly the
@@ -1638,8 +1268,9 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     lsh = S.lsh_topk(emb, queries, k=5)
-    return _ann_cosine_gate(
-        _exact_all_pairs_cached(spark, sf_dir),
+    return C.ann_cosine_gate(
+        spark,
+        sf_dir,
         lsh,
         floor=0.1,
         scores_name="lsh_scores_exact_ok",
@@ -2228,7 +1859,7 @@ def near_dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix+positional filters bound the candidate set — identical
     output (tests/test_prefix_jaccard.py proves equality at 0.3)."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _prefix03_pairs_cached(spark, sf_dir)
+    pairs = C.prefix03_pairs(spark, sf_dir)
     clusters = D.resolve_dup_clusters(pairs)
     losers = clusters.filter(F.col("canonical_id") != F.col("id")).select("id")
     return (
@@ -2506,7 +2137,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     adc = PQ.pq_adc_topk(emb, queries, books, k=5)
     exact5 = _exact_l2_topk(emb, 0, 10, 5).transform(materialize)
-    recall_ok = _recall_floor_agg(
+    recall_ok = C.recall_floor_ok(
         adc, exact5, ("query_id", "neighbor_id"), 0.1, "adc_recall_ok"
     )
     return exact5.crossJoin(F.broadcast(recall_ok)).orderBy(
@@ -2552,17 +2183,18 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc_all = PQ.pq_adc_scores(emb, queries, books).select(
         "query_id", "neighbor_id", F.round("est_dist", 6).alias("est_dist")
     )
-    scores_ok = (
+    scores_ok = C.subset_ok(
         ivfpq.select(
             "query_id",
             "neighbor_id",
             F.round("est_dist", 6).alias("est_dist"),
-        )
-        .join(adc_all, ["query_id", "neighbor_id", "est_dist"], "left_anti")
-        .agg((F.count(F.lit(1)) == 0).alias("ivfpq_scores_consistent_ok"))
+        ),
+        adc_all,
+        ("query_id", "neighbor_id", "est_dist"),
+        "ivfpq_scores_consistent_ok",
     )
     exact5 = _exact_l2_topk(emb, 0, 10, 5).transform(materialize)
-    recall_ok = _recall_floor_agg(
+    recall_ok = C.recall_floor_ok(
         ivfpq, exact5, ("query_id", "neighbor_id"), 0.1, "ivfpq_recall_ok"
     )
     return (
@@ -2662,11 +2294,7 @@ def ann_ivf_pq_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, queries, books, k=5, n_lists=16, n_probe=16
     )
     adc = PQ.pq_adc_topk(emb, queries, books, k=5)
-    ok = (
-        full.exceptAll(adc)
-        .unionAll(adc.exceptAll(full))
-        .agg((F.count(F.lit(1)) == 0).alias("fullprobe_matches_adc"))
-    )
+    ok = C.rows_equal_ok(full, adc, "fullprobe_matches_adc")
     return _exact_l2_topk(emb, 10, 20, 5).crossJoin(F.broadcast(ok)).orderBy(
         "query_id", "rank"
     )
@@ -2755,10 +2383,8 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prod = semantic_dedup(
         emb, "vec_id", "embedding", k=8, dim=64, threshold=0.3
     ).select("vec_id").transform(materialize)
-    exact = _semdedup_exact_survivors_cached(spark, sf_dir).select("vec_id")
-    no_false = exact.join(prod, "vec_id", "left_anti").agg(
-        (F.count(F.lit(1)) == 0).alias("no_false_drops")
-    )
+    exact = C.semdedup_exact_survivors(spark, sf_dir).select("vec_id")
+    no_false = C.subset_ok(exact, prod, ("vec_id",), "no_false_drops")
     counts = (
         emb.agg(F.count(F.lit(1)).alias("n_total"))
         .crossJoin(F.broadcast(prod.agg(F.count(F.lit(1)).alias("n_prod"))))
@@ -2812,7 +2438,7 @@ def dedup_semdedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary cannot flip between engines; arrow-vs-expr equality on
     this corpus is asserted in tests, keeping the production numpy
     path covered."""
-    return _semdedup_exact_survivors_cached(spark, sf_dir).orderBy("vec_id")
+    return C.semdedup_exact_survivors(spark, sf_dir).orderBy("vec_id")
 
 
 @register(
@@ -2879,18 +2505,12 @@ def rag_index_ivf_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe2 = ivf_topk(
         vecs, vecs, k=3, n_lists=4, n_probe=2, include_self=True
     ).select("query_id", "neighbor_id", "score")
-    ok = (
-        full.exceptAll(brute3)
-        .unionAll(brute3.exceptAll(full))
-        .select("query_id", "neighbor_id", "score")
-        .unionAll(
-            probe2.join(
-                brute_all.select("query_id", "neighbor_id", "score"),
-                ["query_id", "neighbor_id", "score"],
-                "left_anti",
-            )
-        )
-        .agg((F.count(F.lit(1)) == 0).alias("hashed_identity_ok"))
+    same = C.rows_equal_ok(full, brute3, "same")
+    scored = C.subset_ok(
+        probe2, brute_all, ("query_id", "neighbor_id", "score"), "scored"
+    )
+    ok = same.crossJoin(scored).select(
+        (F.col("same") & F.col("scored")).alias("hashed_identity_ok")
     )
     census = (
         docs.groupBy("source")
@@ -3054,9 +2674,9 @@ def dedup_embedding_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     space sub-quadratic. Cosine is the JVM sequential fold, the same
     left-to-right order as `list_cosine_similarity`, so raw scores
     agree bit-for-bit before the 6-dp rounding. The pair set is the
-    shared checkpointed relation (``_cosine03_pairs_cached``) —
+    shared checkpointed relation (``certify.cosine03_pairs``) —
     ``dedup_embedding_cosine`` verifies against the same one."""
-    return _cosine03_pairs_cached(spark, sf_dir).orderBy("id_a", "id_b")
+    return C.cosine03_pairs(spark, sf_dir).orderBy("id_a", "id_b")
 
 
 @register(
