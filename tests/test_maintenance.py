@@ -802,27 +802,36 @@ def test_ivf_index_partitioned_by_list_prunes_and_matches(
 
 
 def test_exact_pairs_memo_invalidates_on_regenerated_data(spark, tmp_path):
-    """Round-12 advice: the shared exact all-pairs universe is keyed on
-    the embeddings files' (mtime, size) fingerprint, so regenerating
-    the parquet under an sf_dir within one session recomputes the
-    truth set instead of silently reusing the stale checkpoint."""
+    """Round-12 advice: a shared truth set is keyed on its table files'
+    (mtime, size) fingerprint, so regenerating the parquet under an
+    sf_dir within one session recomputes the truth set instead of
+    silently reusing the stale checkpoint. Checked on the exact
+    all-pairs universe (embeddings) and the prefix-pair clusters
+    (documents)."""
     import shutil
 
-    from usgs_earthquake_data_pipeline_spark.plans.certify import exact_all_pairs
+    from usgs_earthquake_data_pipeline_spark.plans.certify import (
+        exact_all_pairs,
+        prefix03_clusters,
+    )
     from tools.gen_testdata import generate
 
     d = str(tmp_path / "sf")
-    generate(0.001, d, only={"embeddings"})
-    first = exact_all_pairs(spark, d)
-    assert exact_all_pairs(spark, d) is first  # memo hit
+    truths = {"embeddings": exact_all_pairs, "documents": prefix03_clusters}
+    generate(0.001, d, only=set(truths))
+    first = {t: truth(spark, d) for t, truth in truths.items()}
+    for t, truth in truths.items():
+        assert truth(spark, d) is first[t], t  # memo hit
 
-    shutil.rmtree(os.path.join(d, "embeddings.parquet"), ignore_errors=True)
-    if os.path.isfile(os.path.join(d, "embeddings.parquet")):
-        os.remove(os.path.join(d, "embeddings.parquet"))
-    generate(0.001, d, seed=7, only={"embeddings"})  # different data
-    second = exact_all_pairs(spark, d)
-    assert second is not first  # stale truth set recomputed
-    assert exact_all_pairs(spark, d) is second
+    for t in truths:
+        shutil.rmtree(os.path.join(d, f"{t}.parquet"), ignore_errors=True)
+        if os.path.isfile(os.path.join(d, f"{t}.parquet")):
+            os.remove(os.path.join(d, f"{t}.parquet"))
+    generate(0.001, d, seed=7, only=set(truths))  # different data
+    for t, truth in truths.items():
+        second = truth(spark, d)
+        assert second is not first[t], t  # stale truth set recomputed
+        assert truth(spark, d) is second, t
 
 
 def test_ivf_delete_compact_entry_and_teeth(spark, sf_dir):

@@ -54,6 +54,85 @@ def test_warm_headliner_planning_launches_no_job(spark, sf_dir):
     assert sc.statusTracker().getJobIdsForGroup("warm_headliner_plans") == []
 
 
+#: warm noop-forced Spark jobs per catalog_headline entry; each AQE
+#: query stage is its own job (q1: the partial-aggregate map stage and
+#: the one-task final aggregate + sort)
+_HEADLINER_JOBS = {
+    "a1_count_year_filter": 2,
+    "a3_fact_yearly": 2,
+    "a4_fact_monthly": 2,
+    "s6_projection": 1,
+    "q1_pricing_summary": 2,
+    "q3_top_orders": 4,
+    "dedup_exact_fingerprint": 2,
+    "text_token_stats": 1,
+}
+
+
+def test_headliner_job_budget(spark, sf_dir):
+    """A warm noop force of each catalog_headline entry, in its own job
+    group, launches exactly its budgeted jobs: 16 per pass."""
+    assert set(_HEADLINER_JOBS) == set(HEADLINERS)
+    sc = spark.sparkContext
+    got = {}
+    for name in HEADLINERS:
+        fn = CATALOG[name].spark_fn
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        group = f"headliner_jobs_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert got == _HEADLINER_JOBS
+    assert sum(got.values()) == 16
+
+
+#: entries ordered by ``catalog._sort_bounded``: key-bounded aggregates
+_SORT_BOUNDED = (
+    "a2_count_by_year",
+    "a3_fact_yearly",
+    "a4_fact_monthly",
+    "f2_time_filter_daily",
+    "q1_pricing_summary",
+    "q5_region_revenue",
+    "q7_volume_shipping",
+    "distinct_users_by_type",
+    "agg_minmax_by_type",
+    "agg_rollup_by_type",
+    "q4_priority_late_ship",
+    "q8_market_share",
+    "q9_profit_nation_year",
+    "q12_status_priority",
+    "q22_idle_rich_customers",
+)
+
+
+def _nodes(plan):
+    """Pre-order walk of a JVM SparkPlan."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+@pytest.mark.parametrize("name", _SORT_BOUNDED)
+def test_sort_bounded_entries_sort_without_range_exchange(name, spark, sf_dir):
+    """A key-bounded aggregate is sorted in one task: no range
+    partitioning anywhere in its plan, and its final aggregate reads an
+    exchange, so the one-task coalesce never reaches a join or scan
+    stage."""
+    plan = CATALOG[name].spark_fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    assert "rangepartitioning" not in plan.toString()
+    final_agg = next(p for p in _nodes(plan) if p.nodeName() == "HashAggregate")
+    assert final_agg.children().apply(0).nodeName() == "Exchange", name
+
+
 def test_q1_filter_pushed_and_columns_pruned(spark, sf_dir):
     plan = _plan(CATALOG["q1_pricing_summary"].spark_fn(spark, sf_dir))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan

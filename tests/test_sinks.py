@@ -189,6 +189,42 @@ def test_silver_layer_job_budget(spark, events, tmp_path):
     assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
 
 
+def test_silver_fact_writes_run_one_task(spark, events, tmp_path):
+    """Each fact write, empty or not, is one job of one task: the
+    driver-held fact goes through ``sinks.clustering_sort``, which
+    coalesces it, instead of one task per row."""
+    sc = spark.sparkContext
+    for case, bronze in (
+        ("facts", events),
+        ("empty", events.withColumn("tsunami", F.lit(0))),
+    ):
+        group = f"silver_tasks_{case}"
+        sc.setJobGroup(group, group)
+        try:
+            silver.build_silver_layer(
+                bronze,
+                str(tmp_path / case / "fact_yearly"),
+                str(tmp_path / case / "fact_monthly"),
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids = set(sc.statusTracker().getJobIdsForGroup(group))
+        jobs = sc._jsc.sc().statusStore().jobsList(None)
+        tasks = {}
+        for i in range(jobs.size()):
+            job = jobs.apply(i)
+            desc = job.description()
+            if job.jobId() in ids and desc.isDefined():
+                if desc.get().startswith("silver write"):
+                    tasks.setdefault(desc.get(), []).append(job.numTasks())
+        assert tasks == {
+            "silver write yearly": [1],
+            "silver write monthly": [1],
+        }, (case, tasks)
+
+
 def test_silver_sql_twins_match_dataframe_api(spark, events):
     """The spark.sql string forms of A3/A4 must produce the same rows
     as the DataFrame implementations."""

@@ -13,10 +13,9 @@ final agg), and the result — at most 12 rows per year — is pulled to
 the driver as Arrow. The yearly fact is folded from those monthly rows
 on the driver (Σ months = year, null keys included), and each fact
 goes back to the JVM as an Arrow-backed local table and is written
-with a plain partitioned overwrite. No range exchange clusters the
-write: a fact's partition key IS its group key, so every partition
-directory receives exactly one row, hence one file, whatever task
-holds it.
+with a partitioned overwrite through ``sinks.clustering_sort``, which
+coalesces a driver-held frame to one task: one write task per fact,
+one file per partition, no sampling job and no exchange.
 """
 
 from __future__ import annotations
@@ -27,6 +26,7 @@ from pyspark.sql import functions as F
 from ..observability import job_description
 from ..schema import FACT_TSUNAMI_MONTHLY_SCHEMA, FACT_TSUNAMI_YEARLY_SCHEMA
 from ..session import TABLE_FORMAT
+from ..sinks import clustering_sort
 
 
 def count_events_in_year(events: DataFrame, year: int) -> DataFrame:
@@ -88,13 +88,15 @@ SILVER_SQL = {
 def _write_fact(
     fact: DataFrame, path: str, partition_cols: list[str], rows: int
 ) -> None:
-    """Overwrite one fact table. An empty fact is written unpartitioned
-    as a single empty file: a partitioned empty write emits no parquet
-    footer at all, leaving the path unreadable."""
-    writer = fact.write.format(TABLE_FORMAT).mode("overwrite")
+    """Overwrite one fact table from one task. An empty fact is written
+    unpartitioned as a single empty file: a partitioned empty write
+    emits no parquet footer at all, leaving the path unreadable."""
+    writer = fact.write
     if rows:
-        writer = writer.partitionBy(*partition_cols)
-    writer.save(path)
+        writer = clustering_sort(fact, partition_cols).write.partitionBy(
+            *partition_cols
+        )
+    writer.format(TABLE_FORMAT).mode("overwrite").save(path)
 
 
 def build_silver_layer(

@@ -461,6 +461,20 @@ def _dsum(col, scale: int = 2):
     return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
 
 
+def _sort_bounded(df: DataFrame, *cols) -> DataFrame:
+    """ORDER BY for a key-bounded aggregate: one task sorts it, with no
+    range-sampling job and no range shuffle.
+
+    Use it only on an aggregate whose row count is bounded by the fixed
+    domain of its group keys (flags, statuses, date parts, the 25
+    nations or 5 regions), never by the input, and whose final
+    aggregate is fed by an exchange. ``coalesce`` is narrow, so only
+    the final aggregate's stage, after that exchange, collapses to one
+    task; the scan and the partial aggregate keep their parallelism at
+    any scale."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 # ---------------------------------------------------------------------------
 # Reference parity: aggregations A1-A5
 # (/root/reference/usgs_tsunami_count_fact_silver.py:31-55,116-124)
@@ -493,7 +507,7 @@ def a2_count_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy(F.year("ts").alias("year"))
         .agg(F.count("*").alias("cnt"))
-        .orderBy("year")
+        .transform(_sort_bounded, "year")
     )
 
 
@@ -517,7 +531,7 @@ def a3_fact_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "error")
         .groupBy(F.year("ts").alias("year"))
         .agg(F.count("*").alias("yearly_count"))
-        .orderBy("year")
+        .transform(_sort_bounded, "year")
     )
 
 
@@ -542,7 +556,7 @@ def a4_fact_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "error")
         .groupBy(F.year("ts").alias("year"), F.month("ts").alias("month"))
         .agg(F.count("*").alias("monthly_count"))
-        .orderBy("year", "month")
+        .transform(_sort_bounded, "year", "month")
     )
 
 
@@ -603,7 +617,7 @@ def f2_time_filter_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.dayofmonth("ts").alias("day"))
         .agg(F.count("*").alias("cnt"))
-        .orderBy("day")
+        .transform(_sort_bounded, "day")
     )
 
 
@@ -722,7 +736,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sum_disc_price"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(_sort_bounded, "l_returnflag", "l_linestatus")
     )
 
 
@@ -821,7 +835,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "revenue"
             )
         )
-        .orderBy("r_name")
+        .transform(_sort_bounded, "r_name")
     )
 
 
@@ -976,7 +990,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "revenue"
             )
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        .transform(_sort_bounded, "supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -1064,7 +1078,7 @@ def distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("n_users"),
             F.count("*").alias("n_events"),
         )
-        .orderBy("event_type")
+        .transform(_sort_bounded, "event_type")
     )
 
 
@@ -1088,7 +1102,7 @@ def agg_minmax_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.unix_micros("ts")).alias("first_ts_us"),
             F.max(F.unix_micros("ts")).alias("last_ts_us"),
         )
-        .orderBy("event_type")
+        .transform(_sort_bounded, "event_type")
     )
 
 
@@ -1103,8 +1117,10 @@ def agg_minmax_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_rollup_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping set: per-type counts plus the grand total."""
     ev = load_table(spark, sf_dir, "events")
-    return ev.rollup("event_type").agg(F.count("*").alias("cnt")).orderBy(
-        F.col("event_type").asc_nulls_first()
+    return (
+        ev.rollup("event_type")
+        .agg(F.count("*").alias("cnt"))
+        .transform(_sort_bounded, F.col("event_type").asc_nulls_first())
     )
 
 

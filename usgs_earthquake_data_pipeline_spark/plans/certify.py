@@ -23,9 +23,10 @@ entry says which algebra a contract uses by calling it:
 A leg only one entry uses stays inline in that entry.
 
 The truth sets (exact cosine all-pairs, exact and prefix-filtered
-Jaccard pairs at t=0.3, exact cosine pairs at t=0.3, the k=1 SemDeDup
-survivors) are built once per (session, sf_dir, table files) and
-pinned, so repeated certification of the same corpus reuses them.
+Jaccard pairs at t=0.3 and the clusters of the latter, exact cosine
+pairs at t=0.3, the k=1 SemDeDup survivors) are built once per
+(session, sf_dir, table files) and pinned, so repeated certification
+of the same corpus reuses them.
 """
 
 from __future__ import annotations
@@ -335,6 +336,18 @@ def prefix03_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda docs: D.ngram_jaccard_prefix_pairs(
             docs, "doc_id", "text", threshold=0.3
         ),
+    )
+
+
+def prefix03_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pinned exact clusters of :func:`prefix03_pairs`: (id,
+    canonical_id) from ``resolve_dup_clusters``, the truth labels the
+    exact side of ``dedup_resolve_clusters_lsh`` checks its LSH
+    clusters against. The production cluster entries run their own
+    loop: their labels are their payload."""
+    return _truth_cached(
+        spark, sf_dir, "prefix03_clusters", "documents",
+        lambda _docs: D.resolve_dup_clusters(prefix03_pairs(spark, sf_dir)),
     )
 
 

@@ -380,9 +380,7 @@ def dedup_resolve_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(materialize_lazy)
     )
     clusters = D.two_phase_components(lsh).transform(materialize_lazy)
-    exact_clusters = D.resolve_dup_clusters(
-        C.prefix03_pairs(spark, sf_dir)
-    )
+    exact_clusters = C.prefix03_clusters(spark, sf_dir)
     refine = C.same_label_ok(lsh, exact_clusters, "clusters_refine_exact_ok")
     strong = C.exact_jaccard03(spark, sf_dir).filter(
         F.col("jaccard") >= 0.9

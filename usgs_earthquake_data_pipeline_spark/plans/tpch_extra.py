@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import _dsum, register
+from .catalog import _dsum, _sort_bounded, register
 
 
 @register(
@@ -57,7 +57,7 @@ def q4_priority_late_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
+        .transform(_sort_bounded, "o_orderpriority")
     )
 
 
@@ -98,7 +98,7 @@ def q9_profit_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "profit"
             )
         )
-        .orderBy(F.col("nation"), F.col("o_year").desc())
+        .transform(_sort_bounded, F.col("nation"), F.col("o_year").desc())
     )
 
 
@@ -134,7 +134,7 @@ def q12_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(is_high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~is_high, 1).otherwise(0)).alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
+        .transform(_sort_bounded, "l_linestatus")
     )
 
 
@@ -349,7 +349,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("numcust"),
             _dsum(F.col("c_acctbal")).alias("totacctbal"),
         )
-        .orderBy("c_nationkey")
+        .transform(_sort_bounded, "c_nationkey")
     )
 
 
@@ -464,7 +464,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / _dsum(vol, scale=4)
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
+        .transform(_sort_bounded, "o_year")
     )
 
 
