@@ -98,3 +98,22 @@ def test_loop_pins_do_not_grow_with_depth(spark, sf_dir, loop):
         assert shallow == ([0], d + 1) and deep == ([0], 4 * d + 1)
     else:
         assert deep == shallow
+
+
+def test_truth_clusters_leave_one_pin(spark, tmp_path):
+    """The memoized truth labels are ``resolve_dup_clusters``' own
+    pinned labels, taken as is: the first call on new data leaves one
+    pin, not a second pin over the first."""
+    from tools.gen_testdata import generate
+    from usgs_earthquake_data_pipeline_spark.plans.certify import (
+        prefix03_clusters,
+        prefix03_pairs,
+    )
+
+    d = str(tmp_path / "sf")
+    generate(0.001, d, only={"documents"})
+    prefix03_pairs(spark, d)  # the shared pairs' pin is not the labels'
+    pins, labels = _new_pins(spark, lambda: prefix03_clusters(spark, d))
+    assert pins == 1, pins
+    assert prefix03_clusters(spark, d) is labels
+    assert labels.count() > 0

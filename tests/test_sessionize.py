@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-import pytest
 from pyspark.sql import functions as F
 
 from usgs_earthquake_data_pipeline_spark.streaming.sessionize import (
@@ -152,346 +151,3 @@ def test_batch_sessionization_on_driver_events(spark, sf_dir):
         .count()
     )
     assert overlap == 0
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (sessionize_tws.py)
-# ---------------------------------------------------------------------------
-
-ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-@pytest.fixture()
-def rocksdb_state(spark):
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, ROCKSDB)
-    yield
-    if old is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, old)
-
-
-def test_tws_sessionization_matches_batch_twin(spark, tmp_path, rocksdb_state):
-    from usgs_earthquake_data_pipeline_spark.streaming.sessionize_tws import (
-        sessionize_stream_tws,
-    )
-    pytest.importorskip("google.protobuf")  # TWS python worker dependency
-
-
-    df = spark.createDataFrame(_events(), "user_id long, ts timestamp, value double")
-    src = str(tmp_path / "src")
-    df.write.parquet(src)
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .parquet(src)
-    )
-    sessions = sessionize_stream_tws(stream, gap_seconds=1800, watermark="0 seconds")
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("t_tws_sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.session_start, r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM t_tws_sessions").collect()
-    }
-    # same emission semantics as the applyInPandasWithState operator:
-    # only the in-run gap-closed session emits in one availableNow pass
-    assert (1, T0, 3, 16.0) in got
-
-
-def test_tws_timer_closes_session_across_batches(spark, tmp_path, rocksdb_state):
-    """Second micro-batch advances the watermark past end+gap of a
-    session from the first batch: the registered event-time timer must
-    fire and emit it — including after a timer was superseded by an
-    in-gap extension (stale-timer guard)."""
-    import os
-
-    from usgs_earthquake_data_pipeline_spark.streaming.sessionize_tws import (
-        sessionize_stream_tws,
-    )
-    pytest.importorskip("google.protobuf")  # TWS python worker dependency
-
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    batch1 = spark.createDataFrame(
-        [(1, T0, 10.0), (1, T0 + timedelta(minutes=10), 5.0)],
-        "user_id long, ts timestamp, value double",
-    )
-    batch1.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    sessions = sessionize_stream_tws(stream, gap_seconds=1800, watermark="0 seconds")
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("t_tws_timer")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    # a far-future event for another user drags the watermark forward
-    batch2 = spark.createDataFrame(
-        [(2, T0 + timedelta(hours=6), 1.0)],
-        "user_id long, ts timestamp, value double",
-    )
-    batch2.coalesce(1).write.mode("append").parquet(src)
-    q2 = (
-        sessions.writeStream.format("memory")
-        .queryName("t_tws_timer")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(180)
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM t_tws_timer").collect()
-    }
-    # user 1's session (extended once, so its first timer was
-    # superseded) closes via the surviving timer in batch 2
-    assert (1, T0, T0 + timedelta(minutes=10), 2, 15.0) in got
-
-
-# ---------------------------------------------------------------------------
-# TWS processor state machine under a fake handle (the streaming
-# engine's python worker needs protobuf, absent in this env — the
-# processor logic is driven directly, the same fake-boundary approach
-# as the Cassandra sink tests)
-# ---------------------------------------------------------------------------
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.timers = set()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-    def registerTimer(self, ms):
-        self.timers.add(ms)
-
-    def deleteTimer(self, ms):
-        self.timers.discard(ms)
-
-
-class _FakeExpiredTimerInfo:
-    def __init__(self, ms):
-        self._ms = ms
-
-    def getExpiryTimeInMs(self):
-        return self._ms
-
-
-def _drive_tws(batches_per_user, gap_seconds, watermarks_after):
-    """Run GapSessionProcessor per user over micro-batches, firing
-    registered timers whose expiry <= the watermark after each batch
-    (what the engine does as the event-time watermark advances)."""
-    import pandas as pd
-
-    from usgs_earthquake_data_pipeline_spark.streaming.sessionize_tws import (
-        GapSessionProcessor,
-    )
-
-    out = []
-    for user_id, batches in batches_per_user.items():
-        proc = GapSessionProcessor(gap_seconds)
-        handle = _FakeHandle()
-        proc.init(handle)
-        for batch, wm_ms in zip(batches, watermarks_after):
-            if batch:
-                pdf = pd.DataFrame(batch, columns=["ts", "value"])
-                pdf["ts"] = pd.to_datetime(pdf["ts"])
-                out.extend(
-                    frame
-                    for frame in proc.handleInputRows((user_id,), iter([pdf]), None)
-                )
-            for ms in sorted(handle.timers):
-                if ms <= wm_ms:
-                    handle.timers.discard(ms)
-                    out.extend(
-                        frame
-                        for frame in proc.handleExpiredTimer(
-                            (user_id,), None, _FakeExpiredTimerInfo(ms)
-                        )
-                    )
-    import pandas as pd
-
-    return (
-        pd.concat(out, ignore_index=True)
-        if out
-        else pd.DataFrame(
-            columns=["user_id", "session_start", "session_end", "n_events", "sum_value"]
-        )
-    )
-
-
-def test_tws_processor_matches_batch_twin_on_fake_harness(spark):
-    """All events in one batch + watermark far ahead: emissions must
-    equal sessionize_batch on the same rows."""
-    rows = _events()
-    batches = {}
-    for uid, ts, v in rows:
-        batches.setdefault(uid, [[]])[0].append((ts, v))
-    wm = int((T0 + timedelta(days=1)).timestamp() * 1000)
-    got = _drive_tws(batches, 1800, [wm])
-    got_set = {
-        (r.user_id, r.session_start.to_pydatetime(), r.n_events, r.sum_value)
-        for r in got.itertuples()
-    }
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    want = {
-        (r.user_id, r.session_start, r.n_events, r.sum_value)
-        for r in sessionize_batch(df, gap_seconds=1800).collect()
-    }
-    assert got_set == want
-
-
-def test_tws_processor_stale_timer_is_ignored(spark):
-    """A session extension supersedes its close timer; the processor
-    deletes the old timer, and even if a stale one fired it must not
-    close the live session early."""
-    from usgs_earthquake_data_pipeline_spark.streaming.sessionize_tws import (
-        GapSessionProcessor,
-    )
-    import pandas as pd
-
-    proc = GapSessionProcessor(1800)
-    handle = _FakeHandle()
-    proc.init(handle)
-
-    b1 = pd.DataFrame({"ts": pd.to_datetime([T0]), "value": [1.0]})
-    list(proc.handleInputRows((1,), iter([b1]), None))
-    (t1,) = handle.timers
-    b2 = pd.DataFrame(
-        {"ts": pd.to_datetime([T0 + timedelta(minutes=10)]), "value": [2.0]}
-    )
-    list(proc.handleInputRows((1,), iter([b2]), None))
-    assert t1 not in handle.timers  # superseded timer deleted
-    # a stale firing (engine already had it queued) must be a no-op
-    emitted = list(proc.handleExpiredTimer((1,), None, _FakeExpiredTimerInfo(t1)))
-    assert emitted == []
-    assert handle.state.exists()
-    # the current timer closes the (extended) session
-    (t2,) = handle.timers
-    emitted = list(proc.handleExpiredTimer((1,), None, _FakeExpiredTimerInfo(t2)))
-    assert len(emitted) == 1 and emitted[0]["n_events"].iloc[0] == 2
-    assert not handle.state.exists()
-
-
-def test_tws_processor_late_event_extends_not_shrinks(spark):
-    """Same late-arrival rule as the applyInPandasWithState twin: a
-    late in-watermark event must never move session_end backwards."""
-    from usgs_earthquake_data_pipeline_spark.streaming.sessionize_tws import (
-        GapSessionProcessor,
-    )
-    import pandas as pd
-
-    proc = GapSessionProcessor(1800)
-    handle = _FakeHandle()
-    proc.init(handle)
-    b1 = pd.DataFrame(
-        {"ts": pd.to_datetime([T0 + timedelta(minutes=20)]), "value": [1.0]}
-    )
-    list(proc.handleInputRows((1,), iter([b1]), None))
-    end_before = handle.state.get()[1]
-    b2 = pd.DataFrame({"ts": pd.to_datetime([T0]), "value": [2.0]})  # late
-    list(proc.handleInputRows((1,), iter([b2]), None))
-    s_us, e_us, n, sv, timer_ms = handle.state.get()
-    assert e_us == end_before  # end unchanged
-    assert s_us == int(T0.timestamp() * 1_000_000)  # start extended back
-    assert n == 2 and sv == 3.0
-
-
-def test_tws_and_batch_twin_agree_across_random_batchings(spark):
-    """Property-style cross-validation: the TWS processor must emit
-    the same closed sessions as sessionize_batch regardless of how
-    events are split into micro-batches (seeded shuffles)."""
-    import random
-
-    rows = []
-    rng = random.Random(42)
-    for uid in (1, 2, 3):
-        t = T0
-        for _ in range(12):
-            t = t + timedelta(minutes=rng.choice([5, 10, 25, 45]))
-            rows.append((uid, t, float(rng.randint(1, 9))))
-
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    want = {
-        (r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value)
-        for r in sessionize_batch(df, gap_seconds=1800).collect()
-    }
-
-    for seed in (0, 1, 2):
-        # the streaming contract: batches advance in time per key
-        # (watermark order); ARBITRARY disorder is allowed only
-        # WITHIN a batch. Cross-batch time travel into an already
-        # gap-closed session is out of contract for any append-mode
-        # sessionizer (the batch twin, with global hindsight, would
-        # assign it differently) — so chunks are contiguous in time
-        # and shuffled internally.
-        batches_per_user = {}
-        per_user = {}
-        for uid, ts, v in rows:
-            per_user.setdefault(uid, []).append((ts, v))
-        rng2 = random.Random(seed)
-        for uid, evs in per_user.items():
-            evs = sorted(evs)
-            c1, c2 = rng2.randint(1, len(evs) - 2), rng2.randint(2, len(evs) - 1)
-            c1, c2 = min(c1, c2), max(c1, c2)
-            chunks = [evs[:c1], evs[c1:c2], evs[c2:]]
-            for chunk in chunks:
-                rng2.shuffle(chunk)
-            batches_per_user[uid] = chunks
-        wm = int((T0 + timedelta(days=2)).timestamp() * 1000)
-        # watermark passes everything only after the final batch
-        got_df = _drive_tws(batches_per_user, 1800, [0, 0, wm])
-        got = {
-            (
-                r.user_id,
-                r.session_start.to_pydatetime(),
-                r.session_end.to_pydatetime(),
-                r.n_events,
-                r.sum_value,
-            )
-            for r in got_df.itertuples()
-        }
-        assert got == want, f"seed {seed}: TWS diverged from batch twin"

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from usgs_earthquake_data_pipeline_spark import sinks
@@ -78,13 +80,20 @@ def test_stream_silver_watermarked_counts(spark, tmp_path):
     assert out[0].window_start is not None
 
 
-def test_bronze_filesink_exactly_once_on_retrigger(spark, tmp_path):
-    """Native file-sink ingest: re-triggering with no new input adds
-    nothing; new input adds exactly its rows (manifest-committed)."""
-    from usgs_earthquake_data_pipeline_spark.streaming.ingest import (
-        stream_geojson_to_bronze_filesink,
-    )
+def _land(spark, tmp_path, doc, ckpt="ckpt"):
+    """Stream one GeoJSON document file into ``tmp_path/bronze``."""
+    src = tmp_path / "in"
+    src.mkdir(exist_ok=True)
+    (src / f"{ckpt}.json").write_text(doc + "\n")
+    bronze = str(tmp_path / "bronze")
+    q = stream_geojson_to_bronze(spark, str(src), bronze, str(tmp_path / ckpt))
+    q.awaitTermination(180)
+    return bronze
 
+
+def test_bronze_exactly_once_on_retrigger(spark, tmp_path):
+    """Re-triggering with no new input adds nothing; new input adds
+    exactly its rows (committed through the sink's log)."""
     src = str(tmp_path / "in")
     bronze = str(tmp_path / "bronze")
     ckpt = str(tmp_path / "ckpt")
@@ -92,48 +101,111 @@ def test_bronze_filesink_exactly_once_on_retrigger(spark, tmp_path):
     with open(os.path.join(src, "a.json"), "w") as f:
         f.write(_doc(["a1", "a2", "a3"]) + "\n")
 
-    q = stream_geojson_to_bronze_filesink(spark, src, bronze, ckpt)
+    q = stream_geojson_to_bronze(spark, src, bronze, ckpt)
     q.awaitTermination(180)
     assert spark.read.parquet(bronze).count() == 3
 
     # retrigger with nothing new: checkpoint prevents reprocessing
-    q = stream_geojson_to_bronze_filesink(spark, src, bronze, ckpt)
+    q = stream_geojson_to_bronze(spark, src, bronze, ckpt)
     q.awaitTermination(180)
     assert spark.read.parquet(bronze).count() == 3
 
     with open(os.path.join(src, "b.json"), "w") as f:
         f.write(_doc(["b1"]) + "\n")
-    q = stream_geojson_to_bronze_filesink(spark, src, bronze, ckpt)
+    q = stream_geojson_to_bronze(spark, src, bronze, ckpt)
     q.awaitTermination(180)
     assert spark.read.parquet(bronze).count() == 4
 
 
-def test_bronze_foreachbatch_replay_is_idempotent(spark, tmp_path):
-    """replay_idempotent mode: re-running a batch id lands on the same
-    ingest_batch directory in overwrite mode — simulate the
-    crash-after-write-before-commit replay by deleting the checkpoint
-    and re-streaming the same input; row count must not double."""
-    src = str(tmp_path / "in")
-    bronze = str(tmp_path / "bronze")
-    os.makedirs(src)
-    with open(os.path.join(src, "a.json"), "w") as f:
-        f.write(_doc(["a1", "a2"]) + "\n")
-
-    q = stream_geojson_to_bronze(
-        spark, src, bronze, str(tmp_path / "ckpt1"), replay_idempotent=True
-    )
-    q.awaitTermination(180)
+def test_bronze_replay_from_fresh_checkpoint_is_idempotent(spark, tmp_path):
+    """The crash-after-write-before-commit worst case: a fresh
+    checkpoint replays batch 0 over the same input, and the sink's log,
+    which already holds batch 0, skips it; the rows do not double."""
+    bronze = _land(spark, tmp_path, _doc(["a1", "a2"]), ckpt="ckpt1")
     assert spark.read.parquet(bronze).count() == 2
-
-    # fresh checkpoint => batch 0 replays from scratch (worst case)
+    src = tmp_path / "in"
     q = stream_geojson_to_bronze(
-        spark, src, bronze, str(tmp_path / "ckpt2"), replay_idempotent=True
+        spark, str(src), bronze, str(tmp_path / "ckpt2")
     )
     q.awaitTermination(180)
     df = spark.read.parquet(bronze)
-    assert df.count() == 2  # overwrote itself, no duplicates
-    # events columns unaffected by the extra partition level
+    assert df.count() == 2
     assert df.select("id").distinct().count() == 2
+
+
+def test_stream_bronze_feeds_silver_layer(spark, tmp_path):
+    """A stream-landed bronze, read by its declared schema, is the
+    batch bronze to the silver layer: the same facts come out."""
+    from usgs_earthquake_data_pipeline_spark.operators.silver import (
+        build_silver_layer,
+    )
+    from usgs_earthquake_data_pipeline_spark.schema import USGS_EVENTS_SCHEMA
+
+    feb_2024 = JAN_2024 + 31 * 86400000
+    docs = _doc(["t1", "t2"]) + "\n" + _doc(["n1"], ts_ms=feb_2024, tsunami=0)
+    bronze = _land(spark, tmp_path, docs)
+    events = sinks.read_partitioned_table(
+        spark, bronze, schema=USGS_EVENTS_SCHEMA
+    )
+    assert events.count() == 3
+    yearly, monthly = str(tmp_path / "yearly"), str(tmp_path / "monthly")
+    build_silver_layer(events, yearly, monthly)
+    got = sinks.read_partitioned_table(spark, yearly).select(
+        "year", "tsunami_yearly_count"
+    )
+    assert [tuple(r) for r in got.collect()] == [(2024, 2)]
+    got = sinks.read_partitioned_table(spark, monthly).select(
+        "year", "month", "tsunami_monthly_count"
+    )
+    assert [tuple(r) for r in got.collect()] == [(2024, 1, 2)]
+
+
+def test_batch_write_into_stream_bronze_raises(spark, tmp_path):
+    """The sink's log hides files a batch write adds, so every
+    append-type write refuses a stream-landed root, naming it, before
+    launching any Spark job; the bronze keeps its rows."""
+    from usgs_earthquake_data_pipeline_spark.schema import USGS_EVENTS_SCHEMA
+
+    bronze = _land(spark, tmp_path, _doc(["a1", "a2"]))
+    row = sinks.read_partitioned_table(
+        spark, bronze, schema=USGS_EVENTS_SCHEMA
+    ).limit(1)
+    writes = {
+        "append": lambda: sinks.save_partitioned_table(row, bronze),
+        "unpartitioned append": lambda: sinks.save_partitioned_table(
+            row, bronze, partition_cols=[]
+        ),
+        "upsert": lambda: sinks.upsert_partitions(row, bronze),
+    }
+    sc = spark.sparkContext
+    for name, write in writes.items():
+        sc.setJobGroup(name, name)
+        try:
+            with pytest.raises(ValueError, match=re.escape(bronze)):
+                write()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(name) == [], name
+    with pytest.raises(ValueError, match=re.escape(bronze)):
+        sinks.merge_rows(spark, bronze, row, ["id"])
+    assert sinks.read_partitioned_table(spark, bronze).count() == 2
+
+
+def test_run_etl_refuses_a_stream_landed_bronze(spark, tmp_path):
+    """The batch ETL's bronze landing is an append: pointed at a
+    stream-landed root it fails loudly instead of writing files no
+    reader would see."""
+    from usgs_earthquake_data_pipeline_spark import pipeline
+
+    bronze = _land(spark, tmp_path, _doc(["a1", "a2"]))
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        pipeline.run_etl(
+            spark, 2024, 2024, bronze, str(tmp_path / "yearly"),
+            str(tmp_path / "monthly"), api_url="http://x", limit=100,
+            http_get=lambda url: (200, _doc(["z1"])),
+        )
+    assert sinks.read_partitioned_table(spark, bronze).count() == 2
 
 
 def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir):

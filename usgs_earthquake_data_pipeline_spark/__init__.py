@@ -11,7 +11,8 @@ Layout
                    multimodal column plumbing.
 - ``functions``  : column-level helpers (text analysis, vector math, hashing).
 - ``plans``      : the named-query catalog (Spark callable + DuckDB oracle SQL).
-- ``streaming``  : Structured Streaming ingest (bronze append, silver upsert).
+- ``streaming``  : Structured Streaming (exactly-once file-sink bronze,
+                   watermarked silver counts, gap sessionizer, MV fold).
 - ``sinks``      : CSV/JSON/parquet/delta partitioned writers, Cassandra stub.
 - ``pipeline``   : driver-side orchestration (month windows, pagination,
                    granularity fallback).

@@ -51,15 +51,6 @@ def bpe_token_count(col: Column | str) -> Column:
     return F.regexp_count(c, F.lit(_BPE_RE))
 
 
-def avg_token_length(col: Column | str) -> Column:
-    """Mean token length in characters (NULL for empty text)."""
-    toks = tokens(col)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return F.when(F.size(toks) > 0, total / F.size(toks))
-
-
 def stopword_ratio(col: Column | str, stopwords: tuple[str, ...]) -> Column:
     """Fraction of tokens that are stopwords (0.0 for empty text)."""
     toks = tokens(F.lower(F.col(col) if isinstance(col, str) else col))
@@ -74,26 +65,6 @@ def punctuation_ratio(col: Column | str) -> Column:
     nonspace = F.length(F.regexp_replace(c, r"\s", ""))
     punct = F.regexp_count(c, F.lit(r"[^A-Za-z0-9_\s]"))
     return F.when(nonspace > 0, punct / nonspace).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column | str) -> Column:
-    """Heuristic [0,1] quality score for training-data filtering.
-
-    Combines length, stopword presence, and punctuation sanity — the
-    standard cheap pre-filter a corpus pipeline applies before
-    expensive dedup/model scoring. Weights are illustrative.
-    """
-    n_tok = token_count(col)
-    length_ok = F.when(n_tok.between(5, 100_000), F.lit(1.0)).otherwise(
-        n_tok / F.lit(5.0)
-    )
-    sw = stopword_ratio(col, LANG_STOPWORDS["en"])
-    sw_ok = F.least(sw * 4, F.lit(1.0))  # ≥25% stopwords saturates
-    punct = punctuation_ratio(col)
-    punct_ok = F.lit(1.0) - F.least(punct * 2, F.lit(1.0))
-    return F.round(
-        (length_ok * 0.4 + sw_ok * 0.3 + punct_ok * 0.3).cast("double"), 6
-    )
 
 
 # Quality-gate thresholds — the single source for both the Spark
@@ -234,19 +205,6 @@ def fingerprint_md5(col: Column | str) -> Column:
     """Exact-content fingerprint (hex MD5) — the exact-dedup key."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(c)
-
-
-def rolling_fingerprint(col: Column | str, n: int = 3) -> Column:
-    """Order-sensitive document fingerprint: min 64-bit hash over the
-    document's word ``n``-gram shingles (a 1-hash MinHash). Robust to
-    small appends/truncations, unlike MD5 of the whole text."""
-    from ..operators.dedup import shingles
-
-    sh = shingles(col, n)
-    return F.when(
-        F.size(sh) > 0,
-        F.array_min(F.transform(sh, lambda s: F.xxhash64(s))),
-    )
 
 
 def word_ngrams(col: Column | str, n: int = 2) -> Column:

@@ -52,5 +52,10 @@ def release(df: DataFrame) -> None:
     Only for a pin nothing will read again: a frame still planned over
     it fails once its blocks are gone. A reliable checkpoint holds no
     cached blocks, so there it is a no-op (its files are Spark's to
-    clean, ``spark.cleaner.referenceTracking.cleanCheckpoints``)."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    clean, ``spark.cleaner.referenceTracking.cleanCheckpoints``).
+
+    The pin is dropped by RDD id through the context: ``RDD.unpersist``
+    would do the same and also log a WARN that a locally checkpointed
+    RDD cannot be recomputed, once per released round."""
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)

@@ -20,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -36,24 +36,6 @@ def quality_metrics() -> list:
         F.min("eventtime").alias("min_eventtime"),
         F.max("eventtime").alias("max_eventtime"),
     ]
-
-
-def with_quality_observation(
-    df: DataFrame, name: str = "bronze_window"
-) -> tuple[DataFrame, Observation]:
-    """Attach the standard quality counters to ``df``. The returned
-    DataFrame must flow into exactly one action; read
-    ``observation.get`` after that action completes.
-
-    ``Observation.get`` captures the FIRST action that executes the
-    CollectMetrics node. A partitioned append or upsert is one action,
-    the write, so attaching upstream of it is safe. A static overwrite
-    or an unpartitioned write probes with ``isEmpty`` first, a limit-1
-    partial scan that would capture rows=0/1; for any sink, pass
-    ``observation``/``metrics`` to it instead, and it attaches them
-    after any probe, immediately before the write."""
-    obs = Observation(name)
-    return df.observe(obs, *quality_metrics()), obs
 
 
 @contextmanager

@@ -236,10 +236,15 @@ def _table_fingerprint(sf_dir: str, table: str) -> tuple:
     return tuple(out)
 
 
-def _truth_cached(spark: SparkSession, sf_dir: str, name: str, table: str, build):
+def _truth_cached(
+    spark: SparkSession, sf_dir: str, name: str, table: str, build, *,
+    pinned: bool = False,
+):
     """Memoized pin of a shared truth set. ``build`` takes the loaded
-    source table and returns the truth DataFrame. Safe to share: every
-    consumer treats the result as an immutable relation."""
+    source table and returns the truth DataFrame; ``pinned=True`` says
+    that frame already reads only a pin (``resolve_dup_clusters``'
+    labels) and is kept as is, not pinned a second time. Safe to
+    share: every consumer treats the result as an immutable relation."""
     per = _TRUTH_MEMO.setdefault(spark, {})
     key = (name, os.path.normpath(sf_dir), _table_fingerprint(sf_dir, table))
     if key not in per:
@@ -247,7 +252,8 @@ def _truth_cached(spark: SparkSession, sf_dir: str, name: str, table: str, build
         # a regenerate-loop can't grow the memo without bound
         for old in [k for k in per if k[:2] == key[:2]]:
             del per[old]
-        per[key] = build(load_table(spark, sf_dir, table)).transform(materialize)
+        truth = build(load_table(spark, sf_dir, table))
+        per[key] = truth if pinned else truth.transform(materialize)
     return per[key]
 
 
@@ -348,6 +354,7 @@ def prefix03_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _truth_cached(
         spark, sf_dir, "prefix03_clusters", "documents",
         lambda _docs: D.resolve_dup_clusters(prefix03_pairs(spark, sf_dir)),
+        pinned=True,
     )
 
 

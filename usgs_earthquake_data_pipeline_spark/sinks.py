@@ -41,6 +41,12 @@ overwrite (Spark deletes the target before writing) and an
 unpartitioned write (Spark writes one empty part file). A caller's
 ``observation``/``metrics`` are attached inside the sink, next to the
 row count and after any probe, so they always describe the write job.
+
+A root that ``streaming/ingest.stream_geojson_to_bronze`` lands holds
+the file sink's ``_spark_metadata`` log, and Spark reads such a root
+through the log alone, so files a batch write added there would never
+be read: the append and upsert writes (and so ``merge_rows``) refuse
+it (``_append_target``, file-system calls only, no job).
 """
 
 from __future__ import annotations
@@ -137,7 +143,8 @@ def save_partitioned_table(
     Returns True when data was written, False on empty input, which
     never creates or changes a table (the reference's F3 ingest
     semantics). Raises ValueError on an invalid mode (reference
-    save_to_raw_delta_prod.py:127-128).
+    save_to_raw_delta_prod.py:127-128), and on an append into a
+    streaming file sink's root (module docstring).
 
     A partitioned append launches ONE Spark job, the write: it counts
     its own rows (``_save_counted``) instead of probing first. A static
@@ -212,6 +219,8 @@ def save_partitioned_table(
                     "incompatible schema evolution: " + "; ".join(diff.breaking)
                 )
     probe = mode == "overwrite" or not partition_cols
+    if mode == "append" and not partition_cols:
+        _append_target(df.sparkSession, path)
     if probe and df.isEmpty():
         return False
     out = clustering_sort(df, partition_cols, cluster_cols) if partition_cols else df
@@ -240,9 +249,7 @@ def _save_counted(out: DataFrame, path: str, write: Callable[[DataFrame], None])
     Returns whether any row was written. After an empty write, a path
     this call created is removed again if it holds only commit markers
     (``_drop_marker_only_dir``), so empty input creates no table."""
-    jvm, fs = _fs_for(out.sparkSession, path)
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    existed = fs.exists(hpath)
+    fs, hpath, existed = _append_target(out.sparkSession, path)
     counted = Observation()
     write(out.observe(counted, F.count(F.lit(1)).alias("rows")))
     if counted.get["rows"]:
@@ -250,6 +257,22 @@ def _save_counted(out: DataFrame, path: str, write: Callable[[DataFrame], None])
     if not existed:
         _drop_marker_only_dir(fs, hpath)
     return False
+
+
+def _append_target(spark, path: str):
+    """``(fs, hadoop_path, existed)`` of an append or upsert target.
+    Raises ValueError when an existing target is a streaming file
+    sink's root, one that holds ``_spark_metadata`` (module docstring)."""
+    jvm, fs = _fs_for(spark, path)
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    existed = fs.exists(hpath)
+    if existed and fs.exists(jvm.org.apache.hadoop.fs.Path(hpath, "_spark_metadata")):
+        raise ValueError(
+            f"{path} is a streaming file sink's root (it holds _spark_metadata); "
+            "Spark reads it through the sink's log, so a batch write there "
+            "would never be read"
+        )
+    return fs, hpath, existed
 
 
 def _drop_marker_only_dir(fs, hpath) -> None:
@@ -319,6 +342,7 @@ def upsert_partitions(
     upsert launches ONE Spark job, the write, which counts its own
     rows (``_save_counted``); no probe runs. ``observation`` +
     ``metrics`` ride that job as in ``save_partitioned_table``.
+    Raises ValueError on a streaming file sink's root.
     """
     partition_cols = partition_cols if partition_cols is not None else RAW_PARTITION_COLS
     out = clustering_sort(df, partition_cols, cluster_cols)

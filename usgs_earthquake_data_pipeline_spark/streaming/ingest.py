@@ -7,22 +7,29 @@ reads via ignoreDeletes/readChangeFeed options it passes to Polars
 
 - ``stream_geojson_to_bronze``: file-arrival stream of GeoJSON
   documents (one FeatureCollection per line) → parse (same
-  from_json/explode plan as batch) → partitioned bronze append via
-  foreachBatch. ``availableNow`` trigger = the cron-batch shape;
-  ``processingTime`` = continuous ingest. Delivery is AT-LEAST-ONCE:
-  the checkpoint prevents re-reading committed input, but a crash
-  between the batch's append and the checkpoint commit replays that
-  batch. Downstream exact semantics come from the dedup operators
-  (exact_dedup on event id) or a transactional sink (Delta + txn
-  app/batch id) — a blind parquet append alone cannot be exactly-once.
+  from_json/explode plan as batch) → Spark's native parquet file sink,
+  partitioned ``year, month`` like the batch bronze. ``availableNow``
+  trigger = the cron-batch shape; ``processingTime`` = continuous
+  ingest. Delivery is EXACTLY-ONCE: the sink commits each batch's
+  files to its ``_spark_metadata`` log under the batch id, so a batch
+  replayed after a crash finds its entry and is skipped, and readers
+  that go through Spark see only committed files. The
+  log binds the root to one checkpoint: a new checkpoint restarts at
+  batch 0, and the sink skips every batch id its log already holds,
+  new input included.
+
+  Batch writers must not share a stream bronze root: Spark reads such
+  a root through its log, so files a batch append adds would never be
+  read. The ``sinks`` append and upsert writes refuse a target that
+  holds ``_spark_metadata``.
 - ``stream_silver_counts``: incremental silver — watermarked windowed
   counts over eventtime, the streaming twin of fact_tsunami_monthly.
   Late events beyond the watermark are dropped (documented bound),
   in-watermark updates revise the counts.
 
-At scale both are standard stateful-streaming shapes: state is keyed
-by (window, year/month) — bounded by the watermark horizon, not by
-input volume.
+At scale the bronze landing is a stateless map per micro-batch, and
+the silver counts keep state keyed by window — bounded by the
+watermark horizon, not by input volume.
 """
 
 from __future__ import annotations
@@ -31,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sinks import save_partitioned_table
+from ..sinks import RAW_PARTITION_COLS
 from ..sources.geojson import geojson_docs_to_events
 
 
@@ -42,63 +49,17 @@ def stream_geojson_to_bronze(
     checkpoint_path: str,
     *,
     available_now: bool = True,
-    replay_idempotent: bool = False,
 ) -> StreamingQuery:
     """Bronze ingest stream: watch ``input_path`` for GeoJSON document
     files (one FeatureCollection JSON per line), flatten to canonical
-    events, append partitioned.
-
-    ``replay_idempotent=True`` upgrades the at-least-once foreachBatch
-    append to effective exactly-once: each micro-batch lands in its own
-    ``ingest_batch=<id>`` directory in OVERWRITE mode, so a crash
-    between write and checkpoint commit replays the batch onto ITSELF
-    instead of duplicating rows — the standard "make the write a
-    deterministic function of batchId" recipe. The extra directory
-    level reads back as a partition column and costs nothing at scan
-    time (readers that project events never touch it)."""
-    raw = spark.readStream.text(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        events = geojson_docs_to_events(batch_df, "value")
-        if replay_idempotent:
-            save_partitioned_table(
-                events,
-                f"{bronze_path.rstrip('/')}/ingest_batch={batch_id}",
-                mode="overwrite",
-            )
-        else:
-            save_partitioned_table(events, bronze_path, mode="append")
-
-    writer = (
-        raw.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_geojson_to_bronze_filesink(
-    spark: SparkSession,
-    input_path: str,
-    bronze_path: str,
-    checkpoint_path: str,
-    *,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Exactly-once bronze ingest via the NATIVE file sink: same parse
-    plan, but the partitioned parquet write goes through Spark's
-    streaming file sink, whose ``_spark_metadata`` manifest commits
-    each batch's files atomically with the checkpoint — replayed
-    batches overwrite their own manifest entry, so readers never see
-    duplicates. The trade-off vs foreachBatch: no empty-skip or custom
-    landing logic, and consumers listing files directly (outside
-    Spark) must honor the manifest."""
+    events and land them exactly-once through Spark's native parquet
+    file sink, partitioned ``year, month``. One checkpoint per
+    ``bronze_path``, and no batch writer there (module docstring)."""
     raw = spark.readStream.text(input_path)
     events = geojson_docs_to_events(raw, "value")
     writer = (
         events.writeStream.format("parquet")
-        .partitionBy("year", "month")
+        .partitionBy(*RAW_PARTITION_COLS)
         .option("path", bronze_path)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("append")
@@ -169,8 +130,8 @@ def stream_events_to_geojson(
     micro-batch in OVERWRITE mode. The directory name is a
     deterministic function of batchId, so foreachBatch's
     at-least-once replay overwrites ITSELF instead of duplicating
-    features — the same idempotence recipe as
-    ``stream_geojson_to_bronze(replay_idempotent=True)``. Each batch
+    features. (The bronze landing needs no such recipe: its file
+    sink's log skips a replayed batch.) Each batch
     directory carries its own ``_MANIFEST.json`` (manifest published
     before stale-part deletes, so readers never see a torn commit).
 

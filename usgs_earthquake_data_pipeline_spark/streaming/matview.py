@@ -24,8 +24,8 @@ replayed BY THE SAME QUERY with ``batch_id <= marker`` is skipped. (Crash betwee
 write re-folds once — the marker write is therefore ordered first in
 `_fold` relative to the checkpoint advance, and the window is a
 single local rename; the residual risk equals the reference's own
-Delta-less ingest. The per-batch dirs variant in ``ingest.py`` shows
-the overwrite-based alternative.)
+Delta-less ingest. ``ingest.stream_events_to_geojson`` shows the
+overwrite-based alternative: one directory per batch id.)
 
 Scale: each fold reads the CURRENT VIEW (group-cardinality rows, not
 history) + the batch; one key-bounded shuffle. View reads stay
