@@ -561,62 +561,22 @@ def test_sixteen_writers_mixed_ops_serializable_history(spark, tmp_path):
         assert tags.count(f"a{t}") == 1
 
 
-def test_legacy_checksum_manifest_migrates_cleanly(spark, tmp_path):
-    """A table whose manifest was last written through Hadoop's
-    ChecksumFileSystem (fs.create + rename, leaving a
-    ``._latest_version.crc`` sidecar) must survive a raw-file commit:
-    the sidecar is retired during the commit, reads keep working, and
-    no new sidecars leak. Before this fix the stale crc made every
-    later fs.open die with ChecksumException — a bricked table."""
+def test_commit_leaves_no_sidecars_or_tmps(spark, tmp_path):
+    """The manifest is installed with raw file calls, so a commit
+    leaves no Hadoop ``.crc`` sidecar and no manifest tmp in the table
+    root, and the manifest reads back through ``fs.open``."""
     path = str(tmp_path / "vt")
-    base = spark.createDataFrame([(0, "base")], "id BIGINT, v STRING")
-    assert sinks.save_versioned_table(base, path) == 0
-    # simulate the legacy commit: rewrite the manifest THROUGH the
-    # checksum layer so the crc sidecar exists and matches
-    jvm, fs = sinks._fs_for(spark, path)
-    mpath = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(path, "_latest_version")
-    )
-    out = fs.create(mpath, True)
-    out.write(bytearray(b"0"))
-    out.close()
-    assert os.path.exists(os.path.join(path, "._latest_version.crc"))
-    # a new-code commit must retire the sidecar, not strand it stale
-    nxt = spark.createDataFrame([(1, "n")], "id BIGINT, v STRING")
-    assert sinks.save_versioned_table(nxt, path) == 1
-    assert sinks._read_latest(spark, path) == 1  # goes through fs.open
-    assert {
-        r.v for r in sinks.read_versioned_table(spark, path).collect()
-    } == {"n"}
-    assert not os.path.exists(os.path.join(path, "._latest_version.crc"))
-    # raw-file commits leave no tmp files and no crc sidecars behind
+    for tag in ("v0", "v1"):
+        sinks.save_versioned_table(
+            spark.createDataFrame([(1, tag)], "id BIGINT, v STRING"), path
+        )
+    assert sinks._read_latest(spark, path) == 1
     strays = [
         n
         for n in os.listdir(path)
         if n.endswith(".crc") or n.startswith("._manifest_tmp_")
     ]
     assert strays == [], strays
-
-
-def test_vacuum_retires_orphan_crc_sidecars(spark, tmp_path):
-    """Orphan ``.._manifest_tmp_N.crc`` sidecars from fs.create-era
-    commits (and the legacy manifest sidecar) are debris no reader
-    validates once their base files are gone; the crash-debris sweep
-    retires them under the same retention rule as the tmps."""
-    path = str(tmp_path / "vt")
-    for tag in ("v0", "v1"):
-        sinks.save_versioned_table(
-            spark.createDataFrame([(1, tag)], "id BIGINT, v STRING"), path
-        )
-    for orphan in (".._manifest_tmp_0.crc", "._latest_version.crc"):
-        open(os.path.join(path, orphan), "wb").close()
-    sinks.vacuum_versions(spark, path, keep=10)
-    assert not os.path.exists(os.path.join(path, ".._manifest_tmp_0.crc"))
-    assert not os.path.exists(os.path.join(path, "._latest_version.crc"))
-    # concurrent-safe mode must NOT touch them (it skips the sweep)
-    open(os.path.join(path, ".._manifest_tmp_0.crc"), "wb").close()
-    sinks.vacuum_versions(spark, path, keep=10, clear_uncommitted=False)
-    assert os.path.exists(os.path.join(path, ".._manifest_tmp_0.crc"))
 
 
 def test_live_predecessor_tmp_fallback_interleaving(spark, tmp_path, monkeypatch):

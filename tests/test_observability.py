@@ -21,11 +21,11 @@ def _null_mag_feature(i: int, ts_ms: int = 1704067200000):
 def test_ingest_window_records_observed_metrics(spark, tmp_path):
     # 7 events, 2 with null magnitude; limit 5 -> pages of 5/2
     feats = [_feature(i) for i in range(5)] + [_null_mag_feature(i) for i in (5, 6)]
-    api = FakeApi({"2020-01-01": feats})
+    api = FakeApi({"2024-01-01": feats})
     bronze = str(tmp_path / "bronze")
     stats = pipeline.IngestStats()
     total = pipeline.ingest_window_paged(
-        spark, "http://x", "2020-01-01", "2020-02-01", bronze,
+        spark, "http://x", "2024-01-01", "2024-02-01", bronze,
         limit=5, http_get=api, stats=stats,
     )
     assert total == 7
@@ -38,15 +38,19 @@ def test_ingest_window_records_observed_metrics(spark, tmp_path):
 
 
 def test_ingest_upsert_path_records_metrics(spark, tmp_path):
+    """The first landing of the month appends, the rerun finds its
+    partition and upserts: the counters ride both writes."""
     feats = [_feature(i) for i in range(3)]  # all at 2024-01-01T00:00Z
     api = FakeApi({"2024-01-01": feats})
     bronze = str(tmp_path / "bronze")
     stats = pipeline.IngestStats()
-    pipeline.ingest_window_paged(
-        spark, "http://x", "2024-01-01", "2024-02-01", bronze,
-        limit=10, http_get=api, stats=stats, idempotent=True,
-    )
-    assert [m["rows"] for m in stats.window_metrics] == [3]
+    for _ in range(2):
+        pipeline.ingest_window_paged(
+            spark, "http://x", "2024-01-01", "2024-02-01", bronze,
+            limit=10, http_get=api, stats=stats,
+        )
+    assert [m["rows"] for m in stats.window_metrics] == [3, 3]
+    assert sinks.read_partitioned_table(spark, bronze).count() == 3
 
 
 def test_sink_observation_not_poisoned_by_isempty_probe(spark, tmp_path):

@@ -118,19 +118,22 @@ def test_bronze_exactly_once_on_retrigger(spark, tmp_path):
 
 
 def test_bronze_replay_from_fresh_checkpoint_is_idempotent(spark, tmp_path):
-    """The crash-after-write-before-commit worst case: a fresh
-    checkpoint replays batch 0 over the same input, and the sink's log,
-    which already holds batch 0, skips it; the rows do not double."""
+    """A fresh checkpoint over a root whose sink log exists would
+    restart at batch 0, and the log would skip its batches, new input
+    included: it is refused, naming the root, and the rows stay."""
     bronze = _land(spark, tmp_path, _doc(["a1", "a2"]), ckpt="ckpt1")
     assert spark.read.parquet(bronze).count() == 2
     src = tmp_path / "in"
-    q = stream_geojson_to_bronze(
-        spark, str(src), bronze, str(tmp_path / "ckpt2")
-    )
-    q.awaitTermination(180)
+    (src / "b.json").write_text(_doc(["b1"]) + "\n")
+    with pytest.raises(ValueError, match=re.escape(bronze)):
+        stream_geojson_to_bronze(spark, str(src), bronze, str(tmp_path / "ckpt2"))
     df = spark.read.parquet(bronze)
     assert df.count() == 2
     assert df.select("id").distinct().count() == 2
+    # the root's own checkpoint resumes and lands the new input
+    q = stream_geojson_to_bronze(spark, str(src), bronze, str(tmp_path / "ckpt1"))
+    q.awaitTermination(180)
+    assert spark.read.parquet(bronze).count() == 3
 
 
 def test_stream_bronze_feeds_silver_layer(spark, tmp_path):
@@ -176,6 +179,7 @@ def test_batch_write_into_stream_bronze_raises(spark, tmp_path):
             row, bronze, partition_cols=[]
         ),
         "upsert": lambda: sinks.upsert_partitions(row, bronze),
+        "merge": lambda: sinks.merge_rows(spark, bronze, row, ["id"]),
     }
     sc = spark.sparkContext
     for name, write in writes.items():
@@ -187,13 +191,11 @@ def test_batch_write_into_stream_bronze_raises(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert sc.statusTracker().getJobIdsForGroup(name) == [], name
-    with pytest.raises(ValueError, match=re.escape(bronze)):
-        sinks.merge_rows(spark, bronze, row, ["id"])
     assert sinks.read_partitioned_table(spark, bronze).count() == 2
 
 
 def test_run_etl_refuses_a_stream_landed_bronze(spark, tmp_path):
-    """The batch ETL's bronze landing is an append: pointed at a
+    """The batch ETL's bronze landing is a batch write: pointed at a
     stream-landed root it fails loudly instead of writing files no
     reader would see."""
     from usgs_earthquake_data_pipeline_spark import pipeline

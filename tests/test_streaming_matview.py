@@ -190,51 +190,6 @@ def test_applied_marker_roundtrip(spark, tmp_path):
     assert _read_applied(spark, path, "qA") == 8
 
 
-def test_applied_marker_legacy_int_claim_flow(spark, tmp_path):
-    """Pre-scoping markers (bare int) are never honored implicitly —
-    an unattributable watermark must not make any query skip batches
-    — but the legacy writer's continuation restores its replay
-    protection with one explicit claim, which retires the sentinel so
-    the claim happens exactly once."""
-    from usgs_earthquake_data_pipeline_spark.streaming.matview import (
-        claim_legacy_marker,
-    )
-
-    path = str(tmp_path / "view")
-    os.makedirs(path)
-    with open(os.path.join(path, "_applied_batch"), "w") as fh:
-        fh.write("5")
-    # no implicit inheritance, for ANY identity
-    assert _read_applied(spark, path, "qA") == -1
-    assert _read_applied(spark, path, "qB") == -1
-    # the known continuation claims it explicitly
-    assert claim_legacy_marker(spark, path, "qA") == 5
-    assert _read_applied(spark, path, "qA") == 5
-    assert _read_applied(spark, path, "qB") == -1
-    # sentinel retired: second claim finds nothing
-    assert claim_legacy_marker(spark, path, "qB") is None
-    assert _read_applied(spark, path, "qB") == -1
-
-
-def test_applied_marker_unrelated_write_preserves_legacy(spark, tmp_path):
-    """A different query writing its own scoped marker must not
-    destroy the unclaimed legacy value — the rightful owner can still
-    claim afterwards."""
-    from usgs_earthquake_data_pipeline_spark.streaming.matview import (
-        claim_legacy_marker,
-    )
-
-    path = str(tmp_path / "view")
-    os.makedirs(path)
-    with open(os.path.join(path, "_applied_batch"), "w") as fh:
-        fh.write("7")
-    _write_applied(spark, path, "qNew", 2)
-    assert _read_applied(spark, path, "qNew") == 2
-    assert claim_legacy_marker(spark, path, "qLegacy") == 7
-    assert _read_applied(spark, path, "qLegacy") == 7
-    assert _read_applied(spark, path, "qNew") == 2
-
-
 def test_applied_marker_legacy_garbage_ignored(spark, tmp_path):
     path = str(tmp_path / "view")
     os.makedirs(path)

@@ -181,6 +181,21 @@ def test_datasource_month_outage_falls_back_to_weeks(spark):
     assert weeks == ["2024-03-01", "2024-03-08", "2024-03-15", "2024-03-22", "2024-03-29"]
 
 
+def test_datasource_reads_a_boundary_event_once(spark):
+    """FDSN serves an event at exactly 2024-03-01T00:00 to both the
+    February and the March partition; the month cut reads it once,
+    with March."""
+    feats = [
+        _feature_at("feb", MAR_2024_MS - DAY_MS),
+        _feature_at("edge", MAR_2024_MS),
+        _feature_at("mar", MAR_2024_MS + DAY_MS),
+    ]
+    with fake_fdsn(feats) as (url, _, served):
+        rows = _read_2024(spark, url).select("id", "month").collect()
+    assert sum(body.count('"edge"') for body in served) == 2
+    assert sorted((r.id, r.month) for r in rows) == [("edge", 3), ("feb", 2), ("mar", 3)]
+
+
 def test_datasource_week_still_failing_raises_naming_it():
     """After the month and one of its weeks answer 503, every week is
     still tried, then the read fails naming the week: a Spark read has
@@ -371,36 +386,6 @@ def test_datasource_writer_part_names_unique_across_jobs():
     b = UsgsGeoJsonWriter({"path": "/tmp/x"}, overwrite=False)
     assert a.job_token != b.job_token
     assert len(a.job_token) == 12
-
-
-def test_datasource_writer_append_recovers_legacy_manifest_counts(
-    spark, tmp_path
-):
-    """Appending onto a pre-file_counts manifest must recover each
-    prior file's feature count from its own metadata instead of
-    zeroing it (round-11 review: n_features undercounted forever)."""
-    import json as _json
-
-    spark.dataSource.register(UsgsGeoJsonDataSource)
-    out = tmp_path / "gj"
-    df = spark.createDataFrame(
-        [("a1", 1.0, 2.0, 3.0), ("a2", 4.0, 5.0, 6.0)],
-        "id string, longitude double, latitude double, mag double",
-    ).coalesce(1)
-    df.write.format("usgs_geojson").mode("append").save(str(out))
-    # rewrite the manifest in the legacy shape (files list only)
-    mpath = out / "_MANIFEST.json"
-    m = _json.loads(mpath.read_text())
-    mpath.write_text(
-        _json.dumps({"files": m["files"], "n_features": m["n_features"]})
-    )
-    df2 = spark.createDataFrame(
-        [("b1", 7.0, 8.0, 9.0)],
-        "id string, longitude double, latitude double, mag double",
-    ).coalesce(1)
-    df2.write.format("usgs_geojson").mode("append").save(str(out))
-    merged = _json.loads(mpath.read_text())
-    assert merged["n_features"] == 3, merged
 
 
 def test_datasource_writer_requires_path(spark):

@@ -9,7 +9,9 @@ output-size bound is a scale bug.
 Protocol: one warm-up pass per entry at the SMALL sf (JVM/codegen
 warm), then per entry: time at sf0.1, then at sf1, interleaved so
 box drift spreads evenly. One pass each — this is a ratio smoke, not
-a latency record (bench.py owns those).
+a latency record (bench.py owns those). Each pass forces the entry's
+full result with the noop sink, as bench.py does: a ``count()`` would
+time a plan Catalyst has pruned to what the count needs.
 
 Usage: python tools/sf1_smoke.py [SMALL_DIR BIG_DIR] [--entries a,b,c]
 Defaults: tmp_scale/{sf0.1g,sf1} under the repository root; --entries
@@ -27,6 +29,11 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
+
+
+def _force(df) -> None:
+    """Compute the full result and keep none of it (module docstring)."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -63,15 +70,15 @@ def main() -> None:
         headline = [e for e in CATALOG.values() if e.name in names]
     spark.range(1000).count()
     for e in headline:
-        e.spark_fn(spark, small).count()
+        _force(e.spark_fn(spark, small))
 
     out = {}
     for e in headline:
         t0 = time.perf_counter()
-        e.spark_fn(spark, small).count()
+        _force(e.spark_fn(spark, small))
         t_small = time.perf_counter() - t0
         t0 = time.perf_counter()
-        e.spark_fn(spark, big).count()
+        _force(e.spark_fn(spark, big))
         t_big = time.perf_counter() - t0
         ratio = t_big / t_small if t_small > 0 else float("inf")
         out[e.name] = {

@@ -7,13 +7,22 @@ Mirrors /root/reference/usgs-earthquake-data-ingestion-prod.py:295-455
 status classification 439-445, two-phase main 568-575) as plain
 driver-side Python — orchestration never belongs inside the engine.
 The fetch transport is injectable end-to-end so tests drive the whole
-pipeline from local fixtures. Each window is atomic: all of its pages
-are fetched first, then the window lands in bronze with one write.
+pipeline from local fixtures.
 
-The pager (``fetch_pages``, C3) and the month -> week fallback
-(``with_week_fallback``, C2) are the package's only ones: the driver
-ingest here and the ``usgs_geojson`` data source
-(``sources/usgs_datasource.py``) both go through them.
+The FDSN month is the one landing unit. ``fetch_month`` is the
+package's one month fetch: the pager (``fetch_pages``, C3), the month
+-> week fallback (C2) and one half-open cut (``cut``) to the events
+with ``start <= properties.time < end``, since FDSN's ``endtime`` is
+inclusive and also serves the next month's 00:00 instant. The driver
+ingest here and the ``usgs_geojson`` batch reader
+(``sources/usgs_datasource.py``) both fetch through it; the stream
+reader pages its slices with ``fetch_pages`` and the same ``cut``.
+
+``ingest_window_paged`` lands one whole month with one write: an
+append when the month's bronze partition is absent, a partition
+upsert when it exists, so a rerun replaces the month instead of
+adding it again. A month with a week that still fails lands nothing
+and is recorded; a rerun fills it.
 
 Fixed vs the reference: its ``if ETLIngestion:`` truthiness bug
 (silver unconditionally ran on the function object, :568-575) — here
@@ -24,9 +33,9 @@ from __future__ import annotations
 
 import json
 import logging
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from dataclasses import dataclass, field
-from datetime import date, timedelta
+from datetime import date, datetime, timedelta, timezone
 
 from pyspark.sql import Observation, SparkSession
 
@@ -35,7 +44,12 @@ from .sources.geojson import events_from_geojson_strings
 from .sources.rest import FetchError, HttpGet, fetch_earthquake_data_limit_offset
 from .operators.silver import build_silver_layer
 from .schema import USGS_EVENTS_SCHEMA
-from .sinks import read_partitioned_table, save_partitioned_table, upsert_partitions
+from .sinks import (
+    partition_exists,
+    read_partitioned_table,
+    save_partitioned_table,
+    upsert_partitions,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -50,12 +64,10 @@ def month_windows(start_year: int, end_year: int) -> list[tuple[str, str]]:
     """C1: [start_year-01-01, end_year+1-01-01) in 1-month windows.
 
     Each window ends at the NEXT month's first day, so the final
-    window covers all of December (FDSN start/end are inclusive; an
-    end pinned to 12-31T00:00 would drop Dec-31 events). A boundary
-    instant (exactly 00:00 on the 1st) is therefore served to both
-    adjacent windows: append mode lands it twice (a documented
-    at-least-once), while idempotent ingest lands only the rows in
-    ``[start, end)``, so the instant lands with its own month.
+    window covers all of December. FDSN's ``endtime`` is inclusive, so
+    a query for a window also serves the instant 00:00 on the next
+    month's first day; ``fetch_month`` cuts it away, and the instant
+    lands with its own month only.
     """
     windows = []
     current = date(start_year, 1, 1)
@@ -111,32 +123,63 @@ def fetch_pages(
         offset += limit
 
 
-def with_week_fallback(
-    run_window: Callable[[str, str], object], month_start: str, month_end: str
-) -> list[tuple[str, str, FetchError]]:
-    """C2: ``run_window(start, end)`` on the month; on a retryable
-    failure, on each of its weeks instead. Returns each week that still
-    failed, with its error; a non-retryable error propagates.
+def _day_ms(day: str) -> int:
+    """An FDSN date parameter (``YYYY-MM-DD``, UTC) in epoch ms."""
+    d = date.fromisoformat(day)
+    return int(datetime(d.year, d.month, d.day, tzinfo=timezone.utc).timestamp()) * 1000
 
-    ``run_window`` must keep nothing from a window that raises, or the
-    weeks re-deliver what the failed month already handed on."""
+
+def cut(doc: dict, start_ms: int, end_ms: int) -> dict:
+    """``doc`` keeping only the features whose ``properties.time`` lies
+    in the half-open ``[start_ms, end_ms)``: FDSN's ``endtime`` is
+    inclusive, so adjacent windows both serve their shared instant.
+    A feature without a time belongs to no window and is dropped."""
+
+    def inside(feature: dict) -> bool:
+        t = (feature.get("properties") or {}).get("time")
+        return t is not None and start_ms <= t < end_ms
+
+    return {**doc, "features": [f for f in doc.get("features") or [] if inside(f)]}
+
+
+def fetch_month(
+    api_url: str,
+    month_start: str,
+    month_end: str,
+    *,
+    limit: int = PAGE_LIMIT,
+    http_get: HttpGet | None = None,
+) -> tuple[list[dict], list[tuple[str, str, FetchError]]]:
+    """C2+C3: every page of one month window, each cut to the month
+    (``cut``), and the weeks that still failed, each with its error.
+
+    The month is paged whole (``fetch_pages``). On a retryable failure
+    (C4) it is paged again week by week instead, and nothing the failed
+    month returned is kept, so no event is handed on twice. A week that
+    fails too is returned with its error, after every other week was
+    tried; a non-retryable error propagates."""
+
+    def fetch(start: str, end: str) -> list[dict]:
+        return list(fetch_pages(api_url, start, end, limit=limit, http_get=http_get))
+
+    failed = []
     try:
-        run_window(month_start, month_end)
-        return []
+        pages = fetch(month_start, month_end)
     except FetchError as exc:
         if not is_retryable(exc):
             raise
         logger.warning("month %s failed (%s); retrying weekly", month_start, exc)
-    failed = []
-    for w_start, w_end in week_windows(month_start, month_end):
-        try:
-            run_window(w_start, w_end)
-        except FetchError as exc:
-            if not is_retryable(exc):
-                raise
-            logger.warning("week %s failed (%s)", w_start, exc)
-            failed.append((w_start, w_end, exc))
-    return failed
+        pages = []
+        for w_start, w_end in week_windows(month_start, month_end):
+            try:
+                pages += fetch(w_start, w_end)
+            except FetchError as week_exc:
+                if not is_retryable(week_exc):
+                    raise
+                logger.warning("week %s failed (%s)", w_start, week_exc)
+                failed.append((w_start, w_end, week_exc))
+    lo, hi = _day_ms(month_start), _day_ms(month_end)
+    return [cut(doc, lo, hi) for doc in pages], failed
 
 
 @dataclass
@@ -160,63 +203,66 @@ def ingest_window_paged(
     limit: int = PAGE_LIMIT,
     http_get: HttpGet | None = None,
     stats: IngestStats | None = None,
-    idempotent: bool = False,
 ) -> int:
-    """Fetch every page of one window (``fetch_pages``) and land it.
+    """Fetch one ``month_windows`` window whole (``fetch_month``) and
+    land it with one write; returns the month's events. Any other
+    window raises ``ValueError``.
 
-    The window is ATOMIC with respect to bronze: every page is fetched
-    on the driver first, and only then is the whole window flattened
-    and landed with ONE write. A mid-window fetch failure therefore
-    leaves bronze and ``stats`` untouched, so the week-granularity
-    retry (C2) can re-fetch the month without duplicating the pages
-    the failed attempt already saw; a failed write is covered by the
-    sink's commit protocol. The price is driver memory: the driver
-    holds one window's page bodies (at most pages x ``limit``
-    features) until the landing, rather than one page.
+    The month is ATOMIC with respect to bronze: every page is fetched
+    on the driver first, the week fallback included, and only then is
+    the month flattened and landed. If a week still fails, the month
+    lands nothing: its weeks go into ``stats.failed_windows`` and its
+    pages and events are not counted, so a rerun fills the month and
+    an existing partition is never cut down to the weeks that worked.
+    A failed write is covered by the sink's commit protocol. The price
+    is driver memory: the driver holds one month's page bodies.
 
-    The landing costs one Spark job whatever the page count: the
+    After the cut, every row of the month falls in its one
+    ``(year, month)`` partition. The flatten derives the partition in
+    the session time zone and FDSN months are UTC, so any other session
+    time zone raises ``ValueError`` before the fetch: there a month's
+    first hours fall in a neighbouring partition, which a rerun's
+    upsert would then replace with those hours alone (``get_spark``
+    sets UTC). The write is an append when that partition's directory
+    is absent and a partition upsert when it exists (file-system calls
+    only, ``sinks.partition_exists``), so a rerun replaces the month:
+    on a fresh partition both give the same table, and the append is
+    the cheaper write. Either way the landing costs one Spark job, the
     write, which counts its own rows, so the sink needs no ``isEmpty``
-    probe. The flattened window is driver-held, so one task writes it
+    probe. The flattened month is driver-held, so one task writes it
     with no range exchange (``sinks.clustering_sort``). The job carries
     the description ``ingest <start>..<end>``.
-
-    ``idempotent=True`` lands the window with a partition-level upsert
-    instead of an append: re-running the same window replaces its
-    (year, month) partition rather than duplicating rows — the fix
-    for the reference's append-forever semantics (and its per-chunk
-    S3 overwrite bug, SURVEY §3.1 step 8). The upsert replaces every
-    partition its rows touch, so the window must be one
-    ``month_windows`` window (``ValueError`` otherwise: a week would
-    replace its whole month), and only rows with ``start <= eventtime
-    < end`` land (FDSN's inclusive ``endtime`` also serves the next
-    month's 00:00 instant, which would replace that month).
     """
-    if idempotent and (start_time, end_time) not in month_windows(
-        int(start_time[:4]), int(start_time[:4])
-    ):
+    year = int(start_time[:4])
+    if (start_time, end_time) not in month_windows(year, year):
         raise ValueError(
-            f"idempotent ingest needs one month window, got {start_time}..{end_time}"
+            f"ingest lands one month window, got {start_time}..{end_time}"
         )
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz != "UTC":
+        raise ValueError(f"ingest needs a UTC session time zone, got {tz}")
     stats = stats if stats is not None else IngestStats()
-    pages = list(
-        fetch_pages(api_url, start_time, end_time, limit=limit, http_get=http_get)
+    pages, failed = fetch_month(
+        api_url, start_time, end_time, limit=limit, http_get=http_get
     )
-    if pages:
+    if failed:
+        stats.failed_windows += [(s, e) for s, e, _ in failed]
+        return 0
+    total = sum(len(p["features"]) for p in pages)
+    if total:
         with job_description(spark, f"ingest {start_time}..{end_time}"):
             events = events_from_geojson_strings(spark, [json.dumps(p) for p in pages])
             # quality counters ride the landing job — no second scan
             obs = Observation(f"window_{start_time}")
             kwargs = dict(observation=obs, metrics=quality_metrics())
-            if idempotent:
-                keep = f"eventtime >= '{start_time}' AND eventtime < '{end_time}'"
-                written = upsert_partitions(events.filter(keep), bronze_path, **kwargs)
+            if partition_exists(spark, bronze_path, (year, int(start_time[5:7]))):
+                written = upsert_partitions(events, bronze_path, **kwargs)
             else:
                 written = save_partitioned_table(
                     events, bronze_path, mode="append", **kwargs
                 )
         if written:
             stats.window_metrics.append(obs.get)
-    total = sum(len(p["features"]) for p in pages)
     stats.pages += len(pages)
     stats.events += total
     return total
@@ -232,20 +278,15 @@ def ingest_range(
     limit: int = PAGE_LIMIT,
     http_get: HttpGet | None = None,
 ) -> IngestStats:
-    """C1+C2: iterate month windows through ``with_week_fallback``; a
-    week that still fails is recorded in ``failed_windows`` and
+    """C1: land each month window (``ingest_window_paged``); a month
+    with a week that still fails is recorded in ``failed_windows`` and
     skipped (the run continues)."""
     stats = IngestStats()
-
-    def land(start: str, end: str) -> None:
+    for m_start, m_end in month_windows(start_year, end_year):
         ingest_window_paged(
-            spark, api_url, start, end, bronze_path,
+            spark, api_url, m_start, m_end, bronze_path,
             limit=limit, http_get=http_get, stats=stats,
         )
-
-    for m_start, m_end in month_windows(start_year, end_year):
-        failed = with_week_fallback(land, m_start, m_end)
-        stats.failed_windows += [(s, e) for s, e, _ in failed]
     return stats
 
 
@@ -266,7 +307,8 @@ def run_etl(
     Silver runs only once a window has landed: fetched pages whose
     features are all invalid never create the bronze table. Bronze is
     read by its declared schema, so the read launches no
-    schema-inference job."""
+    schema-inference job. A rerun over the same years replaces each
+    month it lands, so bronze and both facts come out the same."""
     stats = ingest_range(
         spark, start_year, end_year, bronze_path,
         api_url=api_url, limit=limit, http_get=http_get,

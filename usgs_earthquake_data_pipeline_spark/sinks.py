@@ -275,6 +275,15 @@ def _append_target(spark, path: str):
     return fs, hpath, existed
 
 
+def partition_exists(spark, path: str, values: Sequence) -> bool:
+    """Whether table ``path`` holds the Hive partition directory of
+    ``values``, one per ``RAW_PARTITION_COLS`` column (``year=2024/
+    month=3``). File-system calls only, no Spark job."""
+    sub = "/".join(f"{c}={v}" for c, v in zip(RAW_PARTITION_COLS, values))
+    jvm, fs = _fs_for(spark, path)
+    return fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{sub}"))
+
+
 def _drop_marker_only_dir(fs, hpath) -> None:
     """Delete directory ``hpath`` if it holds only commit-marker files:
     names starting with ``_`` or ``.``, such as ``_SUCCESS`` and its
@@ -327,8 +336,10 @@ def upsert_partitions(
 ) -> bool:
     """Partition-level upsert: overwrite ONLY the partitions present
     in ``df``, leaving all others untouched (dynamic partition
-    overwrite). This is the idempotent re-ingest primitive — re-running
-    a month's ingest replaces that month instead of duplicating it
+    overwrite). This is the re-ingest primitive — a month whose
+    partition already exists lands through it
+    (``pipeline.ingest_window_paged``), so re-running the month's
+    ingest replaces that month instead of duplicating it
     (the correct form of the reference's append-forever raw layer;
     with delta-spark this would be MERGE, the parquet layout gets the
     same semantics from the ``partitionOverwriteMode=dynamic`` writer
@@ -591,10 +602,12 @@ def merge_rows(
     affected slice against the (typically broadcastable) update set.
 
     Keys must be unique within ``updates`` (enforced — a duplicate
-    key would make the merge result order-dependent).
+    key would make the merge result order-dependent). A streaming file
+    sink's root is refused before any Spark job runs.
     """
     from .operators.merge import merge_upsert
 
+    _append_target(spark, path)
     partition_cols = partition_cols if partition_cols is not None else RAW_PARTITION_COLS
     n, n_keys, touched = updates.agg(
         F.count(F.lit(1)),
@@ -769,15 +782,6 @@ def _read_latest(spark, path: str) -> int | None:
         and (v := _parse_suffix_int(s.getPath().getName(), "_")) is not None
     ]
     return max(tmps) if tmps else None
-
-
-def _crc_sidecar(local_path: str) -> str:
-    """Hadoop ChecksumFileSystem's sidecar name for a local file:
-    ``dir/.<name>.crc``. The raw-file commit path must retire these —
-    a stale sidecar makes every later ``fs.open`` of the manifest die
-    with ChecksumException."""
-    d, b = os.path.split(local_path)
-    return os.path.join(d, f".{b}.crc")
 
 
 def _claim_path(path: str, version: int) -> str:
@@ -971,14 +975,6 @@ def save_versioned_table(
         # would die with ChecksumException (a bricked table).
         with open(tmp_os, "w") as fh:
             fh.write(str(version))
-        # one-time migration: retire checksum sidecars left by
-        # fs.create-based commits of earlier revisions — absence of a
-        # crc simply disables validation, so removal is always safe
-        for sidecar in (_crc_sidecar(final_os), _crc_sidecar(tmp_os)):
-            try:
-                os.remove(sidecar)
-            except FileNotFoundError:
-                pass
         committed = False
         for _ in range(5):
             try:
@@ -1123,23 +1119,6 @@ def vacuum_versions(
             v = _parse_suffix_int(name, "_")
             if v is not None and v < latest:
                 fs.delete(s.getPath(), False)
-    # Orphan Hadoop checksum sidecars from fs.create-era commits (the
-    # raw-file commit path no longer creates them). ChecksumFileSystem
-    # HIDES ".<name>.crc" entries from listStatus, so this sweep must
-    # go through the OS on local tables; retention matches the tmp
-    # itself, and the legacy manifest sidecar is always safe to retire
-    # (absence of a crc merely disables validation).
-    if clear_uncommitted and str(fs.getUri().getScheme() or "file") == "file":
-        root = _norm_file_uri(path.rstrip("/"))
-        for name in os.listdir(root):
-            if not name.endswith(".crc"):
-                continue
-            if name.startswith(".._manifest_tmp_"):
-                v = _parse_suffix_int(name[: -len(".crc")], "_")
-                if v is not None and v < latest:
-                    os.remove(os.path.join(root, name))
-            elif name == f".{_VERSION_MANIFEST}.crc":
-                os.remove(os.path.join(root, name))
     return sorted(to_drop)
 
 

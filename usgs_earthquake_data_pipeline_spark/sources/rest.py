@@ -8,8 +8,8 @@ the default transport is urllib (stdlib).
 
 This module fetches one page. Paging a window (C3) and the month ->
 week fallback (C2) live in ``pipeline.py`` (``fetch_pages``,
-``with_week_fallback``); the driver ingest and the ``usgs_geojson``
-data source both use them. The reference's time-range (S1) and
+``fetch_month``); the driver ingest and the ``usgs_geojson`` data
+source both use them. The reference's time-range (S1) and
 newest-N (S3) fetches, which returned ``{}`` on any error, are that
 pager: a failed page raises ``FetchError`` instead.
 """

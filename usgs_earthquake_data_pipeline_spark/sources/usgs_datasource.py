@@ -6,15 +6,19 @@ of the driver fetching pages serially (the reference's shape, kept in
 ``pipeline.py``), each *input partition* is one month window and the
 fetch runs on executors — N windows download in parallel.
 
-The source is a transport only. Each partition pages its month with
-the pipeline's own pager and week fallback (``pipeline.fetch_pages``,
-``pipeline.with_week_fallback``) and yields the raw page bodies as one
-Arrow batch of ``value string`` rows. A month that fails with a 4xx/5xx
-is re-read week by week inside the partition; a week that still fails
-fails the read with ``FetchError`` naming it, because a Spark read has
-no ledger in which a skipped week could be told from a quiet one.
-Callers flatten with ``geojson_docs_to_events``, the package's one
-GeoJSON flatten, which then runs under codegen on the executors.
+The source is a transport only. Each partition fetches its month with
+the pipeline's one month fetch (``pipeline.fetch_month``: the pager,
+the week fallback and the half-open cut to ``[start, end)``, so an
+event at exactly 00:00 on the 1st is read once, with its own month)
+and yields the raw page bodies as one Arrow batch of ``value string``
+rows. A month that fails with a 4xx/5xx is re-read week by week inside
+the partition; a week that still fails fails the read with
+``FetchError`` naming it, because a Spark read has no ledger in which
+a skipped week could be told from a quiet one. The stream reader pages
+each slice with ``pipeline.fetch_pages`` and cuts it with the same
+``pipeline.cut``. Callers flatten with ``geojson_docs_to_events``, the
+package's one GeoJSON flatten, which then runs under codegen on the
+executors.
 
 Usage::
 
@@ -75,21 +79,11 @@ class UsgsGeoJsonReader(DataSourceReader):
 
     def read(self, partition: UsgsWindowPartition):
         api_url = self.options.get("api_url", pipeline.USGS_API_URL)
-        bodies: list[str] = []
-
-        def gather(start: str, end: str) -> None:
-            # the whole window before keeping any of it: a month that
-            # fails part way must not hand on its first pages, which
-            # its weeks then deliver again
-            window = list(pipeline.fetch_pages(api_url, start, end))
-            bodies.extend(json.dumps(doc) for doc in window)
-
-        failed = pipeline.with_week_fallback(
-            gather, partition.start, partition.end
-        )
+        pages, failed = pipeline.fetch_month(api_url, partition.start, partition.end)
         if failed:
             start, end, exc = failed[0]
             raise FetchError(exc.status, f"week {start}..{end} failed after its month")
+        bodies = [json.dumps(doc) for doc in pages]
         yield pa.RecordBatch.from_arrays(
             [pa.array(bodies, pa.string())], names=["value"]
         )
@@ -117,8 +111,9 @@ class UsgsGeoJsonStreamReader(SimpleDataSourceStreamReader):
 
     The simple stream-reader API reads on the driver — the right
     trade for a rate-limited HTTP feed. A batch pages its slice with
-    ``pipeline.fetch_pages`` (FDSN's ``endtime`` is inclusive, so the
-    features are then cut to the half-open slice) and yields one
+    ``pipeline.fetch_pages``, cuts each page to the half-open slice
+    with ``pipeline.cut`` (FDSN's ``endtime`` is inclusive, so batches
+    would otherwise share their boundary instant) and yields one
     ``(body,)`` row: a FeatureCollection of the slice's features, for
     ``geojson_docs_to_events`` to flatten."""
 
@@ -140,14 +135,10 @@ class UsgsGeoJsonStreamReader(SimpleDataSourceStreamReader):
 
     def _fetch(self, s_ms: int, e_ms: int) -> list[tuple[str]]:
         api_url = self.options.get("api_url", pipeline.USGS_API_URL)
-
-        def in_slice(feature: dict) -> bool:
-            t = (feature.get("properties") or {}).get("time")
-            # half-open [s, e): batches never overlap
-            return t is not None and s_ms <= t < e_ms
-
         pages = pipeline.fetch_pages(api_url, _iso(s_ms), _iso(e_ms))
-        features = [f for doc in pages for f in doc["features"] if in_slice(f)]
+        features = [
+            f for doc in pages for f in pipeline.cut(doc, s_ms, e_ms)["features"]
+        ]
         return [(json.dumps({"type": "FeatureCollection", "features": features}),)]
 
 
@@ -258,13 +249,14 @@ class UsgsGeoJsonWriter(DataSourceWriter):
         # current manifest nor this job's winning set before
         # publishing — single-writer directories, so unreferenced
         # parts can only be crash/abort leftovers.
-        prior_names: set[str] = set()
+        prior: dict = {}
         if os.path.exists(manifest_path):
             try:
                 with open(manifest_path) as fh:
-                    prior_names = set(json.load(fh).get("files", []))
+                    prior = json.load(fh)
             except (json.JSONDecodeError, OSError):  # pragma: no cover
-                prior_names = set()
+                prior = {}
+        prior_names = set(prior.get("files", []))
         for name in os.listdir(self.path):
             if (
                 name.startswith("part-")
@@ -280,33 +272,11 @@ class UsgsGeoJsonWriter(DataSourceWriter):
             files = new_files
         else:
             # append: carry forward the previously committed file list
-            files = {}
-            if os.path.exists(manifest_path):
-                with open(manifest_path) as fh:
-                    prior = json.load(fh)
-                prior_counts = prior.get("file_counts")
-                if prior_counts is None:
-                    # pre-file_counts manifest: recover each file's
-                    # count from its own metadata rather than zeroing
-                    # it (round-11 review — a zero would undercount
-                    # n_features forever after)
-                    prior_counts = {}
-                    for n in prior.get("files", []):
-                        fp = os.path.join(self.path, n)
-                        if os.path.exists(fp):
-                            with open(fp) as pfh:
-                                prior_counts[n] = (
-                                    json.load(pfh)
-                                    .get("metadata", {})
-                                    .get("count", 0)
-                                )
-                files.update(
-                    {
-                        n: c
-                        for n, c in prior_counts.items()
-                        if os.path.exists(os.path.join(self.path, n))
-                    }
-                )
+            files = {
+                n: c
+                for n, c in prior.get("file_counts", {}).items()
+                if os.path.exists(os.path.join(self.path, n))
+            }
             files.update(new_files)
         manifest = {
             "files": sorted(files),

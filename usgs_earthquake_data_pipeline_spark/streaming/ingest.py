@@ -14,9 +14,10 @@ reads via ignoreDeletes/readChangeFeed options it passes to Polars
   files to its ``_spark_metadata`` log under the batch id, so a batch
   replayed after a crash finds its entry and is skipped, and readers
   that go through Spark see only committed files. The
-  log binds the root to one checkpoint: a new checkpoint restarts at
-  batch 0, and the sink skips every batch id its log already holds,
-  new input included.
+  log binds the root to one checkpoint: a new checkpoint would restart
+  at batch 0, and the sink would skip every batch id its log already
+  holds, new input included, so a new checkpoint on a root whose log
+  exists is refused (``ValueError``, file-system calls only).
 
   Batch writers must not share a stream bronze root: Spark reads such
   a root through its log, so files a batch append adds would never be
@@ -38,8 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sinks import RAW_PARTITION_COLS
+from ..sinks import RAW_PARTITION_COLS, _fs_for
 from ..sources.geojson import geojson_docs_to_events
+
+
+def _exists(spark, path: str, child: str) -> bool:
+    jvm, fs = _fs_for(spark, path)
+    return fs.exists(jvm.org.apache.hadoop.fs.Path(path, child))
 
 
 def stream_geojson_to_bronze(
@@ -54,7 +60,18 @@ def stream_geojson_to_bronze(
     files (one FeatureCollection JSON per line), flatten to canonical
     events and land them exactly-once through Spark's native parquet
     file sink, partitioned ``year, month``. One checkpoint per
-    ``bronze_path``, and no batch writer there (module docstring)."""
+    ``bronze_path``, and no batch writer there (module docstring): a
+    checkpoint no query has started from (it holds no ``metadata``)
+    raises ``ValueError`` on a root that holds ``_spark_metadata``,
+    while resuming the root's own checkpoint works."""
+    if _exists(spark, bronze_path, "_spark_metadata") and not _exists(
+        spark, checkpoint_path, "metadata"
+    ):
+        raise ValueError(
+            f"{bronze_path} already holds a file sink's log (_spark_metadata) "
+            f"and {checkpoint_path} is a new checkpoint: it would restart at "
+            "batch 0, and the sink would skip its new input"
+        )
     raw = spark.readStream.text(input_path)
     events = geojson_docs_to_events(raw, "value")
     writer = (

@@ -47,8 +47,6 @@ from ..sinks import (
 )
 
 _APPLIED_MARKER = "_applied_batch"
-# sentinel key for a pre-scoping bare-int marker awaiting claim
-_LEGACY_KEY = "__legacy_unscoped__"
 
 
 def _read_marker_map(spark, path: str) -> dict[str, int]:
@@ -58,13 +56,7 @@ def _read_marker_map(spark, path: str) -> dict[str, int]:
     marker is scoped like Delta's idempotent-write contract (txnAppId +
     txnVersion) instead of a single global integer — a fresh query over
     an existing view must NOT inherit another query's watermark. A
-    legacy bare-int marker (pre-scoping format) is preserved under
-    the ``_LEGACY_KEY`` sentinel but NEVER honored implicitly (an
-    unattributable watermark handed to whichever query reads first
-    would make a genuinely new query silently skip its own batches);
-    the legacy writer's continuation restores its replay protection
-    with one explicit :func:`claim_legacy_marker` call, which also
-    retires the sentinel."""
+    marker that is not such a map reads as empty."""
     jvm, fs = _fs_for(spark, path)
     mpath = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{_APPLIED_MARKER}")
     if not fs.exists(mpath):
@@ -78,55 +70,17 @@ def _read_marker_map(spark, path: str) -> dict[str, int]:
         data = json.loads(raw)
     except ValueError:
         return {}
-    if not isinstance(data, dict):  # legacy bare int → sentinel
-        try:
-            return {_LEGACY_KEY: int(data)}
-        except (TypeError, ValueError):
-            return {}
+    if not isinstance(data, dict):
+        return {}
     return {str(k): int(v) for k, v in data.items()}
 
 
 def _read_applied(spark, path: str, txn_app_id: str) -> int:
-    # the legacy sentinel is NOT honored implicitly: a bare-int
-    # marker can't be attributed to a query identity, and handing it
-    # to whichever query reads first would make a genuinely NEW query
-    # over a pre-upgrade view silently skip its batches 0..N
-    # (permanent data loss). The marker is preserved under the
-    # sentinel; the operator that KNOWS it is the legacy writer's
-    # continuation calls :func:`claim_legacy_marker` once explicitly.
     return _read_marker_map(spark, path).get(txn_app_id, -1)
 
 
-def claim_legacy_marker(spark, view_path: str, txn_app_id: str) -> int | None:
-    """One-time upgrade hook: assign a pre-scoping bare-int applied
-    marker to ``txn_app_id`` — call this ONLY for the query that is
-    the legacy writer's continuation (same checkpoint lineage), where
-    it restores replay protection across the format upgrade. Returns
-    the claimed batch id, or None when there is no unclaimed legacy
-    marker. The claim is recorded in the scoped format, so it happens
-    exactly once."""
-    state = _read_marker_map(spark, view_path)
-    if _LEGACY_KEY not in state:
-        return None
-    batch = state[_LEGACY_KEY]
-    if txn_app_id not in state or state[txn_app_id] < batch:
-        _write_applied(spark, view_path, txn_app_id, batch, drop_legacy=True)
-    else:
-        _write_applied(
-            spark, view_path, txn_app_id, state[txn_app_id], drop_legacy=True
-        )
-    return batch
-
-
-def _write_applied(
-    spark, path: str, txn_app_id: str, batch_id: int, *, drop_legacy: bool = False
-) -> None:
+def _write_applied(spark, path: str, txn_app_id: str, batch_id: int) -> None:
     state = _read_marker_map(spark, path)
-    if drop_legacy:
-        # only the explicit claim retires the legacy sentinel — an
-        # unrelated new query writing first must not destroy the
-        # rightful owner's chance to claim it
-        state.pop(_LEGACY_KEY, None)
     state[txn_app_id] = batch_id
     jvm, fs = _fs_for(spark, path)
     tmp = jvm.org.apache.hadoop.fs.Path(
