@@ -105,14 +105,13 @@ def test_enforce_compatible_gates_breaking_append(spark, tmp_path):
 
     added = base.withColumn("extra", F.lit(1.5))
     assert sinks.save_partitioned_table(
-        added, path, mode="append", merge_schema=True, enforce_compatible=True
+        added, path, mode="append", enforce_compatible=True
     )
 
     dropped = base.drop("name")
     with pytest.raises(ValueError, match="incompatible schema evolution"):
         sinks.save_partitioned_table(
-            dropped, path, mode="append", merge_schema=True,
-            enforce_compatible=True,
+            dropped, path, mode="append", enforce_compatible=True,
         )
 
 

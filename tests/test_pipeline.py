@@ -79,6 +79,21 @@ def test_rest_source_limit_offset_raises_classified():
     assert pipeline.is_retryable(exc.value)
 
 
+def test_rest_source_204_is_an_empty_page():
+    """FDSN answers 204 to a query that matches nothing (``nodata``
+    defaults to 204): an empty page, not a failure. Any other status
+    but 200 still raises."""
+    doc = fetch_earthquake_data_limit_offset(
+        "http://x", "2020-01-01", "2020-02-01", 10, 1, lambda url: (204, "")
+    )
+    assert doc == {"type": "FeatureCollection", "features": []}
+    with pytest.raises(FetchError) as exc:
+        fetch_earthquake_data_limit_offset(
+            "http://x", "2020-01-01", "2020-02-01", 10, 1, lambda url: (206, "")
+        )
+    assert exc.value.status == 206
+
+
 def test_month_and_week_windows():
     mw = pipeline.month_windows(2020, 2020)
     assert len(mw) == 12
@@ -188,11 +203,14 @@ class TimeRangeApi:
     """Serves the features whose time lies in [starttime, endtime],
     both ends inclusive as FDSN's are, so a month and its week windows
     see consistent slices; ``fail`` picks the (starttime, endtime,
-    offset) requests that answer 503."""
+    offset) requests that answer 503. With ``nodata``, a request that
+    matches no feature answers 204, as FDSN's default ``nodata=204``
+    does."""
 
-    def __init__(self, features, fail=lambda start, end, offset: False):
+    def __init__(self, features, fail=lambda start, end, offset: False, nodata=False):
         self.features = features
         self.fail = fail
+        self.nodata = nodata
 
     def __call__(self, url):
         q = urllib.parse.parse_qs(urllib.parse.urlparse(url).query)
@@ -206,7 +224,10 @@ class TimeRangeApi:
 
         lo, hi = ms(start), ms(end)
         hits = [f for f in self.features if lo <= f["properties"]["time"] <= hi]
-        return 200, _page(hits[offset - 1 : offset - 1 + limit])
+        page = hits[offset - 1 : offset - 1 + limit]
+        if self.nodata and not page:
+            return 204, ""
+        return 200, _page(page)
 
 
 def _january_features(n: int):
@@ -501,3 +522,51 @@ def test_run_etl_rerun_leaves_bronze_and_silver_unchanged(spark, tmp_path):
     assert first[0] == 3
     _etl_2024(spark, out)
     assert _landed(spark, out) == first
+
+
+def _etl_2020(spark, out: str, features, nodata=False):
+    """``run_etl`` of 2020 into ``out`` from a fake FDSN serving
+    ``features``."""
+    return pipeline.run_etl(
+        spark, 2020, 2020, f"{out}/bronze", f"{out}/yearly", f"{out}/monthly",
+        api_url="http://x", limit=10, http_get=TimeRangeApi(features, nodata=nodata),
+    )
+
+
+def _idless(features):
+    return [{k: v for k, v in f.items() if k != "id"} for f in features]
+
+
+@pytest.mark.parametrize("rerun_january", [lambda jan: [], _idless], ids=["emptied", "idless"])
+def test_run_etl_rerun_drops_a_month_the_source_emptied(spark, tmp_path, rerun_january):
+    """January landed 3 tsunami events; a rerun finds no event of
+    January (none served, or only id-less ones). The rerun drops
+    January's partition, so bronze and both facts mirror the source:
+    a write of zero rows would have replaced nothing."""
+    jan = [_feature(i, ts_ms=JAN_2020_MS + i * DAY_MS, tsunami=1) for i in range(3)]
+    feb = [_feature(10 + i, ts_ms=FEB_2020_MS + (i + 1) * DAY_MS, tsunami=i) for i in range(2)]
+    feb_ids = ["ev00000010", "ev00000011"]
+    out = str(tmp_path)
+    _etl_2020(spark, out, jan + feb)
+    assert _landed(spark, out) == (
+        5,
+        ["ev00000000", "ev00000001", "ev00000002"] + feb_ids,
+        {(2020, 4)},
+        {(2020, 1, 3), (2020, 2, 1)},
+    )
+    stats = _etl_2020(spark, out, rerun_january(jan) + feb)
+    assert stats.emptied_windows == [JANUARY]
+    assert not os.path.exists(f"{out}/bronze/year=2020/month=1")
+    assert _landed(spark, out) == (2, feb_ids, {(2020, 1)}, {(2020, 2, 1)})
+
+
+def test_run_etl_completes_when_fdsn_answers_204(spark, tmp_path):
+    """A month with no event answers 204: it lands nothing and fails
+    nothing, and the run goes on to land January and build silver."""
+    jan = [_feature(i, ts_ms=JAN_2020_MS + i * DAY_MS, tsunami=1) for i in range(3)]
+    out = str(tmp_path)
+    stats = _etl_2020(spark, out, jan, nodata=True)
+    assert (stats.events, stats.failed_windows, stats.emptied_windows) == (3, [], [])
+    assert _landed(spark, out) == (
+        3, ["ev00000000", "ev00000001", "ev00000002"], {(2020, 3)}, {(2020, 1, 3)}
+    )

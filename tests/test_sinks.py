@@ -363,24 +363,6 @@ def test_vacuum_versions_keeps_latest_and_drops_orphans(spark, tmp_path):
     assert not os.path.exists(f"{path}/version=9")  # orphan removed
 
 
-def test_orc_format_roundtrip_and_pruning(spark, events, tmp_path):
-    """The sink's table_format is not parquet-only: ORC (Spark
-    built-in) round-trips with the same hive layout and partition
-    pruning — the format a Hive-era warehouse would hand us."""
-    path = str(tmp_path / "orc_table")
-    assert sinks.save_partitioned_table(
-        events, path, mode="overwrite", partition_cols=["year", "month"],
-        table_format="orc",
-    )
-    assert glob.glob(os.path.join(path, "year=2020", "month=1", "*.orc"))
-    back = sinks.read_partitioned_table(spark, path, table_format="orc")
-    assert back.count() == events.count()
-    pruned = back.filter(F.col("year") == 2020)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "year" in plan
-    assert pruned.count() == events.filter(F.col("year") == 2020).count()
-
-
 def test_permissive_json_read_quarantines_corrupt_records(spark, tmp_path):
     """Bronze re-reads must not die on a torn/corrupt line (the REST
     feed truncates mid-object under network failure): PERMISSIVE mode
@@ -404,42 +386,6 @@ def test_permissive_json_read_quarantines_corrupt_records(spark, tmp_path):
     bad = [r for r in rows if r._corrupt_record is not None]
     assert good == {1: 5.1, 3: 6.2}
     assert len(bad) == 1 and '"mag": ' in bad[0]._corrupt_record
-
-
-def test_partitioned_roundtrip_orc(spark, sf_dir, tmp_path):
-    """K3/K6 format pluggability beyond parquet: the same partitioned
-    sink writes/reads ORC (bundled in spark-sql — the other columnar
-    format a warehouse migration meets), with identical rows and
-    working predicate pushdown on the read."""
-    from usgs_earthquake_data_pipeline_spark.sinks import (
-        read_partitioned_table,
-        save_partitioned_table,
-    )
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("event_id", "user_id", "event_type", "value")
-        .filter("event_id < 200")
-    )
-    path = str(tmp_path / "events_orc")
-    assert save_partitioned_table(
-        ev, path, mode="overwrite", partition_cols=["event_type"],
-        table_format="orc",
-    )
-    back = read_partitioned_table(spark, path, table_format="orc")
-    assert sorted(map(tuple, back.select(*ev.columns).collect())) == sorted(
-        map(tuple, ev.collect())
-    )
-    # predicate pushdown reaches the ORC scan
-    plan = (
-        back.filter("user_id < 3")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan and "user_id" in plan.split(
-        "PushedFilters:"
-    )[1].split("]")[0]
 
 
 def _arrow_events(spark, n=120):
@@ -547,8 +493,6 @@ def test_declared_schema_read_launches_no_job(spark, tmp_path):
     order and rows."""
     from usgs_earthquake_data_pipeline_spark.schema import USGS_EVENTS_SCHEMA
 
-    if sinks.TABLE_FORMAT != "parquet":
-        pytest.skip("a Delta table takes its schema from its log")
     path = str(tmp_path / "bronze")
     assert sinks.save_partitioned_table(_window_events(spark), path)
     sc = spark.sparkContext
@@ -665,8 +609,6 @@ def test_silver_schemas_are_the_declared_fact_schemas(spark, tmp_path):
         USGS_EVENTS_SCHEMA,
     )
 
-    if sinks.TABLE_FORMAT != "parquet":
-        pytest.skip("a Delta table takes its schema from its log")
     path = str(tmp_path / "bronze")
     assert sinks.save_partitioned_table(_window_events(spark), path)
     bronze = sinks.read_partitioned_table(spark, path, schema=USGS_EVENTS_SCHEMA)

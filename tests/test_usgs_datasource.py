@@ -41,12 +41,14 @@ def _ms(iso: str) -> float:
 
 
 @contextlib.contextmanager
-def fake_fdsn(features, fail=lambda start, end, offset: False):
+def fake_fdsn(features, fail=lambda start, end, offset: False, nodata=False):
     """A loopback FDSN event service over ``features``. It honours
     ``starttime``/``endtime`` (both inclusive), ``limit`` and 1-based
     ``offset``, and answers 503 to the requests ``fail(start, end,
-    offset)`` picks. Yields the query URL, the ``(start, end, offset)``
-    of every request, and the body of every page it served."""
+    offset)`` picks; with ``nodata``, a request that matches no feature
+    answers 204, FDSN's default. Yields the query URL, the ``(start,
+    end, offset)`` of every request, and the body of every page it
+    served."""
     calls, served = [], []
 
     class Handler(BaseHTTPRequestHandler):
@@ -60,7 +62,12 @@ def fake_fdsn(features, fail=lambda start, end, offset: False):
                 return
             lo, hi = _ms(start), _ms(end)
             hits = [f for f in features if lo <= f["properties"]["time"] <= hi]
-            body = _doc(hits[offset - 1 : offset - 1 + limit])
+            page = hits[offset - 1 : offset - 1 + limit]
+            if nodata and not page:
+                self.send_response(204)
+                self.end_headers()
+                return
+            body = _doc(page)
             served.append(body)
             self.send_response(200)
             self.send_header("Content-Length", str(len(body.encode())))
@@ -194,6 +201,15 @@ def test_datasource_reads_a_boundary_event_once(spark):
         rows = _read_2024(spark, url).select("id", "month").collect()
     assert sum(body.count('"edge"') for body in served) == 2
     assert sorted((r.id, r.month) for r in rows) == [("edge", 3), ("feb", 2), ("mar", 3)]
+
+
+def test_datasource_reads_a_204_month_as_empty(spark):
+    """FDSN answers 204 to the ten months holding no event: they read
+    empty, and the read yields the other two months' events."""
+    feats = [FULL_FEATURE, NO_DEPTH_FEATURE, SPARSE_FEATURE]
+    with fake_fdsn(feats, nodata=True) as (url, _, _):
+        ids = {r.id for r in _read_2024(spark, url).select("id").collect()}
+    assert ids == {"us7000abcd", "ci00000002", "nc00000003"}
 
 
 def test_datasource_week_still_failing_raises_naming_it():

@@ -13,7 +13,7 @@ Layout
 - ``plans``      : the named-query catalog (Spark callable + DuckDB oracle SQL).
 - ``streaming``  : Structured Streaming (exactly-once file-sink bronze,
                    watermarked silver counts, gap sessionizer, MV fold).
-- ``sinks``      : CSV/JSON/parquet/delta partitioned writers, Cassandra stub.
+- ``sinks``      : CSV/JSON exports, Hive-partitioned parquet tables, Cassandra stub.
 - ``pipeline``   : driver-side orchestration (month windows, pagination,
                    granularity fallback).
 

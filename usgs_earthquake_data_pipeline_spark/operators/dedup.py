@@ -233,21 +233,6 @@ def hashed_shingle_sets(
     return out.persist()
 
 
-def minhash_signature(hashed_shingle_col: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature over pre-hashed shingles (``shingle_hashes``):
-    for family ``i``, the min of ``xxhash64(base_hash, i)`` over the
-    set. Pure-expression form — kept as the no-Arrow fallback and for
-    plan-shape docs; ``minhash_signature_udf`` below is the fast path
-    (higher-order lambdas evaluate interpreted, so this form costs
-    ~num_hashes × |shingles| closure evaluations per row)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(hashed_shingle_col, lambda h: F.xxhash64(h, i))
-        ),
-    )
-
-
 def minhash_signature_udf(num_hashes: int = 32):
     """Arrow-batched vectorized MinHash: the ``num_hashes`` family
     minima computed in one numpy broadcast over the pre-hashed shingle

@@ -4,7 +4,8 @@ usgs_tsunami_count_fact_silver.py:31-55,116-124).
 
 Each is a DataFrame function over a bronze events DataFrame; the
 ``build_silver_layer`` orchestrator writes both fact tables
-partitioned exactly like the reference (year / year+month).
+partitioned exactly like the reference (year / year+month), as
+Hive-partitioned parquet like bronze (``sinks.py``).
 
 ``build_silver_layer`` plans one aggregation, not one per fact: bronze
 is scanned once, filtered to ``tsunami == 1`` and grouped by
@@ -25,7 +26,6 @@ from pyspark.sql import functions as F
 
 from ..observability import job_description
 from ..schema import FACT_TSUNAMI_MONTHLY_SCHEMA, FACT_TSUNAMI_YEARLY_SCHEMA
-from ..session import TABLE_FORMAT
 from ..sinks import clustering_sort
 
 
@@ -96,7 +96,7 @@ def _write_fact(
         writer = clustering_sort(fact, partition_cols).write.partitionBy(
             *partition_cols
         )
-    writer.format(TABLE_FORMAT).mode("overwrite").save(path)
+    writer.mode("overwrite").parquet(path)
 
 
 def build_silver_layer(

@@ -21,8 +21,9 @@ reader pages its slices with ``fetch_pages`` and the same ``cut``.
 ``ingest_window_paged`` lands one whole month with one write: an
 append when the month's bronze partition is absent, a partition
 upsert when it exists, so a rerun replaces the month instead of
-adding it again. A month with a week that still fails lands nothing
-and is recorded; a rerun fills it.
+adding it again. A rerun that finds the month empty drops its
+partition, so bronze mirrors the source. A month with a week that
+still fails lands nothing and is recorded; a rerun fills it.
 
 Fixed vs the reference: its ``if ETLIngestion:`` truthiness bug
 (silver unconditionally ran on the function object, :568-575) — here
@@ -45,6 +46,7 @@ from .sources.rest import FetchError, HttpGet, fetch_earthquake_data_limit_offse
 from .operators.silver import build_silver_layer
 from .schema import USGS_EVENTS_SCHEMA
 from .sinks import (
+    drop_partition,
     partition_exists,
     read_partitioned_table,
     save_partitioned_table,
@@ -187,6 +189,9 @@ class IngestStats:
     pages: int = 0
     events: int = 0
     failed_windows: list[tuple[str, str]] = field(default_factory=list)
+    # months whose existing bronze partition was dropped because the
+    # source now serves no row of them
+    emptied_windows: list[tuple[str, str]] = field(default_factory=list)
     # one Observation-API metric dict per landed window (rows,
     # null-rates, event-time span) — collected from the write job
     # itself, never a second scan (observability.py)
@@ -232,6 +237,13 @@ def ingest_window_paged(
     probe. The flattened month is driver-held, so one task writes it
     with no range exchange (``sinks.clustering_sort``). The job carries
     the description ``ingest <start>..<end>``.
+
+    A month that fetches with no failed week but lands no row (no
+    feature served, or none with an ``id``) while its partition exists
+    has lost every event at the source: its partition directory is
+    deleted (``sinks.drop_partition``, file-system calls only) and the
+    window goes into ``stats.emptied_windows``, since a write of zero
+    rows would replace nothing.
     """
     year = int(start_time[:4])
     if (start_time, end_time) not in month_windows(year, year):
@@ -249,13 +261,16 @@ def ingest_window_paged(
         stats.failed_windows += [(s, e) for s, e, _ in failed]
         return 0
     total = sum(len(p["features"]) for p in pages)
+    month = (year, int(start_time[5:7]))
+    landed = partition_exists(spark, bronze_path, month)
+    written = False
     if total:
         with job_description(spark, f"ingest {start_time}..{end_time}"):
             events = events_from_geojson_strings(spark, [json.dumps(p) for p in pages])
             # quality counters ride the landing job — no second scan
             obs = Observation(f"window_{start_time}")
             kwargs = dict(observation=obs, metrics=quality_metrics())
-            if partition_exists(spark, bronze_path, (year, int(start_time[5:7]))):
+            if landed:
                 written = upsert_partitions(events, bronze_path, **kwargs)
             else:
                 written = save_partitioned_table(
@@ -263,6 +278,9 @@ def ingest_window_paged(
                 )
         if written:
             stats.window_metrics.append(obs.get)
+    if landed and not written:
+        drop_partition(spark, bronze_path, month)
+        stats.emptied_windows.append((start_time, end_time))
     stats.pages += len(pages)
     stats.events += total
     return total
@@ -304,16 +322,18 @@ def run_etl(
 ) -> IngestStats:
     """C5: two-phase main — ingest, then silver (which actually runs
     after ingest, unlike the reference's truthiness-bugged guard).
-    Silver runs only once a window has landed: fetched pages whose
-    features are all invalid never create the bronze table. Bronze is
-    read by its declared schema, so the read launches no
-    schema-inference job. A rerun over the same years replaces each
-    month it lands, so bronze and both facts come out the same."""
+    Silver runs only once a window has landed or an emptied month's
+    partition was dropped: fetched pages whose features are all invalid
+    never create the bronze table. Bronze is read by its declared
+    schema, so the read launches no schema-inference job. A rerun over
+    the same years replaces each month it lands and drops each month
+    the source has emptied, so bronze and both facts mirror the
+    source."""
     stats = ingest_range(
         spark, start_year, end_year, bronze_path,
         api_url=api_url, limit=limit, http_get=http_get,
     )
-    if stats.window_metrics:
+    if stats.window_metrics or stats.emptied_windows:
         with job_description(spark, "silver read bronze"):
             events = read_partitioned_table(
                 spark, bronze_path, schema=USGS_EVENTS_SCHEMA

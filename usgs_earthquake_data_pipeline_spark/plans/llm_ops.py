@@ -904,15 +904,19 @@ def dedup_minhash_estimate_checked(spark: SparkSession, sf_dir: str) -> DataFram
     at t=0.3; ``minhash_estimate_ok`` is PER PAIR, pinned TRUE by the
     oracle: |agreement/32 − exact J| <= 0.2 for every true pair.
 
+    The signature is production's own: ``minhash_signature_udf(32)``,
+    the multiply-shift family ``minhash_lsh_pairs`` bands, so the gate
+    certifies the estimator production runs.
+
     The 0.2 bound is CORPUS-MEASURED, not a theorem (round-12 advice —
     the binomial analogy only says σ = sqrt(J(1−J)/32) <= 0.088, i.e.
     0.2 ≈ 2.3σ at the worst J; a per-pair pin at ~2.3σ of a random
     family WOULD be a coin flip eventually). What makes the pin safe
-    here is determinism, not probability: the signature family is
-    counter-seeded xxhash64 — no RNG, no reseeding — so each pair's
+    here is determinism, not probability: the family's constants come
+    from a counter hash — no RNG, no reseeding — so each pair's
     deviation is a FIXED number per corpus, and the measured max is
-    0.080/0.080/0.091 at sf0.001/0.01/0.1 (round-11 probe), a >2x
-    margin under the bound at every SF the driver runs. ACCEPTED RISK:
+    0.045/0.065/0.139 at sf0.001/0.01/0.1 (28/25/256 pairs), under the
+    bound at every SF the driver runs. ACCEPTED RISK:
     a brand-new corpus could legitimately place one pair past 0.2
     without a code regression — if that ever fires, re-measure and
     either widen the bound or reseed, don't trust the red row blindly.
@@ -922,7 +926,7 @@ def dedup_minhash_estimate_checked(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents")
     exact = C.exact_jaccard03(spark, sf_dir)
     sigs = D.hashed_shingle_sets(docs, "doc_id", "text").select(
-        "id", D.minhash_signature(F.col("hs"), 32).alias("sig")
+        "id", D.minhash_signature_udf(32)(F.col("hs")).alias("sig")
     )
     a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))

@@ -21,6 +21,12 @@ implies:
   nanoseconds; ``sources.tables.normalize_timestamp_col`` converts it
   (or the current generation's ``timestamp[us]``/TIMESTAMP_NTZ) to a
   proper session-TZ timestamp.
+
+No table-format extension or extra jars: bronze and silver are
+Hive-partitioned parquet (``sinks.py``), which Spark reads and writes
+natively. The reference's tables are Delta
+(save_to_raw_delta_prod.py:92-147); delta-spark is not a dependency
+here, so no Delta target is offered.
 """
 
 from __future__ import annotations
@@ -29,18 +35,6 @@ import os
 import tempfile
 
 from pyspark.sql import SparkSession
-
-# Storage format for bronze/silver tables. The reference writes Delta
-# (save_to_raw_delta_prod.py:92-147); delta-spark is optional here, so
-# fall back to plain partitioned Parquet (same layout, same pruning).
-try:  # pragma: no cover - environment probe
-    import delta  # noqa: F401
-
-    DELTA_AVAILABLE = True
-except Exception:  # pragma: no cover
-    DELTA_AVAILABLE = False
-
-TABLE_FORMAT = "delta" if DELTA_AVAILABLE else "parquet"
 
 # Conf that is safe (and required) to set on an already-running session.
 # Applied both at build time and by configure_runtime() so the driver's
@@ -171,23 +165,6 @@ def get_spark(
         "spark.sql.streaming.checkpointLocation",
         os.path.join(scratch, "checkpoints"),
     )
-    if DELTA_AVAILABLE:
-        # Builder-time only (extensions cannot be injected post-startup):
-        # when delta-spark is importable, TABLE_FORMAT flips to "delta"
-        # and the session must carry the Delta SQL extension + catalog
-        # for the writers in sinks.py to resolve the format.
-        # configure_spark_with_delta_pip additionally wires the Delta
-        # jars onto the classpath (the pip wheel ships Python only).
-        from delta import configure_spark_with_delta_pip
-
-        builder = builder.config(
-            "spark.sql.extensions",
-            "io.delta.sql.DeltaSparkSessionExtension",
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-        builder = configure_spark_with_delta_pip(builder)
     for key, value in _RUNTIME_CONF.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

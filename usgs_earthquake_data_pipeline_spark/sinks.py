@@ -3,6 +3,17 @@
 ``operators/silver.build_silver_layer``), layout clustering sort
 (O1/O2), and the Cassandra-shaped serving sink (K7-K9).
 
+Every table these writers land, and ``read_partitioned_table`` reads,
+is Hive-partitioned parquet: one format, no format parameter. The
+reference writes Delta (save_to_raw_delta_prod.py:92-147); the layout
+and partition pruning are the same, and Delta's log features have
+parquet stand-ins here (the versioned tables below). An additive
+schema change needs no write option (K6): each parquet file carries
+its own schema, a read by the declared schema (or with the
+``mergeSchema`` read option) sees the added column, and
+``save_partitioned_table(enforce_compatible=True)`` refuses the
+breaking changes.
+
 Reference semantics preserved:
 
 - timestamped output names (P11, usgs-earthquake-data-ingest.py:179,191)
@@ -61,8 +72,6 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from .session import TABLE_FORMAT
 
 VALID_MODES = ("append", "overwrite")
 
@@ -130,15 +139,12 @@ def save_partitioned_table(
     mode: str = "append",
     partition_cols: list[str] | None = None,
     cluster_cols: list[str] | None = None,
-    table_format: str | None = None,
-    merge_schema: bool = False,
     observation=None,
     metrics=None,
     enforce_compatible: bool = False,
 ) -> bool:
-    """K3/K4/K6: partitioned table write (Delta when delta-spark is
-    importable, else plain partitioned parquet — same layout, same
-    partition pruning).
+    """K3/K4/K6: partitioned table write, Hive-partitioned parquet
+    (module docstring).
 
     Returns True when data was written, False on empty input, which
     never creates or changes a table (the reference's F3 ingest
@@ -150,11 +156,7 @@ def save_partitioned_table(
     its own rows (``_save_counted``) instead of probing first. A static
     ``mode="overwrite"`` and an unpartitioned write probe with
     ``isEmpty`` before writing, because for them an empty write is not
-    a no-op (module docstring). With Delta, an empty partitioned append
-    would commit a version that adds no file — the rows are unchanged
-    but the history gains a version, and to a new path the
-    ``_delta_log`` directory stays; this is unverified here, as
-    delta-spark is not installed.
+    a no-op (module docstring).
 
     ``observation`` + ``metrics`` (observability.py): the aggregate
     columns are attached to the WRITE job itself, so data-quality
@@ -188,7 +190,7 @@ def save_partitioned_table(
         spark = df.sparkSession
         jvm, fs = _fs_for(spark, path)
         if fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
-            existing = read_partitioned_table(spark, path, table_format).schema
+            existing = read_partitioned_table(spark, path).schema
 
             # parquet stores every column optional, and in-memory
             # literal DataFrames claim non-nullable fields — so on the
@@ -228,14 +230,10 @@ def save_partitioned_table(
         out = out.observe(observation, *metrics)
 
     def write(frame: DataFrame) -> None:
-        writer = frame.write.format(table_format or TABLE_FORMAT).mode(mode)
+        writer = frame.write.mode(mode)
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
-        if merge_schema:
-            # K6: schema evolution (delta's mergeSchema; parquet accepts and
-            # resolves on read via mergeSchema read option)
-            writer = writer.option("mergeSchema", "true")
-        writer.save(path)
+        writer.parquet(path)
 
     if probe:
         write(out)
@@ -275,13 +273,32 @@ def _append_target(spark, path: str):
     return fs, hpath, existed
 
 
-def partition_exists(spark, path: str, values: Sequence) -> bool:
-    """Whether table ``path`` holds the Hive partition directory of
-    ``values``, one per ``RAW_PARTITION_COLS`` column (``year=2024/
-    month=3``). File-system calls only, no Spark job."""
+def _partition_dir(spark, path: str, values: Sequence):
+    """``(fs, hadoop_path)`` of table ``path``'s Hive partition
+    directory for ``values``, one per ``RAW_PARTITION_COLS`` column
+    (``year=2024/month=3``)."""
     sub = "/".join(f"{c}={v}" for c, v in zip(RAW_PARTITION_COLS, values))
     jvm, fs = _fs_for(spark, path)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{sub}"))
+    return fs, jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{sub}")
+
+
+def partition_exists(spark, path: str, values: Sequence) -> bool:
+    """Whether table ``path`` holds the partition directory of
+    ``values`` (``_partition_dir``). File-system calls only, no Spark
+    job."""
+    fs, hpath = _partition_dir(spark, path, values)
+    return fs.exists(hpath)
+
+
+def drop_partition(spark, path: str, values: Sequence) -> None:
+    """Delete table ``path``'s partition directory of ``values``
+    (``_partition_dir``) with all its files, so the table no longer
+    holds those rows. File-system calls only, no Spark job. Raises
+    ValueError on a streaming file sink's root, whose log would still
+    list the deleted files (module docstring)."""
+    _append_target(spark, path)
+    fs, hpath = _partition_dir(spark, path, values)
+    fs.delete(hpath, True)
 
 
 def _drop_marker_only_dir(fs, hpath) -> None:
@@ -308,21 +325,17 @@ def _drop_marker_only_dir(fs, hpath) -> None:
 def read_partitioned_table(
     spark,
     path: str,
-    table_format: str | None = None,
     schema: StructType | None = None,
 ) -> DataFrame:
     """Read back a table written by save_partitioned_table.
 
-    ``schema`` is the table's declared schema. A
-    parquet read given it skips footer inference, which is a Spark
-    job; the frame's columns, their order and types are those of the
-    inferring read. A Delta table takes its schema from its log, which
-    rejects a user schema, so there ``schema`` is not applied."""
-    fmt = table_format or TABLE_FORMAT
-    reader = spark.read.format(fmt)
-    if schema is not None and fmt != "delta":
+    ``schema`` is the table's declared schema. A read given it skips
+    parquet footer inference, which is a Spark job; the frame's
+    columns, their order and types are those of the inferring read."""
+    reader = spark.read
+    if schema is not None:
         reader = reader.schema(schema)
-    return reader.load(path)
+    return reader.parquet(path)
 
 
 def upsert_partitions(
@@ -330,7 +343,6 @@ def upsert_partitions(
     path: str,
     partition_cols: list[str] | None = None,
     cluster_cols: list[str] | None = None,
-    table_format: str | None = None,
     observation=None,
     metrics=None,
 ) -> bool:
@@ -340,9 +352,9 @@ def upsert_partitions(
     partition already exists lands through it
     (``pipeline.ingest_window_paged``), so re-running the month's
     ingest replaces that month instead of duplicating it
-    (the correct form of the reference's append-forever raw layer;
-    with delta-spark this would be MERGE, the parquet layout gets the
-    same semantics from the ``partitionOverwriteMode=dynamic`` writer
+    (the correct form of the reference's append-forever raw layer,
+    whose Delta tables would MERGE; the parquet layout gets the same
+    semantics from the ``partitionOverwriteMode=dynamic`` writer
     option, which leaves the session's own setting alone).
 
     At scale: the write touches exactly the affected partitions; the
@@ -364,11 +376,10 @@ def upsert_partitions(
         # a writer option, not the session conf: flipping the shared conf
         # would make any overwrite another thread runs meanwhile dynamic
         (
-            frame.write.format(table_format or TABLE_FORMAT)
-            .mode("overwrite")
+            frame.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_cols)
-            .save(path)
+            .parquet(path)
         )
 
     return _save_counted(out, path, write)
@@ -379,7 +390,6 @@ def compact_partitioned_table(
     path: str,
     partition_cols: list[str] | None = None,
     target_files_per_partition: int = 1,
-    table_format: str | None = None,
 ) -> None:
     """Small-file compaction: rewrite the table so each Hive partition
     holds ~``target_files_per_partition`` files (the maintenance job an
@@ -401,7 +411,7 @@ def compact_partitioned_table(
     pointer instead; the write path itself is identical.
     """
     partition_cols = partition_cols if partition_cols is not None else RAW_PARTITION_COLS
-    df = read_partitioned_table(spark, path, table_format)
+    df = read_partitioned_table(spark, path)
     keys = [F.col(c) for c in partition_cols]
     if target_files_per_partition > 1:
         salt = F.pmod(
@@ -414,12 +424,7 @@ def compact_partitioned_table(
     base = path.rstrip("/")
     tmp_path = base + ".__compact_tmp__"
     old_path = base + ".__compact_old__"
-    (
-        compacted.write.format(table_format or TABLE_FORMAT)
-        .mode("overwrite")
-        .partitionBy(*partition_cols)
-        .save(tmp_path)
-    )
+    compacted.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp_path)
     hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     src, tmp, old = hadoop_path(base), hadoop_path(tmp_path), hadoop_path(old_path)
@@ -582,11 +587,10 @@ def merge_rows(
     updates: DataFrame,
     key_cols: list[str],
     partition_cols: list[str] | None = None,
-    table_format: str | None = None,
 ) -> bool:
     """Row-level MERGE (upsert-by-key) for a partitioned table — the
     reference's Delta MERGE semantics (save_to_raw_delta_prod.py's
-    storage core) on the plain-parquet fallback: rows in ``updates``
+    storage core) on the parquet table: rows in ``updates``
     replace existing rows with the same key, new keys append, all
     other rows are untouched.
 
@@ -618,7 +622,7 @@ def merge_rows(
         raise ValueError(f"merge_rows: duplicate keys in updates on {key_cols}")
     if not touched:  # no partition touched: the updates are empty
         return False
-    current = read_partitioned_table(spark, path, table_format)
+    current = read_partitioned_table(spark, path)
     pred = F.lit(False)
     for row in touched:
         clause = F.lit(True)
@@ -630,9 +634,7 @@ def merge_rows(
     merged = merge_upsert(
         current.filter(pred), updates, key_cols, duplicate_policy="trusted"
     )
-    return upsert_partitions(
-        merged, path, partition_cols=partition_cols, table_format=table_format
-    )
+    return upsert_partitions(merged, path, partition_cols=partition_cols)
 
 
 def vacuum_table(spark, path: str) -> list[str]:
@@ -642,7 +644,7 @@ def vacuum_table(spark, path: str) -> list[str]:
     and swaps via ``<path>.__compact_old__``; a crash between renames
     can strand either one (the table itself is never lost — the swap
     rolls back). This is the corresponding retention sweep, the
-    parquet-fallback analogue of Delta's VACUUM: call it before
+    parquet analogue of Delta's VACUUM: call it before
     (re)compacting. Returns the paths it deleted."""
     hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -685,12 +687,12 @@ def partition_file_stats(spark, path: str):
 
 
 # ---------------------------------------------------------------------------
-# Poor-man's time travel for the parquet fallback.
+# Poor-man's time travel for parquet.
 #
 # The reference's bronze/silver are Delta tables
 # (save_to_raw_delta_prod.py:92-147) whose log gives versioned reads;
-# delta-spark is not installable in this environment, so the parquet
-# fallback gets the same CONTRACT from directory versions + an
+# delta-spark is not a dependency here, so parquet tables get the
+# same CONTRACT from directory versions + an
 # atomically-renamed manifest: every write is a new immutable
 # ``version=N`` directory, readers resolve the manifest (or pin a
 # version), and a torn write can never be observed because the
@@ -865,7 +867,7 @@ def save_versioned_table(
     ``stats_cols``: columns to record per-file min/max for in a
     ``_stats_v{N}.json`` sidecar (written BEFORE the commit rename, so
     stats are part of the commit) — the Delta data-skipping contract
-    on the parquet fallback. One extra scan of the just-written
+    on parquet. One extra scan of the just-written
     version; the collected table is one row per file, driver-bounded.
 
     ``bloom_cols``: columns to additionally record a per-file Bloom
@@ -1123,8 +1125,8 @@ def vacuum_versions(
 
 
 # ---------------------------------------------------------------------------
-# File-level data skipping (Delta's per-file min/max stats on the
-# parquet fallback) + MERGE on the versioned table.
+# File-level data skipping (Delta's per-file min/max stats on
+# parquet) + MERGE on the versioned table.
 # ---------------------------------------------------------------------------
 
 

@@ -52,7 +52,12 @@ def fetch_earthquake_data_limit_offset(
     """S2: time-range fetch with limit/offset pagination. Raises
     FetchError so the caller can classify (C4) and fall back (C2) —
     the prod reference distinguishes failures rather than swallowing
-    them (usgs-earthquake-data-ingestion-prod.py:103-123, 439-445)."""
+    them (usgs-earthquake-data-ingestion-prod.py:103-123, 439-445).
+
+    HTTP 204 is FDSN's answer to a query that matches nothing (its
+    ``nodata`` parameter defaults to 204), so it returns an empty
+    FeatureCollection, which ends the pager like any empty page. Every
+    other status but 200 raises."""
     params = {
         "format": "geojson",
         "starttime": start_time,
@@ -62,6 +67,8 @@ def fetch_earthquake_data_limit_offset(
     }
     url = f"{api_url}?{urllib.parse.urlencode(params)}"
     status, body = (http_get or _default_http_get)(url)
+    if status == 204:  # FDSN's "no data": the query matched no event
+        return {"type": "FeatureCollection", "features": []}
     if status != 200:
         raise FetchError(status, url)
     return json.loads(body)
